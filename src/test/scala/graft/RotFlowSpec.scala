@@ -241,4 +241,101 @@ class RotFlowSpec extends SparkTestBase {
     }
     assert(res.detail.count() == 2 * nSites)
   }
+
+  // Edge fixtures: keys and products the happy path never sees. The
+  // outputs below are pinned literally so a rewrite of the gates or the
+  // melt cannot drift under three-valued logic unnoticed.
+  private val T0 = "2024-01-01 00:00:00"
+  private def edgeDesign = {
+    val grid = (1 to nSites).map(i => (i, ((i - 1) / 4) * 100.0, ((i - 1) % 4) * 50.0))
+    def rows(product: String, sites: Seq[(Int, Double, Double)]) =
+      sites.map { case (i, dx, dy) => (product, Option(i), dx, dy) }
+    val nullSite = (p: String) => Seq((p, Option.empty[Int], 0.0, 0.0))
+    designValues.unionByName((
+      rows("F", grid) ++ nullSite("F") ++      // complete grid + a null site
+      rows("H", grid.init) ++ nullSite("H") ++ // 1..7 + a null site
+      rows(null, grid)                          // a grid under a null product
+    ).toDF("product", "site_idx", "dx", "dy"))
+  }
+  private def edgeRaw = rawFrame(Seq(
+    glassRow("ok1", "A", 0.5, -0.3, 120.0),
+    glassRow("np", null, 0.1, 0.1, 5.0),                 // null product
+    glassRow("npna", null, 0.1, 0.1, 5.0, na = true),    // null product, missing cell
+    glassRow("f1", "F", 0.2, 0.2, 20.0),
+    glassRow("h1", "H", 0.2, 0.2, 20.0),
+    glassRow("dup", "A", -1.2, 0.8, -60.0),
+    glassRow("dup", "A", -1.2, 0.8, -60.0),              // duplicated measurement row
+    glassRow(null, "A", 0.2, 0.1, 30.0),                 // null glassid
+    glassRow(null, "B", 0.2, 0.1, 30.0, na = true),      // null glassid, missing cell
+    glassRow("nt", "A", 0.3, 0.2, 40.0).copy(_3 = null))) // null tstamp
+
+  private def errorRows(df: org.apache.spark.sql.DataFrame) =
+    df.select("glassid", "product", "flag", "description").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getString(3))).toSet
+  private def detailShape(df: org.apache.spark.sql.DataFrame) =
+    df.groupBy("glassid", "tstamp", "rot_id").agg(count(lit(1)), countDistinct("site_idx")).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)) -> (r.getLong(3), r.getLong(4))).toMap
+
+  test("edge fixtures: ROT header, detail and error rows are pinned") {
+    val res = RotFlow.run(spark, edgeRaw, edgeDesign)
+    val header = res.header.collect().map(r => (r.getString(r.fieldIndex("glassid")),
+      r.getString(r.fieldIndex("product")), r.getString(r.fieldIndex("tstamp")),
+      r.getInt(r.fieldIndex("n_sites")), r.getLong(r.fieldIndex("rot_id"))) ->
+      (r.getDouble(r.fieldIndex("shift_x")), r.getDouble(r.fieldIndex("shift_y")),
+       r.getDouble(r.fieldIndex("theta_urad")))).toMap
+    // null glassid / null tstamp measurements reach no sink: their melt
+    // rows never pair on the measurement key
+    assert(header.keySet == Set(
+      ("ok1", "A", T0, 8, -2233093054476105771L),
+      ("dup", "A", T0, 32, -7192641336470413551L)))
+    val planted = Map("ok1" -> (0.5, -0.3, 120.0), "dup" -> (-1.2, 0.8, -60.0))
+    header.foreach { case ((g, _, _, _, _), (sx, sy, th)) =>
+      sx shouldBe planted(g)._1 +- 1e-6
+      sy shouldBe planted(g)._2 +- 1e-6
+      th shouldBe planted(g)._3 +- 0.05
+    }
+    assert(detailShape(res.detail) == Map(
+      ("ok1", T0, -2233093054476105771L) -> (8L, 8L),
+      ("dup", T0, -7192641336470413551L) -> (32L, 8L)))
+    val maxResid = res.detail
+      .agg(max(greatest(abs(col("x_rs")), abs(col("y_rs"))))).as[Double].head()
+    assert(maxResid < 1e-4, s"residual after correction: $maxResid")
+    // a null product never matches a design grid, not even the one under
+    // a null design product; a null site_idx spoils a grid (F, H)
+    assert(errorRows(res.errors) == Set(
+      (null, "B", -1, "missing measurement"),
+      ("npna", null, -1, "missing measurement"),
+      ("np", null, -2, "no design values"),
+      ("f1", "F", -3, "bad design grid"),
+      ("h1", "H", -3, "bad design grid")))
+  }
+
+  test("edge fixtures: AVM header, detail and error rows are pinned") {
+    val res = graft.flows.AvmFlow.run(spark, edgeRaw)
+    val header = res.header.collect().map(r => (r.getString(r.fieldIndex("glassid")),
+      r.getString(r.fieldIndex("product")), r.getString(r.fieldIndex("tstamp")),
+      r.getLong(r.fieldIndex("n_sites")), r.getLong(r.fieldIndex("rot_id"))) ->
+      (r.getDouble(r.fieldIndex("vm_x")), r.getDouble(r.fieldIndex("vm_y")))).toMap
+    // any null key (glassid, product or tstamp) drops the measurement
+    assert(header.keySet == Set(
+      ("ok1", "A", T0, 8L, -2233093054476105771L),
+      ("dup", "A", T0, 32L, -7192641336470413551L),
+      ("f1", "F", T0, 8L, 1749641923519290815L),
+      ("h1", "H", T0, 8L, -8344183567670776549L)))
+    val vm = header.map { case (k, v) => k._1 -> v }
+    val t = (th: Double) => math.tan(th * 1e-6)
+    Seq("ok1" -> (0.5, -0.3, 120.0), "dup" -> (-1.2, 0.8, -60.0), "f1" -> (0.2, 0.2, 20.0),
+        "h1" -> (0.2, 0.2, 20.0)).foreach { case (g, (sx, sy, th)) =>
+      vm(g)._1 shouldBe (-sx + 75.0 * t(th)) +- 1e-9
+      vm(g)._2 shouldBe (-sy - 50.0 * t(th)) +- 1e-9
+    }
+    assert(detailShape(res.detail) == Map(
+      ("ok1", T0, -2233093054476105771L) -> (8L, 8L),
+      ("dup", T0, -7192641336470413551L) -> (32L, 8L),
+      ("f1", T0, 1749641923519290815L) -> (8L, 8L),
+      ("h1", T0, -8344183567670776549L) -> (8L, 8L)))
+    assert(errorRows(res.errors) == Set(
+      (null, "B", -1, "missing measurement"),
+      ("npna", null, -1, "missing measurement")))
+  }
 }
