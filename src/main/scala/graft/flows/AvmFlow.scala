@@ -1,9 +1,8 @@
 package graft.flows
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.incremental.Sinks
-import graft.sources.Sources
 
 /** The AVM (virtual-metrology) analytics body — the chunk analytic of
   * the reference's SECOND windowed pipeline instance (`ETL.avm`,
@@ -21,43 +20,32 @@ import graft.sources.Sources
   * runner trails the ROT watermark (not replication) in the shared
   * lastendtime table.
   *
-  * Scale: identical shape to RotFlow — regex column discovery (F5), one
-  * missing-value split (P12), one melt, one groupBy on the glass
+  * Scale: the same shape as RotFlow — regex column discovery (F5), one
+  * missing-value split (P12), a one-pass melt, one groupBy on the glass
   * identity (≤ sites-per-glass rows per group, uniform), a same-key
   * re-join for residuals. Nothing corpus-wide beyond the raw scan.
   */
 object AvmFlow {
 
-  def run(spark: SparkSession, raw: DataFrame,
+  def run(raw: DataFrame,
           xColRegex: String = "^plfn_.*_x$",
           yColRegex: String = "^plfn_.*_y$"): RotFlow.RotResult = {
-    val xCols = Sources.columnsMatching(raw, xColRegex)
-    val yCols = Sources.columnsMatching(raw, yColRegex)
-    require(xCols.nonEmpty && xCols.size == yCols.size,
-      s"coordinate column sets mismatched: ${xCols.size} x vs ${yCols.size} y")
-    val keyCols = Seq("glassid", "product", "tstamp")
-    val clean = raw.select((keyCols.map(col) ++
-      (xCols ++ yCols).map(c => expr(s"try_cast(`$c` AS DOUBLE)").as(c))): _*)
+    val (clean, xCols, yCols) = RotFlow.clean(raw, xColRegex, yColRegex)
 
     // missing measurements → flag −1 (P12/K8), same dead letter as ROT
     val (present, missingErr) = Sinks.splitMissing(clean, xCols ++ yCols)
 
-    // melt to long sites; the full (glassid, product, tstamp) identity
-    // keys each measurement, exactly as in RotFlow step 5
-    def melt(cols: Seq[String], name: String): DataFrame =
-      present.select(col("glassid"), col("product"), col("tstamp"),
-        posexplode(array(cols.map(col): _*)).as(Seq("site0", name)))
-        .withColumn("site_idx", col("site0") + 1).drop("site0")
-    val sites = melt(xCols, "x")
-      .join(melt(yCols, "y"), Seq("glassid", "product", "tstamp", "site_idx"))
+    // melt to long sites, keyed by the full (glassid, product, tstamp)
+    // identity exactly as in RotFlow
+    val sites = RotFlow.melt(present, xCols, yCols)
 
     // zeroth-order VM model per measurement: mean site offset per axis
-    val model = sites.groupBy(keyCols.map(col): _*)
+    val model = sites.groupBy(RotFlow.KeyCols.map(col): _*)
       .agg(avg(col("x")).as("vm_x"), avg(col("y")).as("vm_y"),
            count(lit(1)).as("n_sites"))
 
     // residuals of every site against its glass's VM estimate
-    val detail = sites.join(model, keyCols)
+    val detail = sites.join(model, RotFlow.KeyCols)
       .select(col("glassid"), col("product"), col("tstamp"), col("site_idx"),
         (col("x") - col("vm_x")).as("x_res"),
         (col("y") - col("vm_y")).as("y_res"))

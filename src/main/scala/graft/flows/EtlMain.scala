@@ -78,6 +78,5 @@ object EtlMain {
   def avm(spark: SparkSession, raw: DataFrame,
           wm: Watermarks, toolid: String, avmApp: String, rotApp: String,
           out: RotRunner.RotOutputs): Int =
-    RotRunner.runWindowed(spark, raw, wm, toolid, avmApp, rotApp, out,
-      slice => AvmFlow.run(spark, slice))
+    RotRunner.runWindowed(raw, wm, toolid, avmApp, rotApp, out, AvmFlow.run(_))
 }

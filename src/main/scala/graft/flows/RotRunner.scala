@@ -14,7 +14,8 @@ import graft.incremental.{Intervals, Watermarks}
   *
   * The reference re-reads each chunk from the DB inside Rscript
   * (SURVEY §3.2 "double-read"); here the slice is the same DataFrame fed
-  * straight to RotFlow — one scan.
+  * straight to RotFlow, which scans it once per chunk; the design gates
+  * are computed once per run, on its first chunk.
   */
 object RotRunner {
 
@@ -30,9 +31,11 @@ object RotRunner {
   def run(spark: SparkSession, raw: DataFrame, designValues: DataFrame,
           wm: Watermarks, toolid: String, rotApp: String, upstream: String,
           out: RotOutputs,
-          stepSeconds: Long = 86400L, maxChunks: Int = 30): Int =
-    runWindowed(spark, raw, wm, toolid, rotApp, upstream, out,
-      slice => RotFlow.run(spark, slice, designValues), stepSeconds, maxChunks)
+          stepSeconds: Long = 86400L, maxChunks: Int = 30): Int = {
+    lazy val design = RotFlow.prepare(spark, raw, designValues)
+    runWindowed(raw, wm, toolid, rotApp, upstream, out,
+      slice => RotFlow.run(slice, design), stepSeconds, maxChunks)
+  }
 
   /** The generic windowed-analytics engine the reference instantiates
     * twice — ROT trailing replication (nikon_ETL.py:425-499) and AVM
@@ -44,12 +47,12 @@ object RotRunner {
     * independently, which is what lets both pipelines run concurrently
     * against one control table.
     */
-  def runWindowed(spark: SparkSession, raw: DataFrame,
+  def runWindowed(raw: DataFrame,
                   wm: Watermarks, toolid: String, apname: String, upstream: String,
                   out: RotOutputs, flow: DataFrame => RotFlow.RotResult,
                   stepSeconds: Long = 86400L, maxChunks: Int = 30): Int = {
-    val start = wm.require(apname, toolid).lastEndTime
-    val end = wm.require(upstream, toolid).lastEndTime // only analyze upstream-complete data
+    // one read serves both ends; end: only analyze upstream-complete data
+    val Seq(start, end) = wm.requireAll(apname -> toolid, upstream -> toolid).map(_.lastEndTime)
     if (!start.before(end)) return 0
     val chunks = Intervals.chunks(start, end, stepSeconds, maxChunks)
     chunks.foreach { case (s, e) =>

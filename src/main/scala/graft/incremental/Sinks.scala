@@ -1,7 +1,6 @@
 package graft.incremental
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Structured result sinks of the analytics stage. */
@@ -41,25 +40,23 @@ object Sinks {
   def deadLetter(rows: DataFrame, flag: Int, description: String): DataFrame =
     rows.withColumn("flag", lit(flag)).withColumn("description", lit(description))
 
-  def appendErrors(errors: DataFrame, path: String): Unit =
-    errors.write.mode(SaveMode.Append).parquet(path)
-
   /** P12 — missing-value split (reference R/tlcd_nikonrot.R:168-196 +
     * R/basic_fun.R:76-80): partition a frame into (clean, flagged-missing)
     * on NULL or NaN in the measurement columns — NaN survives a double
     * cast and would otherwise slip past the gate and poison the fit; the
     * flagged half routes to K8. */
-  def splitMissing(df: DataFrame, measureCols: Seq[String]): (DataFrame, DataFrame) = {
-    // A column is missing if NULL, non-castable to double (reference
-    // measurements arrive as strings — "N/A" must flag, not vanish), or
-    // NaN. Each disjunct below is non-null whenever the previous ones are
-    // false, so the predicate is total — a nullable predicate would drop
-    // rows from BOTH halves under three-valued logic.
-    val anyMissing = measureCols
-      .map(c => col(c).isNull ||
-        expr(s"try_cast(`$c` AS DOUBLE)").isNull || // ANSI-safe: plain cast throws on "N/A"
-        isnan(expr(s"try_cast(`$c` AS DOUBLE)")))
-      .reduce(_ || _)
-    (df.filter(!anyMissing), deadLetter(df.filter(anyMissing), FlagMissing, "missing measurement"))
-  }
+  def splitMissing(df: DataFrame, measureCols: Seq[String]): (DataFrame, DataFrame) =
+    (df.filter(!missing(measureCols)),
+     deadLetter(df.filter(missing(measureCols)), FlagMissing, "missing measurement"))
+
+  /** The P12 predicate: a column is missing if NULL, non-castable to
+    * double (reference measurements arrive as strings — "N/A" must flag,
+    * not vanish), or NaN. Each disjunct is non-null whenever the previous
+    * ones are false, so the predicate is total — a nullable predicate
+    * would drop rows from BOTH halves under three-valued logic. */
+  def missing(measureCols: Seq[String]): Column = measureCols
+    .map(c => col(c).isNull ||
+      expr(s"try_cast(`$c` AS DOUBLE)").isNull || // ANSI-safe: plain cast throws on "N/A"
+      isnan(expr(s"try_cast(`$c` AS DOUBLE)")))
+    .reduce(_ || _)
 }

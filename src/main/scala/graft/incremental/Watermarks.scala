@@ -1,7 +1,8 @@
 package graft.incremental
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 
 /** The watermark control table (K6/P14, reference `lastendtime`,
   * dbs/nikon.py:19-37,169-186): one row per (apname, toolid) holding the
@@ -29,18 +30,13 @@ class Watermarks(spark: SparkSession, path: String) {
   def all(): Seq[Watermark] =
     if (!SliceStore.exists(spark, path)) Seq.empty
     else {
-      // Schema-tolerant read: the watermark table is the DURABLE control
-      // table, so tables persisted before a column existed must keep
-      // decoding (Dataset encoders require every field's column; case-
-      // class defaults do NOT apply at decode time). Absent columns get
-      // their documented defaults — the upgrade story for K6 metadata.
-      var df = spark.read.parquet(path)
-      if (!df.columns.contains("virtualRecipe"))
-        df = df.withColumn("virtualRecipe",
-          org.apache.spark.sql.functions.lit(null).cast("string"))
-      if (!df.columns.contains("enabled"))
-        df = df.withColumn("enabled", org.apache.spark.sql.functions.lit(true))
-      df.as[Watermark].collect().toSeq
+      // Schema-tolerant read of the DURABLE control table: with the case
+      // class's schema (no inference job), a table persisted before a
+      // column existed reads it as nulls, which take the documented
+      // defaults (case-class defaults do NOT apply at decode time).
+      spark.read.schema(Encoders.product[Watermark].schema).parquet(path)
+        .withColumn("enabled", coalesce(col("enabled"), lit(true)))
+        .as[Watermark].collect().toSeq
     }
 
   /** P14 check_flow: the watermark row must already exist AND be enabled
@@ -49,9 +45,14 @@ class Watermarks(spark: SparkSession, path: String) {
   def get(apname: String, toolid: String): Option[Watermark] =
     all().find(w => w.apname == apname && w.toolid == toolid && w.enabled)
 
-  def require(apname: String, toolid: String): Watermark =
-    get(apname, toolid).getOrElse(
-      throw new IllegalStateException(s"no watermark row for ($apname, $toolid) — check_flow failed"))
+  def require(apname: String, toolid: String): Watermark = requireAll(apname -> toolid).head
+
+  /** [[require]] for several (apname, toolid) rows over one read. */
+  def requireAll(keys: (String, String)*): Seq[Watermark] = {
+    val rows = all().filter(_.enabled)
+    keys.map { case (a, t) => rows.find(w => w.apname == a && w.toolid == t).getOrElse(
+      throw new IllegalStateException(s"no watermark row for ($a, $t) — check_flow failed")) }
+  }
 
   /** K6 upsert: UPDATE last_end_time + update_time for the key, keeping
     * every other row (reference dbs/nikon.py:169-186 + now()). The write
@@ -67,10 +68,9 @@ class Watermarks(spark: SparkSession, path: String) {
       .map(_.copy(lastEndTime = lastEndTime, updateTime = updateTime))
       .getOrElse(Watermark(apname, toolid, lastEndTime, updateTime))
     val rows = existing.filterNot(w => w.apname == apname && w.toolid == toolid) :+ updated
-    SliceStore.replaceTable(spark, path, rows.toDS().repartition(1).toDF())
+    SliceStore.replaceTable(spark, path, rows.toDS().coalesce(1).toDF())
   }
 
-  def init(rows: Seq[Watermark]): Unit = {
-    rows.toDS().repartition(1).write.mode(SaveMode.Overwrite).parquet(path)
-  }
+  def init(rows: Seq[Watermark]): Unit =
+    rows.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
 }

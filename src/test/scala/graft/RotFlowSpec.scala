@@ -283,11 +283,11 @@ class RotFlowSpec extends SparkTestBase {
       r.getInt(r.fieldIndex("n_sites")), r.getLong(r.fieldIndex("rot_id"))) ->
       (r.getDouble(r.fieldIndex("shift_x")), r.getDouble(r.fieldIndex("shift_y")),
        r.getDouble(r.fieldIndex("theta_urad")))).toMap
-    // null glassid / null tstamp measurements reach no sink: their melt
-    // rows never pair on the measurement key
+    // null glassid / null tstamp measurements reach no sink; the two
+    // copies of "dup" fit as one measurement, each site once per copy
     assert(header.keySet == Set(
       ("ok1", "A", T0, 8, -2233093054476105771L),
-      ("dup", "A", T0, 32, -7192641336470413551L)))
+      ("dup", "A", T0, 16, -7192641336470413551L)))
     val planted = Map("ok1" -> (0.5, -0.3, 120.0), "dup" -> (-1.2, 0.8, -60.0))
     header.foreach { case ((g, _, _, _, _), (sx, sy, th)) =>
       sx shouldBe planted(g)._1 +- 1e-6
@@ -296,7 +296,7 @@ class RotFlowSpec extends SparkTestBase {
     }
     assert(detailShape(res.detail) == Map(
       ("ok1", T0, -2233093054476105771L) -> (8L, 8L),
-      ("dup", T0, -7192641336470413551L) -> (32L, 8L)))
+      ("dup", T0, -7192641336470413551L) -> (16L, 8L)))
     val maxResid = res.detail
       .agg(max(greatest(abs(col("x_rs")), abs(col("y_rs"))))).as[Double].head()
     assert(maxResid < 1e-4, s"residual after correction: $maxResid")
@@ -311,15 +311,16 @@ class RotFlowSpec extends SparkTestBase {
   }
 
   test("edge fixtures: AVM header, detail and error rows are pinned") {
-    val res = graft.flows.AvmFlow.run(spark, edgeRaw)
+    val res = graft.flows.AvmFlow.run(edgeRaw)
     val header = res.header.collect().map(r => (r.getString(r.fieldIndex("glassid")),
       r.getString(r.fieldIndex("product")), r.getString(r.fieldIndex("tstamp")),
       r.getLong(r.fieldIndex("n_sites")), r.getLong(r.fieldIndex("rot_id"))) ->
       (r.getDouble(r.fieldIndex("vm_x")), r.getDouble(r.fieldIndex("vm_y")))).toMap
-    // any null key (glassid, product or tstamp) drops the measurement
+    // any null key (glassid, product or tstamp) drops the measurement;
+    // the two copies of "dup" count each site once per copy
     assert(header.keySet == Set(
       ("ok1", "A", T0, 8L, -2233093054476105771L),
-      ("dup", "A", T0, 32L, -7192641336470413551L),
+      ("dup", "A", T0, 16L, -7192641336470413551L),
       ("f1", "F", T0, 8L, 1749641923519290815L),
       ("h1", "H", T0, 8L, -8344183567670776549L)))
     val vm = header.map { case (k, v) => k._1 -> v }
@@ -331,11 +332,53 @@ class RotFlowSpec extends SparkTestBase {
     }
     assert(detailShape(res.detail) == Map(
       ("ok1", T0, -2233093054476105771L) -> (8L, 8L),
-      ("dup", T0, -7192641336470413551L) -> (32L, 8L),
+      ("dup", T0, -7192641336470413551L) -> (16L, 8L),
       ("f1", T0, 1749641923519290815L) -> (8L, 8L),
       ("h1", T0, -8344183567670776549L) -> (8L, 8L)))
     assert(errorRows(res.errors) == Set(
       (null, "B", -1, "missing measurement"),
       ("npna", null, -1, "missing measurement")))
+  }
+
+  test("plan fence: one slice scan per chunk, no design-table rescan, one-pass melts") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.PosExplode
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.types.{ArrayType, StructType}
+    val dir = java.nio.file.Files.createTempDirectory("graft_rot_plan").toString
+    designValues.write.parquet(s"$dir/dv")
+    rawFrame(Seq(glassRow("g1", "A", 0.5, -0.3, 120.0))).write.parquet(s"$dir/raw")
+    val raw = spark.read.parquet(s"$dir/raw")
+    def scanned(p: LogicalPlan): Seq[String] = p.collect { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.getName) }.flatten
+    def outputs(r: RotFlow.RotResult) = Seq(r.header, r.detail, r.errors)
+      .map(_.queryExecution.optimizedPlan)
+
+    // the flow as it runs: every output reads the chunk's cached tagged
+    // slice, not the raw source, and none reads the design table
+    try outputs(RotFlow.run(spark, raw, spark.read.parquet(s"$dir/dv"))).foreach { p =>
+      assert(scanned(p).isEmpty, s"an output rescans a source:\n$p")
+    } finally Caches.release()
+
+    // the full trees (no cache substitution): each melt is ONE posexplode
+    // over (x, y) structs, and no join pairs two melts on site_idx
+    val (rot, avm) = Caches.disabled(
+      (RotFlow.run(spark, raw, spark.read.parquet(s"$dir/dv")), graft.flows.AvmFlow.run(raw)))
+    def generates(p: LogicalPlan) = p.collect { case g: Generate => g }
+    (outputs(rot) ++ outputs(avm)).foreach { p =>
+      assert(!scanned(p).contains("dv"), s"a prepared flow rescans the design table:\n$p")
+      generates(p).foreach { g =>
+        assert(g.generator.isInstanceOf[PosExplode] &&
+          (g.generator.children.head.dataType match {
+            case ArrayType(st: StructType, _) => st.fieldNames.toSet == Set("x", "y")
+            case _ => false
+          }), s"melt is not one pass over (x, y) pairs:\n$g")
+      }
+      val meltJoins = p.collect { case j: Join
+        if generates(j.left).nonEmpty && generates(j.right).nonEmpty &&
+           j.condition.exists(_.references.exists(_.name == "site_idx")) => j }
+      assert(meltJoins.isEmpty, s"two melts joined on site_idx:\n$p")
+    }
   }
 }
