@@ -1,25 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
-  * Results are forced through the noop sink so the full plan executes
-  * (a bare .count() would let Catalyst prune projections away).
+  * Results are forced through the noop sink ([[Harness.noopSeconds]]).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // Warm up the JVM/codegen/parquet paths so the first (alphabetical)
     // query's number measures the query, not session startup.
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -40,10 +30,8 @@ object Bench {
         .filter(_.isDirectory).map(_.getAbsolutePath))
       .foreach { warmDir =>
         SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-          try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+          try Harness.noopSeconds(spark)(fn(spark, warmDir))
           catch { case _: Throwable => () }
-          Caches.release()
-          spark.catalog.clearCache()
         }
       }
     // JSON string escape shared with Verify.
@@ -54,13 +42,8 @@ object Bench {
     // not the neighbors.
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val times = (1 to 2).map { _ =>
-        Caches.release()           // tracked caches of the previous run
-        spark.catalog.clearCache() // belt-and-braces: nothing cached leaks into timing
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
+        try Harness.noopSeconds(spark)(fn(spark, sfDir))
+        catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0 // sentinel: a broken query must not look fast
         }
@@ -131,7 +114,7 @@ object Bench {
     var recheckLoad = -1.0
     var recheckWait = 0.0
     val settleThreshold = sys.env.getOrElse("SPARK_GRAFT_SETTLE_LOAD",
-      (cpus.toInt / 4.0).toString).toDouble
+      (Harness.cpus.toInt / 4.0).toString).toDouble
     def load1(): Double =
       try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
         .split(" ")(0).toDouble
@@ -154,12 +137,8 @@ object Bench {
       if (t > 0 && trips(name, t)) {
         var maxLoad = load1()
         val t2 = (1 to 2).map { _ =>
-          Caches.release(); spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val dt = try {
-            SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          } catch { case _: Throwable => t }
+          val dt = try Harness.noopSeconds(spark)(SparkEntry.queries(name)(spark, sfDir))
+            catch { case _: Throwable => t }
           maxLoad = math.max(maxLoad, load1())
           dt
         }.min

@@ -152,8 +152,6 @@ object RigidFit {
       .as[Site]
   }
 
-  def fitted(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
+  def fitted(s: SparkSession, dir: String): DataFrame =
     fit(fromEmbeddings(s, dir)).toDF()
-  }
 }

@@ -1,6 +1,7 @@
 package graft.flows
 
 import java.sql.Timestamp
+import scala.annotation.unused
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.incremental.{IncrementalRunner, SchemaReconcile, Watermarks}
 
@@ -74,8 +75,9 @@ object EtlMain {
     * SECOND windowed pipeline over the same raw table and the same
     * watermark table, trailing the ROT watermark — AVM may only analyze
     * windows ROT has finished — with its own (avmApp, toolid) row
-    * advancing independently. */
-  def avm(spark: SparkSession, raw: DataFrame,
+    * advancing independently. `spark` is unused but kept: callers pass
+    * it as they do to [[etl]] and [[rot]]. */
+  def avm(@unused spark: SparkSession, raw: DataFrame,
           wm: Watermarks, toolid: String, avmApp: String, rotApp: String,
           out: RotRunner.RotOutputs): Int =
     RotRunner.runWindowed(raw, wm, toolid, avmApp, rotApp, out, AvmFlow.run(_))

@@ -17,13 +17,16 @@ object Sinks {
     * deterministic under D5 replay (unlike monotonically_increasing_id,
     * which is partition-dependent and would orphan detail rows), and
     * computed without any global sort — a pure narrow projection at any
-    * scale. Returns (header with rot_id, detail with rot_id).
+    * scale. The key depends only on a row's own natural key, so each side
+    * computes it: no join, and the detail never re-runs the header's plan.
+    * Returns (header with rot_id, detail with the natural key first and
+    * rot_id last).
     */
   def headerDetail(header: DataFrame, detail: DataFrame,
                    naturalKey: Seq[String]): (DataFrame, DataFrame) = {
-    val h = header.withColumn("rot_id", xxhash64(naturalKey.map(col): _*))
-    val d = detail.join(broadcast(h.select((naturalKey :+ "rot_id").map(col): _*)), naturalKey)
-    (h, d)
+    val rotId = xxhash64(naturalKey.map(col): _*).as("rot_id")
+    (header.withColumn("rot_id", rotId),
+     detail.select((naturalKey ++ detail.columns.filterNot(naturalKey.contains)).map(col) :+ rotId: _*))
   }
 
   /** K8 — dead-letter sink (reference R/pg_db.R:114-139 + flag taxonomy at

@@ -858,7 +858,6 @@ object Corpus extends QueryModule {
   // executors the plan is two corpus shuffles (bucket agg + rank
   // window), both on uniform fixed-width keys.
   private[graft] val NumShards = 16
-  private val ShardBuckets = 64 // high-order key bits => bucket order ≡ key order
 
   /** The permutation machinery, shared by q92 (whole corpus) and q96
     * (survivors only): every input row gains (shard, pos) — shard from

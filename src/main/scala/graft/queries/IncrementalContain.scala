@@ -57,7 +57,7 @@ import graft.{QueryModule, Tables}
   * contained_in_batch).
   */
 object IncrementalContain extends QueryModule {
-  import IncrementalDedup.{ShardBase, assertRekeyDisjoint, complete, fsFor, publish}
+  import IncrementalDedup.{ShardBase, assertRekeyDisjoint, publish}
 
   private[graft] val MinSet = 4    // contained side must carry >= 4 shingles
   private val SnipMinToks = 12     // snippets cut docs with >= 12 tokens

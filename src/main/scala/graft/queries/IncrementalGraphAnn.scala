@@ -573,7 +573,6 @@ object IncrementalGraphAnn extends QueryModule {
       |    SELECT vec_id, nbr, ROW_NUMBER() OVER (PARTITION BY vec_id, cell ORDER BY cos DESC, nbr) AS nrank
       |    FROM ${p}adjs) WHERE nrank <= $GraphPerCell)""".stripMargin
 
-  private val Era0Pred = "vec_id % 5 <> 4 AND vec_id % 2 = 0"
   private val Era1Pred = "vec_id % 5 <> 4 AND vec_id % 2 = 1"
 
   private val q190Sql =

@@ -179,7 +179,7 @@ object IncrementalPack extends QueryModule {
     * content-bearing rows whose (at most one) partial row becomes the
     * tail, `spans` the doc→sequence-span roster (the removal-request
     * surface — q139). */
-  private def writeGeneration(s: SparkSession, tmp: org.apache.hadoop.fs.Path,
+  private def writeGeneration(tmp: org.apache.hadoop.fs.Path,
                               fullSeqs: DataFrame, packed: DataFrame,
                               total: DataFrame, spans: DataFrame): Unit = {
     fullSeqs.write.mode("overwrite").parquet(s"$tmp/seqs")
@@ -212,7 +212,7 @@ object IncrementalPack extends QueryModule {
       val offs = offsetsOf(docs.withColumn("base_off", lit(0L)))
       val packed = packedFromOffsets(offs)
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      try writeGeneration(s, tmp,
+      try writeGeneration(tmp,
         hashRows(packed.filter(col("n_tokens") === SeqLen)), packed,
         tokenTotal(docs).select(col("nt_sum").as("total_tokens")),
         docSpansFromOffsets(offs))
@@ -310,7 +310,7 @@ object IncrementalPack extends QueryModule {
           s.read.parquet(s"$idxPath/state").select(col("total_tokens").as("base_off"))))))
         // holes never move under append — the pad roster rides along
         padsOf(s, idxPath).write.mode("overwrite").parquet(s"$tmp/pads")
-        writeGeneration(s, tmp,
+        writeGeneration(tmp,
           s.read.parquet(s"$idxPath/seqs")
             .unionByName(hashRows(tail.filter(col("n_tokens") === SeqLen))),
           tail, total,
@@ -846,7 +846,7 @@ object IncrementalPack extends QueryModule {
             expr(s"(start_off + full_n - 1) div $SeqLen").as("last_seq"),
             col("start_off"),
             col("full_n").as("n_tokens"))
-        writeGeneration(s, tmp,
+        writeGeneration(tmp,
           frozenSeqs.unionByName(
             hashRows(rebuilt.filter(col("n_tokens") === SeqLen))),
           rebuilt.unionByName(storedTailPacked), total,
@@ -977,7 +977,7 @@ object IncrementalPack extends QueryModule {
             col("tail_text").as("content"))
           .join(broadcast(hits), Seq("seq_id"), "left_anti")
         val packedOut = rebuilt.drop("n_pad").unionByName(storedTailPacked)
-        writeGeneration(s, tmp,
+        writeGeneration(tmp,
           frozenSeqs.unionByName(
             rebuilt.filter(col("n_tokens") === SeqLen)
               .select(col("seq_id"), col("n_tokens"), col("n_docs"),

@@ -1642,12 +1642,12 @@ object Similarity extends QueryModule {
     * The crossover is MEASURED, not guessed, and was RE-MEASURED when
     * the dense M=128 + (16,32,8) operating point was registered — the
     * driver walk's per-Q cost is ∝ B·M, so the old M=32 crossover
-    * (Q=1024) no longer held. GraphWalkProbe at sf1 (20k vectors),
-    * dense config: driver 9.1/16.4/40.9/205.3 s at Q = 8/256/1024/4096
-    * vs batched 11.5/16.4/20.7/51.3 s — the arms tie at Q=256 and the
-    * batched walk wins everywhere above. The arms are bit-identical
-    * (GraphAnnSpec + the probe's own Q=256 equality check), so the gate
-    * is purely a physical-plan decision. */
+    * (Q=1024) no longer held. BASELINE.md's GraphWalkProbe rows ("Walk
+    * Q-crossover RE-MEASURED at the dense config", sf1, 20k vectors):
+    * driver 9.1/16.4/40.9/205.3 s at Q = 8/256/1024/4096 vs batched
+    * 11.5/16.4/20.7/51.3 s — the arms tie at Q=256 and the batched walk
+    * wins everywhere above. The arms are bit-identical (GraphAnnSpec),
+    * so the gate is purely a physical-plan decision. */
   private[graft] val GraphDriverWalkMaxQ = 256L
 
   /** Batched relational beam walk — the SAME walk as [[graphFrontiers]]

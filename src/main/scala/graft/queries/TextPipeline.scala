@@ -260,7 +260,6 @@ object TextPipeline extends QueryModule {
   private val ProfileSize = 50
 
   private def q45(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     // length >= 3 guard: Spark's sequence(1, n-2) counts DOWN for n < 3
     // and would emit degenerate n-grams the oracle's empty range never
     // produces. The raw occurrence stream feeds both sides directly — no

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import scala.annotation.unused
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -366,7 +367,7 @@ object Streams {
       StrippedDoc(d.doc_id, d.ts, nSegs, nKept, nCleanToks, Corpus.md5Hex(cleanText))
     }
 
-    def verdict(hash: String, rows: Iterator[StrippedDoc],
+    def verdict(@unused hash: String, rows: Iterator[StrippedDoc],
                 state: GroupState[java.lang.Boolean]): Iterator[(Long, Int, Int, Int, String, java.lang.Integer)] = {
       if (state.hasTimedOut) { state.remove(); Iterator.empty }
       else {
@@ -477,7 +478,7 @@ object Streams {
         .drop(s"bk_$b", s"members_$b")
     }
 
-    def verdict(key: (String, String), rows: Iterator[MediaVerdictIn],
+    def verdict(@unused key: (String, String), rows: Iterator[MediaVerdictIn],
                 state: GroupState[java.lang.Boolean]): Iterator[(Long, String, String, Boolean, java.lang.Long)] = {
       if (state.hasTimedOut) { state.remove(); Iterator.empty }
       else {
@@ -943,7 +944,7 @@ object Streams {
     import docs.sparkSession.implicits._
     val seqLen = graft.queries.IncrementalPack.SeqLen.toInt
 
-    def step(key: Int, rows: Iterator[PackDoc],
+    def step(@unused key: Int, rows: Iterator[PackDoc],
              state: GroupState[PackState]): Iterator[PackedSeq] = {
       val s = state.getOption.getOrElse(init)
       // restore the open sequence: total % SeqLen == 0 means no tail

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,15 +28,7 @@ object GraphRecallProbe {
     // `prod` as a trailing arg runs ONLY the registered config — the
     // cheap re-measure for the per-query floor row, vs the full sweep
     val configs = if (args.contains("prod")) Configs.takeRight(1) else Configs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     import spark.implicits._
     val sim = graft.queries.Similarity
     val vecs = graft.Caches.track(
@@ -71,7 +62,7 @@ object GraphRecallProbe {
       // the registered config (GraphAnnSpec), and the BASELINE row
       // records the sf1 floor so a fixture regen can't hide one query's
       // collapse inside a passing 0.9 average
-      val perQ = exact.groupBy(_._1).map { case (q, ex) => (ex & served).size }
+      val perQ = exact.groupBy(_._1).map { case (_, ex) => (ex & served).size }
       println(s"""[grecall] {"probe":$bp,"per_cell":$pc,"m":${bp * pc},"entries":$e,"beam":$b,"rounds":$r,""" +
         s""""hits":$hits,"recall":${math.rint(hits / 24.0 * 1e6) / 1e6},"min_hits":${perQ.min},"sec":${math.round(secs * 100) / 100.0}}""")
     }

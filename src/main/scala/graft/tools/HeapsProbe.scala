@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Heaps-law-vocabulary scale probe — the measurement that closes the
@@ -103,15 +102,7 @@ object HeapsProbe extends Serializable { // generator closures call the (statele
   def main(args: Array[String]): Unit = {
     val outRoot = args.headOption.getOrElse("/tmp/graft_heaps")
     val scales = if (args.length > 1) args.tail.map(_.toInt).toSeq else Seq(1, 4, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     import spark.implicits._
     spark.range(1000000).selectExpr("sum(id)").collect()
 
@@ -153,7 +144,7 @@ object HeapsProbe extends Serializable { // generator closures call the (statele
           (id, text, "l" + (mix(id * 31L + 11) >>> 33) % 5,
             "src" + (mix(id * 13L + 5) >>> 33) % 20, text.length.toLong)
         }.toDF("doc_id", "text", "lang", "source", "n_chars")
-          .repartition(cpus.toInt)
+          .repartition(graft.Harness.cpus.toInt)
           .write.mode("overwrite").parquet(s"$out/documents.parquet")
         marker.getParentFile.mkdirs()
         java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
@@ -167,13 +158,7 @@ object HeapsProbe extends Serializable { // generator closures call the (statele
         .select(explode(split(col("text"), " "))).distinct().count()
       val times = Queries.map { q =>
         val fn = graft.SparkEntry.queries(q)
-        val ts = (1 to 2).map { _ =>
-          graft.Caches.release(); spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        q -> ts.min
+        q -> (1 to 2).map(_ => graft.Harness.noopSeconds(spark)(fn(spark, dir))).min
       }
       graft.Caches.release(); spark.catalog.clearCache()
       val stats = graft.queries.Dedup.jaccardCandidateStats(spark, dir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Physical-plan census over the whole catalog: for every registered
@@ -80,19 +79,11 @@ object PlanCensus {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE wraps executedPlan in an opaque AdaptiveSparkPlanExec whose
-      // children are not traversable before execution; the census wants
-      // the statically prepared plan (exchanges inserted, pre-AQE), so
-      // adaptive execution is off for this session only
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    // AQE wraps executedPlan in an opaque AdaptiveSparkPlanExec whose
+    // children are not traversable before execution; the census wants
+    // the statically prepared plan (exchanges inserted, pre-AQE), so
+    // adaptive execution is off for this session only
+    val spark = graft.Harness.session("spark.sql.adaptive.enabled" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
     val rows = graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val c = try census(fn(spark, dir).queryExecution)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Write `.explain("formatted")` for named catalog queries to files —
   * the optimization-round evidence trail (plans/rNN/<query>_{before,after}.txt).
   *
@@ -15,15 +13,7 @@ object PlanDump {
     val suffix = args(2)
     val names = args.drop(3).toSeq
     outDir.mkdirs()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     names.foreach { nm =>
       val fn = graft.SparkEntry.queries(nm)
       val plan = fn(spark, dir).queryExecution.explainString(

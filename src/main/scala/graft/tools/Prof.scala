@@ -1,21 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query profiler: runMain graft.tools.Prof <name> <sfDir> [explain] */
 object Prof {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
     // Scheduler-shape listener: how much of the wall is executor compute
     // vs driver-side latency (planning, codegen, job scheduling). A query
@@ -63,12 +53,8 @@ object Prof {
       val fn = graft.SparkEntry.queries(nm)
       if (args.contains("explain")) fn(spark, sfDir).explain("formatted")
       (1 to 2).foreach { i =>
-        graft.Caches.release()     // mirror Bench: no cross-run cache reuse
-        spark.catalog.clearCache()
         Seq(jobs, stages, tasks).foreach(_.set(0)); Seq(runMs, cpuMs, gcMs).foreach(_.set(0))
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
+        val wall = graft.Harness.noopSeconds(spark)(fn(spark, sfDir)) // as Bench times it
         Thread.sleep(300) // let the listener bus drain before reading counters
         println(f"[prof] $nm run$i: $wall%.2f s  jobs=${jobs.get} stages=${stages.get} " +
           f"tasks=${tasks.get} execRun=${runMs.get / 1e3}%.1fs execCpu=${cpuMs.get / 1e3}%.1fs gc=${gcMs.get / 1e3}%.1fs")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling probe: replicate the documents corpus k× (doc_ids offset so
@@ -44,15 +43,7 @@ object ScaleProbe {
     val bigFactorQueries =
       Set("q33_minhash_lsh", "q44_corpus_filter", "q46_neardup_components",
           "q58_grouped_quantiles", "q77_quantile_sketch", "q68_embed_outliers")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val docs = graft.Tables.documents(spark, base)
@@ -95,13 +86,7 @@ object ScaleProbe {
         .filter(q => k <= 8 || bigFactorQueries(q))
       val times = probeQs.map { q =>
         val fn = graft.SparkEntry.queries(q)
-        val ts = (1 to 2).map { _ =>
-          graft.Caches.release(); spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        q -> ts.min
+        q -> (1 to 2).map(_ => graft.Harness.noopSeconds(spark)(fn(spark, dir))).min
       }
       val qs = times.map { case (q, t) => s""""$q":${math.round(t * 1000) / 1000.0}""" }.mkString(",")
       println(s"""[scale] {"factor":$k,"docs":${maxId * k},$qs}""")

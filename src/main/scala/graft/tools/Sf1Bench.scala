@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1 bench point: generate a TRUE sf1 corpus — 10× sf0.1 rows of NEW
@@ -47,15 +46,7 @@ object Sf1Bench extends Serializable { // generator closures call the (stateless
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     import spark.implicits._
     spark.range(1000000).selectExpr("sum(id)").collect()
 
@@ -113,7 +104,7 @@ object Sf1Bench extends Serializable { // generator closures call the (stateless
         val src = s"src${(mix(id * 13L + 5) >>> 33) % 20}"
         (id, text, pick(langA, u01(id * 31L + 11)), src, text.length.toLong)
       }.toDF("doc_id", "text", "lang", "source", "n_chars")
-      docOut.repartition(cpus.toInt).write.mode("overwrite").parquet(s"$out/documents.parquet")
+      docOut.repartition(graft.Harness.cpus.toInt).write.mode("overwrite").parquet(s"$out/documents.parquet")
 
       val embOut = spark.range(nEmb * 10).map { id =>
         val lab = pick(labA, u01(id * 523L + 1))
@@ -126,7 +117,7 @@ object Sf1Bench extends Serializable { // generator closures call the (stateless
         }
         (id, v.toSeq, lab)
       }.toDF("vec_id", "embedding", "label")
-      embOut.repartition(cpus.toInt).write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+      embOut.repartition(graft.Harness.cpus.toInt).write.mode("overwrite").parquet(s"$out/embeddings.parquet")
       marker.getParentFile.mkdirs()
       java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
     }
@@ -176,19 +167,14 @@ object Sf1Bench extends Serializable { // generator closures call the (stateless
     val warmDir = new java.io.File(new java.io.File(base).getParentFile, "sf0.001")
     if (warmDir.isDirectory) {
       graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try fn(spark, warmDir.getAbsolutePath).write.format("noop").mode("overwrite").save()
+        try graft.Harness.noopSeconds(spark)(fn(spark, warmDir.getAbsolutePath))
         catch { case _: Throwable => () }
-        graft.Caches.release(); spark.catalog.clearCache()
       }
     }
     val times = graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (q, fn) =>
       val ts = (1 to 2).map { _ =>
-        graft.Caches.release(); spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, out).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
+        try graft.Harness.noopSeconds(spark)(fn(spark, out))
+        catch { case e: Throwable =>
           System.err.println(s"[sf1] $q failed: ${e.getMessage}")
           -1.0
         }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Adversarial SKEW probe: plant 90%-single-key skew in the corpora and
@@ -60,15 +59,7 @@ object SkewProbe {
     // variant (content-period id mapping) below
     val mediaQs = Seq("q94_image_phash_dedup", "q95_audio_envelope_dedup",
       "q97_video_fingerprint")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val docs = graft.Tables.documents(spark, base)
@@ -117,13 +108,7 @@ object SkewProbe {
         // baseline for the msat saturation rows below
         val times = (docQs ++ embQs ++ (if (variant == "uniform") mediaQs else Nil)).map { q =>
           val fn = graft.SparkEntry.queries(q)
-          val ts = (1 to 2).map { _ =>
-            graft.Caches.release(); spark.catalog.clearCache()
-            val t0 = System.nanoTime()
-            fn(spark, dir).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          q -> ts.min
+          q -> (1 to 2).map(_ => graft.Harness.noopSeconds(spark)(fn(spark, dir))).min
         }
         // output-size sanity: the caps must bound the PAIR counts — with
         // 0.9·N·k docs on one band key, a quadratic leak is ~(0.9·N·k)²/2
@@ -164,13 +149,7 @@ object SkewProbe {
         .write.mode("overwrite").parquet(s"$msatDir/documents.parquet")
       val msatTimes = mediaQs.map { q =>
         val fn = graft.SparkEntry.queries(q)
-        val ts = (1 to 2).map { _ =>
-          graft.Caches.release(); spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          fn(spark, msatDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        q -> ts.min
+        q -> (1 to 2).map(_ => graft.Harness.noopSeconds(spark)(fn(spark, msatDir))).min
       }
       graft.Caches.release(); spark.catalog.clearCache()
       val msatCounts = Seq("q94_image_phash_dedup", "q95_audio_envelope_dedup").map { q =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time named catalog queries on a data dir — best-of-2 through the noop
   * sink, cold caches, the Bench methodology. For targeted plan
   * experiments where running the whole catalog would drown the signal.
@@ -12,25 +10,11 @@ object TimeQuery {
   def main(args: Array[String]): Unit = {
     val dir = args.head
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     spark.range(1000000).selectExpr("sum(id)").collect()
     val times = names.map { q =>
       val fn = graft.SparkEntry.queries(q)
-      val ts = (1 to 2).map { _ =>
-        graft.Caches.release(); spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      q -> ts.min
+      q -> (1 to 2).map(_ => graft.Harness.noopSeconds(spark)(fn(spark, dir))).min
     }
     val qs = times.map { case (q, t) => s""""$q":${math.round(t * 1000) / 1000.0}""" }.mkString(",")
     println(s"""[time] {"dir":"$dir",$qs}""")

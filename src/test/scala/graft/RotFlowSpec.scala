@@ -340,6 +340,60 @@ class RotFlowSpec extends SparkTestBase {
       ("npna", null, -1, "missing measurement")))
   }
 
+  // One measurement identity (glassid, tstamp) under two products, both
+  // with complete grids: rot_id keys on (glassid, tstamp), so the two
+  // products' rows share one key.
+  private def twoProductDesign = designValues.unionByName((1 to nSites).map { i =>
+    ("G", i, ((i - 1) / 4) * 100.0, ((i - 1) % 4) * 50.0)
+  }.toDF("product", "site_idx", "dx", "dy"))
+  private def twoProductRaw = rawFrame(Seq(
+    glassRow("ok1", "A", 0.5, -0.3, 120.0),
+    glassRow("two", "A", -1.2, 0.8, -60.0),
+    glassRow("two", "G", -1.2, 0.8, -60.0)))
+  private def detailProducts(df: org.apache.spark.sql.DataFrame) =
+    df.groupBy("glassid", "product", "tstamp", "rot_id").agg(count(lit(1)), countDistinct("site_idx"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)) ->
+        (r.getLong(4), r.getLong(5))).toMap
+
+  test("two products under one (glassid, tstamp): ROT and AVM rows are pinned") {
+    val key = 4838404168524628855L // xxhash64("two", T0)
+    val rot = RotFlow.run(spark, twoProductRaw, twoProductDesign)
+    val rotHeader = rot.header.collect().map(r => (r.getString(r.fieldIndex("glassid")),
+      r.getString(r.fieldIndex("product")), r.getInt(r.fieldIndex("n_sites")),
+      r.getLong(r.fieldIndex("rot_id")))).toSet
+    // the fit groups on (glassid, tstamp): both products' sites fit as one
+    assert(rotHeader == Set(("ok1", "A", 8, -2233093054476105771L),
+      ("two", "A", 16, key), ("two", "G", 16, key)))
+    rot.header.filter(col("glassid") === "two").collect().foreach { r =>
+      r.getDouble(r.fieldIndex("shift_x")) shouldBe -1.2 +- 1e-6
+      r.getDouble(r.fieldIndex("theta_urad")) shouldBe -60.0 +- 0.05
+    }
+    // each product's sites pair with both products' fit rows (2 × 8);
+    // rot_id is projected, so the two header rows do not double it again
+    assert(detailProducts(rot.detail) == Map(
+      ("ok1", "A", T0, -2233093054476105771L) -> (8L, 8L),
+      ("two", "A", T0, key) -> (16L, 8L),
+      ("two", "G", T0, key) -> (16L, 8L)))
+    assert(rot.detail.columns.toSeq ==
+      Seq("glassid", "tstamp", "product", "site_idx", "x_rs", "y_rs", "rot_id"))
+    assert(errorRows(rot.errors).isEmpty)
+
+    val avm = graft.flows.AvmFlow.run(twoProductRaw)
+    val avmHeader = avm.header.collect().map(r => (r.getString(r.fieldIndex("glassid")),
+      r.getString(r.fieldIndex("product")), r.getLong(r.fieldIndex("n_sites")),
+      r.getLong(r.fieldIndex("rot_id")))).toSet
+    assert(avmHeader == Set(("ok1", "A", 8L, -2233093054476105771L),
+      ("two", "A", 8L, key), ("two", "G", 8L, key)))
+    // one detail row per site: the model is per product, the key is not
+    assert(detailProducts(avm.detail) == Map(
+      ("ok1", "A", T0, -2233093054476105771L) -> (8L, 8L),
+      ("two", "A", T0, key) -> (8L, 8L),
+      ("two", "G", T0, key) -> (8L, 8L)))
+    assert(avm.detail.columns.toSeq ==
+      Seq("glassid", "tstamp", "product", "site_idx", "x_res", "y_res", "rot_id"))
+    assert(errorRows(avm.errors).isEmpty)
+  }
+
   test("plan fence: one slice scan per chunk, no design-table rescan, one-pass melts") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.expressions.PosExplode
