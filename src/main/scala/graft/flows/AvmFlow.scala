@@ -1,6 +1,7 @@
 package graft.flows
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.incremental.Sinks
 
@@ -20,10 +21,12 @@ import graft.incremental.Sinks
   * runner trails the ROT watermark (not replication) in the shared
   * lastendtime table.
   *
-  * Scale: the same shape as RotFlow — regex column discovery (F5), one
-  * missing-value split (P12), a one-pass melt, one groupBy on the glass
-  * identity (≤ sites-per-glass rows per group, uniform), a same-key
-  * re-join for residuals. Nothing corpus-wide beyond the raw scan.
+  * Scale: the same shape as RotFlow — regex column discovery (F5), the
+  * slice scanned once per chunk into a cached relation tagged with the
+  * missing-value flag (P12) that all three outputs read, a one-pass melt,
+  * one groupBy on the glass identity for the header and one window on it
+  * for the residuals (≤ sites-per-glass rows per group, uniform). Nothing
+  * corpus-wide beyond the raw scan.
   */
 object AvmFlow {
 
@@ -32,26 +35,31 @@ object AvmFlow {
           yColRegex: String = "^plfn_.*_y$"): RotFlow.RotResult = {
     val (clean, xCols, yCols) = RotFlow.clean(raw, xColRegex, yColRegex)
 
-    // missing measurements → flag −1 (P12/K8), same dead letter as ROT
-    val (present, missingErr) = Sinks.splitMissing(clean, xCols ++ yCols)
+    // tag each measurement once — −1 missing (P12/K8), same dead letter
+    // as ROT, 1 ok — into a cache that header, detail and errors all read
+    val tagged = graft.Caches.track(clean.withColumn("flag",
+      when(Sinks.missing(xCols ++ yCols), Sinks.FlagMissing).otherwise(Sinks.FlagOk)))
 
     // melt to long sites, keyed by the full (glassid, product, tstamp)
     // identity exactly as in RotFlow
-    val sites = RotFlow.melt(present, xCols, yCols)
+    val sites = RotFlow.melt(tagged.filter(col("flag") === Sinks.FlagOk), xCols, yCols)
 
     // zeroth-order VM model per measurement: mean site offset per axis
     val model = sites.groupBy(RotFlow.KeyCols.map(col): _*)
       .agg(avg(col("x")).as("vm_x"), avg(col("y")).as("vm_y"),
            count(lit(1)).as("n_sites"))
 
-    // residuals of every site against its glass's VM estimate
-    val detail = sites.join(model, RotFlow.KeyCols)
+    // residuals of every site against its glass's VM estimate, the same
+    // mean taken over a window on the identity: no join back to the model
+    val glass = Window.partitionBy(RotFlow.KeyCols.map(col): _*)
+    val detail = sites
       .select(col("glassid"), col("product"), col("tstamp"), col("site_idx"),
-        (col("x") - col("vm_x")).as("x_res"),
-        (col("y") - col("vm_y")).as("y_res"))
+        (col("x") - avg(col("x")).over(glass)).as("x_res"),
+        (col("y") - avg(col("y")).over(glass)).as("y_res"))
 
     val (h, d) = Sinks.headerDetail(model, detail, Seq("glassid", "tstamp"))
     RotFlow.RotResult(h, d, // same error schema as RotFlow's K8 sink
-      missingErr.select(col("glassid"), col("product"), col("flag"), col("description")))
+      tagged.filter(col("flag") === Sinks.FlagMissing)
+        .select(col("glassid"), col("product"), col("flag"), lit("missing measurement").as("description")))
   }
 }

@@ -19,8 +19,9 @@ import graft.sources.Sources
   *  4. A5: products whose design grid is incomplete → flag −3;
   *  5. R3: melt wide coordinate columns to long sites, position-joined
   *     to the design grid (J2, broadcast — DV tables are tiny);
-  *  6. R6: per-glass rigid-body L-BFGS-B fit (RigidFit; glasses whose
-  *     fit fails would flag −4);
+  *  6. R6: per-measurement rigid-body least-squares fit, one per
+  *     (glassid, product, tstamp), solved in closed form (RigidFit;
+  *     glasses whose fit fails flag −4);
   *  7. R7: apply the fitted transform to every site;
   *  8. K7: header (per-glass fit params) + detail (per-site corrected
   *     coordinates) sharing a deterministic surrogate key.
@@ -28,9 +29,10 @@ import graft.sources.Sources
   * Scale: the design gates are computed once per run ([[prepare]], one
   * job over config-sized DV tables). Each chunk scans its slice once into
   * a cached, flag-tagged relation that all three outputs read, melts it
-  * in one pass, and shuffles once on glassid for the fit (≤48 sites per
-  * glass — bounded groups, no skew). The per-product driver loop of the
-  * reference (D6) disappears: products partition the same shuffled pass.
+  * in one pass, and shuffles once on the measurement key for the fit
+  * (≤48 sites per glass — bounded groups, no skew). The per-product
+  * driver loop of the reference (D6) disappears: products partition the
+  * same shuffled pass, each product's sites fitting as their own group.
   */
 object RotFlow {
 
@@ -111,13 +113,15 @@ object RotFlow {
 
     // 5. melt (R3) and join the design grid (J2). 6. per-measurement
     // rigid-body fit (R6) — the typed key is xxhash64 over the full
-    // (glassid, tstamp) identity: 32-bit hashing would collide with ~50%
-    // odds at ~77k keys (birthday bound) and silently merge two fits.
+    // (glassid, product, tstamp) identity, so each product fits on its
+    // own as in the reference's per-product loop (D6); 32-bit hashing
+    // would collide with ~50% odds at ~77k keys (birthday bound) and
+    // silently merge two fits. rot_id stays keyed on (glassid, tstamp).
     // The CHECKED fit returns failures as rows: a degenerate glass
-    // (identical design points, non-finite cell, solver abort) routes
-    // to flag −4 (reference R/tlcd_nikonrot.R:263-272) instead of
-    // poisoning the header with garbage params or aborting the batch.
-    val glass = xxhash64(col("glassid"), col("tstamp")).as("glass")
+    // (identical design points, non-finite cell) routes to flag −4
+    // (reference R/tlcd_nikonrot.R:263-272) instead of poisoning the
+    // header with garbage params or aborting the batch.
+    val glass = xxhash64(KeyCols.map(col): _*).as("glass")
     val typed = melt(fitInput, xCols, yCols)
       .join(broadcast(design.grid), Seq("product", "site_idx")).select(col("*"), glass)
     val attempts = graft.Caches.track(RigidFit.fitChecked( // the fit runs once

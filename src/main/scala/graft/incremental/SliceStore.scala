@@ -89,15 +89,17 @@ object SliceStore {
     swapIn(fs, tmp, target)
   }
 
-  /** Replace the whole table at `path` with `df` under the same
-    * crash-safe swap (used by the watermark store). */
-  def replaceTable(spark: SparkSession, path: String, df: DataFrame): Unit = {
+  /** Replace the whole table at `path` under the same crash-safe swap:
+    * `write` fills the empty staging directory it is given, which then
+    * swaps in (used by the watermark store, which writes on the driver). */
+  def replaceTable(spark: SparkSession, path: String)(write: Path => Unit): Unit = {
     val target = new Path(path)
     val fs = fsOf(spark, target)
     heal(fs, target)
     val tmp = new Path(path + ".staging")
     fs.delete(tmp, true)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    require(fs.mkdirs(tmp), s"replace: mkdir $tmp failed")
+    write(tmp)
     swapIn(fs, tmp, target)
   }
 }

@@ -1,8 +1,17 @@
 package graft.incremental
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Encoders, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.{NanoTime, SimpleGroup}
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, BOOLEAN, INT64, INT96}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 
 /** The watermark control table (K6/P14, reference `lastendtime`,
   * dbs/nikon.py:19-37,169-186): one row per (apname, toolid) holding the
@@ -24,19 +33,37 @@ case class Watermark(apname: String, toolid: String,
                      virtualRecipe: Option[String] = None,
                      enabled: Boolean = true)
 
+/** The table's I/O runs on the driver with parquet-hadoop, no Spark job:
+  * a read-modify-write of ≤ tool × pipeline rows is driver-sized, and a
+  * Spark round trip per advance would cost more than the chunk it
+  * follows. Writes are one `part-00000.parquet` whose fields match
+  * `Encoders.product[Watermark].schema` (timestamps as INT64
+  * TIMESTAMP(MICROS)), so Spark still reads the table; reads decode that
+  * and every timestamp form Spark writes (INT96, its default, which
+  * tables written before used; INT64 MICROS or MILLIS). Every write,
+  * [[init]] included, goes through
+  * SliceStore's crash-safe swap.
+  */
 class Watermarks(spark: SparkSession, path: String) {
-  import spark.implicits._
+  import Watermarks._
 
+  private def conf = spark.sparkContext.hadoopConfiguration
+
+  /** Every row of the table, read file by file (names starting with `_`
+    * or `.` are not data, as in Spark). Schema-tolerant: a table
+    * persisted before a column existed reads it as absent, which takes
+    * the documented defaults. */
   def all(): Seq[Watermark] =
     if (!SliceStore.exists(spark, path)) Seq.empty
     else {
-      // Schema-tolerant read of the DURABLE control table: with the case
-      // class's schema (no inference job), a table persisted before a
-      // column existed reads it as nulls, which take the documented
-      // defaults (case-class defaults do NOT apply at decode time).
-      spark.read.schema(Encoders.product[Watermark].schema).parquet(path)
-        .withColumn("enabled", coalesce(col("enabled"), lit(true)))
-        .as[Watermark].collect().toSeq
+      val dir = new Path(path)
+      dir.getFileSystem(conf).listStatus(dir).toSeq.map(_.getPath)
+        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .sortBy(_.getName).flatMap { file =>
+          val reader = ParquetReader.builder(new GroupReadSupport(), file).withConf(conf).build()
+          try Iterator.continually(reader.read()).takeWhile(_ != null).map(decode).toList
+          finally reader.close()
+        }
     }
 
   /** P14 check_flow: the watermark row must already exist AND be enabled
@@ -67,10 +94,62 @@ class Watermarks(spark: SparkSession, path: String) {
     val updated = existing.find(w => w.apname == apname && w.toolid == toolid)
       .map(_.copy(lastEndTime = lastEndTime, updateTime = updateTime))
       .getOrElse(Watermark(apname, toolid, lastEndTime, updateTime))
-    val rows = existing.filterNot(w => w.apname == apname && w.toolid == toolid) :+ updated
-    SliceStore.replaceTable(spark, path, rows.toDS().coalesce(1).toDF())
+    init(existing.filterNot(w => w.apname == apname && w.toolid == toolid) :+ updated)
   }
 
-  def init(rows: Seq[Watermark]): Unit =
-    rows.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
+  /** Replace the whole table with `rows`. */
+  def init(rows: Seq[Watermark]): Unit = SliceStore.replaceTable(spark, path) { dir =>
+    val file = HadoopOutputFile.fromPath(new Path(dir, "part-00000.parquet"), conf)
+    val writer = ExampleParquetWriter.builder(file).withConf(conf).withType(Schema).build()
+    try rows.foreach(w => writer.write(encode(w))) finally writer.close()
+  }
+}
+
+object Watermarks {
+
+  /** The parquet form of `Encoders.product[Watermark].schema`. */
+  private val Schema: MessageType = {
+    val str = LogicalTypeAnnotation.stringType()
+    val micros = LogicalTypeAnnotation.timestampType(true, TimeUnit.MICROS)
+    Types.buildMessage()
+      .optional(BINARY).as(str).named("apname")
+      .optional(BINARY).as(str).named("toolid")
+      .optional(INT64).as(micros).named("lastEndTime")
+      .optional(INT64).as(micros).named("updateTime")
+      .optional(BINARY).as(str).named("virtualRecipe")
+      .required(BOOLEAN).named("enabled")
+      .named("spark_schema")
+  }
+
+  private def encode(w: Watermark): Group = {
+    val g = new SimpleGroup(Schema)
+    Option(w.apname).foreach(g.add("apname", _))
+    Option(w.toolid).foreach(g.add("toolid", _))
+    Option(w.lastEndTime).foreach(t => g.add("lastEndTime", DateTimeUtils.fromJavaTimestamp(t)))
+    Option(w.updateTime).foreach(t => g.add("updateTime", DateTimeUtils.fromJavaTimestamp(t)))
+    w.virtualRecipe.foreach(g.add("virtualRecipe", _))
+    g.add("enabled", w.enabled)
+    g
+  }
+
+  /** One row in any schema the table was written with: an absent or
+    * null field reads as null, `virtualRecipe` as None and `enabled` as
+    * true (case-class defaults do not apply at decode time). */
+  private def decode(g: Group): Watermark = {
+    val t = g.getType
+    def has(f: String) = t.containsField(f) && g.getFieldRepetitionCount(f) > 0
+    def str(f: String) = if (has(f)) Some(g.getString(f, 0)) else None
+    def ts(f: String): Timestamp = if (!has(f)) null else DateTimeUtils.toJavaTimestamp(
+      t.getType(f).asPrimitiveType().getPrimitiveTypeName match {
+        case INT96 => // Spark's legacy default: Julian day + nanos of day
+          val nt = NanoTime.fromBinary(g.getInt96(f, 0))
+          DateTimeUtils.fromJulianDay(nt.getJulianDay, nt.getTimeOfDayNanos)
+        case _ => t.getType(f).getLogicalTypeAnnotation match {
+          case a: TimestampLogicalTypeAnnotation if a.getUnit == TimeUnit.MILLIS => g.getLong(f, 0) * 1000
+          case _ => g.getLong(f, 0) // TIMESTAMP(MICROS)
+        }
+      })
+    Watermark(str("apname").orNull, str("toolid").orNull, ts("lastEndTime"), ts("updateTime"),
+      str("virtualRecipe"), !has("enabled") || g.getBoolean("enabled", 0))
+  }
 }

@@ -150,9 +150,9 @@ object Analytics extends QueryModule {
   //   sx = (t·Σdy − Σx)/n,  sy = −(Σy + t·Σdx)/n
   // One aggregation per glass — no iteration, no driver loop; at 100 TB
   // this is a single partial-aggregated shuffle on the glass key. The
-  // L-BFGS-B formulation (faithful to the reference's optim numerics) is
-  // in analytics.RigidFit and cross-checked against this closed form in
-  // FitSpec. Sums accumulate in DECIMAL → order-insensitive, so the fit
+  // typed per-glass fit the ROT flow runs is analytics.RigidFit (the same
+  // equations over centred sums); FitSpec checks it against an L-BFGS-B
+  // solve of the reference's objective. Sums accumulate in DECIMAL → order-insensitive, so the fit
   // is bit-deterministic across partitionings.
   //
   // Glass = embedding label; measured diff (x, y) = embedding[1..2];

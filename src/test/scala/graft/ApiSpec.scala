@@ -1,7 +1,6 @@
 package graft
 
 import graft.api.QueryApi
-import org.apache.spark.sql.functions._
 
 /** The interactive query API: both physical strategies agree (the
   * reference's own correctness harness, eda_query.py:240-257), the

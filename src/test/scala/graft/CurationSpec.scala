@@ -592,7 +592,6 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("q178 agreement matrix recomposes exactly from the parent selectors' own outputs") {
-    import org.apache.spark.sql.functions._
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     def verdictOf(q: String, keepIdx: Int): Map[Long, Boolean] =

@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   * sink lacks (dropped), and a tool whose sink expects a missing column
   * aborts without corrupting the other tool's progress. */
 class EtlMainSpec extends SparkTestBase {
-  import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
   private def tmp() = java.nio.file.Files.createTempDirectory("graft_etl").toString + "/t"

@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.Similarity
-import org.apache.spark.sql.functions._
 
 /** The graph-ANN contracts the DuckDB oracle proves only by value
   * equality: the structural invariants of the build and the greedy

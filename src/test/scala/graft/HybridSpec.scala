@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.queries.{Corpus, LexIndex, Similarity}
 
 /** The served hybrid fusion (q135) and its takedown twin (q138): the

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import graft.queries.IncrementalPrepare
 
 /** The q102 contracts the DuckDB oracle cannot see: ingest/replay

@@ -131,6 +131,85 @@ class IncrementalSpec extends SparkTestBase {
     assert(wm.require("EDC_Import", "t01").lastEndTime == Timestamp.valueOf("2017-10-27 00:00:00"))
   }
 
+  test("watermark init, requireAll and advance run no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    def ts(s: String) = Timestamp.valueOf(s)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("watermarks", "watermark I/O")
+      val wm = new Watermarks(spark, tmpDir())
+      wm.init(Seq(Watermark("EDC_Import", "t01", ts("2024-01-01 00:00:00"), ts("2024-01-01 00:00:00")),
+        Watermark("ROT_Transform", "t01", ts("2024-01-01 00:00:00"), ts("2024-01-01 00:00:00"))))
+      wm.requireAll("EDC_Import" -> "t01", "ROT_Transform" -> "t01")
+      wm.advance("ROT_Transform", "t01", ts("2024-01-02 00:00:00"))
+      assert(wm.require("ROT_Transform", "t01").lastEndTime == ts("2024-01-02 00:00:00"))
+      // listener events arrive asynchronously, in order: once a later
+      // job's start is seen, every earlier one has been counted
+      sc.setJobGroup("barrier", "listener barrier")
+      spark.range(1).count()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groups.contains("barrier") && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(groups.contains("barrier"), "listener never saw the barrier job")
+      assert(!groups.contains("watermarks"), s"watermark I/O ran Spark jobs: $groups")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a watermark table written by advance reads back in Spark with the encoder schema") {
+    import org.apache.spark.sql.Encoders
+    def ts(s: String) = Timestamp.valueOf(s)
+    val path = tmpDir()
+    val wm = new Watermarks(spark, path)
+    wm.init(Seq(
+      Watermark("EDC_Import", "t01", ts("2024-01-01 00:00:00"), ts("2024-01-01 00:00:00")),
+      Watermark("AVM", "t01", ts("2024-01-01 00:00:00"), ts("2024-01-01 00:00:00"),
+        virtualRecipe = Some("TLCD_Nikon_VM_Fcn"), enabled = false)))
+    wm.advance("EDC_Import", "t01", ts("2024-01-02 03:04:05.123456"), ts("2024-01-02 03:04:06"))
+    val expect = Set(
+      Watermark("EDC_Import", "t01", ts("2024-01-02 03:04:05.123456"), ts("2024-01-02 03:04:06")),
+      Watermark("AVM", "t01", ts("2024-01-01 00:00:00"), ts("2024-01-01 00:00:00"),
+        virtualRecipe = Some("TLCD_Nikon_VM_Fcn"), enabled = false))
+    assert(wm.all().toSet == expect)
+    val viaSpark = spark.read.schema(Encoders.product[Watermark].schema).parquet(path)
+      .as[Watermark].collect().toSet
+    assert(viaSpark == expect)
+  }
+
+  test("Spark-written watermark tables with INT64 timestamps (MICROS, MILLIS) decode") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    def ts(s: String) = Timestamp.valueOf(s)
+    val rows = Seq(
+      Watermark("EDC_Import", "t01", ts("2024-01-01 00:00:00.123"), ts("2024-01-01 00:00:00")),
+      Watermark("AVM", "t01", ts("2024-01-01 00:00:00"), ts("2024-01-01 00:00:00"),
+        virtualRecipe = Some("TLCD_Nikon_VM_Fcn"), enabled = false))
+    val conf = spark.sparkContext.hadoopConfiguration
+    for (unit <- Seq("TIMESTAMP_MICROS", "TIMESTAMP_MILLIS")) {
+      val path = tmpDir()
+      spark.conf.set("spark.sql.parquet.outputTimestampType", unit)
+      try rows.toDS().coalesce(1).write.parquet(path)
+      finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+      val file = new Path(path).getFileSystem(conf).listStatus(new Path(path))
+        .map(_.getPath).find(_.getName.startsWith("part-")).get
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      val schema = reader.getFooter.getFileMetaData.getSchema
+      try assert(schema.getType(schema.getFieldIndex("lastEndTime"))
+        .asPrimitiveType().getPrimitiveTypeName == PrimitiveTypeName.INT64, s"$unit fixture is not INT64")
+      finally reader.close()
+      assert(new Watermarks(spark, path).all().toSet == rows.toSet, unit)
+    }
+  }
+
   test("headerDetail: deterministic shared surrogate keys") {
     val header = Seq(("g1", 1.0), ("g2", 2.0), ("g3", 3.0)).toDF("glassid", "fit")
     val detail = Seq(("g1", "p1", 0.1), ("g1", "p2", 0.2), ("g3", "p1", 0.3))

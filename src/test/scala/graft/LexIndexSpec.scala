@@ -89,7 +89,6 @@ class LexIndexSpec extends SparkTestBase {
   }
 
   test("overlapping takedown requests subtract each doc's stats exactly once") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_lex").toFile
     dir.deleteOnExit()
     val corpus = Tables.documents(spark, sfDir).select("doc_id", "text").limit(40)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import scala.sys.process._
 

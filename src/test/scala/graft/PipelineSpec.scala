@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.{Dedup, Similarity, TextPipeline}
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Cross-checks between the exact baselines and their bucketed scale-path
@@ -79,7 +78,6 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("within-class top-k is the brute-force ranking restricted to the class") {
-    import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(spark, sfDir).select("vec_id", "label")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val wc = Similarity.queries("q38_knn_within_class")(spark, sfDir).collect()
@@ -727,7 +725,6 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("real image decode: PNG round-trip recovers formula pixels exactly") {
-    import spark.implicits._
     import graft.functions.Multimodal
     val out = Multimodal.decodeImages(Multimodal.synthesizeImages(spark, sfDir))
       .collect().map(f => f.doc_id -> f).toMap
@@ -975,7 +972,7 @@ class PipelineSpec extends SparkTestBase {
     val perSub = (0 until 8).map { s =>
       val data = vecs.map { case (id, a) => id -> subv(a, s) }
       val byId = data.toMap
-      def assign(cents: Map[Long, Array[Long]]) = data.map { case (id, a) =>
+      def assign(cents: Map[Long, Array[Long]]) = data.map { case (_, a) =>
         cents.toSeq.map { case (c, ca) => (c, dd2(a, ca)) }.minBy { case (c, dd) => (dd, c) }
       }
       val c0 = data.filter(_._1 < 16).map { case (id, a) => id -> a }.toMap
@@ -1341,7 +1338,7 @@ class PipelineSpec extends SparkTestBase {
     import spark.implicits._
     import graft.functions.Multimodal
     val rnd = new scala.util.Random(42) // deterministic fuzz corpus
-    val junk = (0 until 60).map { i =>
+    val junk = (0 until 60).map { _ =>
       val b = new Array[Byte](rnd.nextInt(200)); rnd.nextBytes(b); b
     }
     val png = Multimodal.encodePng(3L)

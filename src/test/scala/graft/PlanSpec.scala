@@ -541,7 +541,7 @@ class PlanSpec extends SparkTestBase {
     // overhead.
     val p = graft.queries.Curation.queries("q85_bloom_decontaminate")(spark, sfDir)
       .queryExecution.optimizedPlan
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
     import org.apache.spark.sql.catalyst.plans.Inner
     def isProbe(n: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
       n.expressions.exists(e =>

@@ -261,7 +261,7 @@ class PropertySpec extends SparkTestBase {
       val got = plans.AsofJoin(spark, left, right, "k", "rk", "ts", "rts", "rid")
         .collect()
         .map(r => r.getLong(2) -> (if (r.isNullAt(5)) -1L else r.getLong(5))).toMap
-      val rSeq = rs.zipWithIndex.map { case ((k, ts, v), i) => (k, ts, i.toLong) }
+      val rSeq = rs.zipWithIndex.map { case ((k, ts, _), i) => (k, ts, i.toLong) }
       val expect = ls.zipWithIndex.map { case ((k, ts), i) =>
         val cands = rSeq.filter(r => r._1 == k && r._2 < ts)
         i.toLong -> (if (cands.isEmpty) -1L else cands.maxBy(r => (r._2, r._3))._3)

@@ -341,8 +341,8 @@ class RotFlowSpec extends SparkTestBase {
   }
 
   // One measurement identity (glassid, tstamp) under two products, both
-  // with complete grids: rot_id keys on (glassid, tstamp), so the two
-  // products' rows share one key.
+  // with complete grids: each product fits on its own, and rot_id keys on
+  // (glassid, tstamp), so the two products' rows share one key.
   private def twoProductDesign = designValues.unionByName((1 to nSites).map { i =>
     ("G", i, ((i - 1) / 4) * 100.0, ((i - 1) % 4) * 50.0)
   }.toDF("product", "site_idx", "dx", "dy"))
@@ -361,19 +361,19 @@ class RotFlowSpec extends SparkTestBase {
     val rotHeader = rot.header.collect().map(r => (r.getString(r.fieldIndex("glassid")),
       r.getString(r.fieldIndex("product")), r.getInt(r.fieldIndex("n_sites")),
       r.getLong(r.fieldIndex("rot_id")))).toSet
-    // the fit groups on (glassid, tstamp): both products' sites fit as one
+    // the fit groups on (glassid, product, tstamp): one fit per product
     assert(rotHeader == Set(("ok1", "A", 8, -2233093054476105771L),
-      ("two", "A", 16, key), ("two", "G", 16, key)))
+      ("two", "A", 8, key), ("two", "G", 8, key)))
     rot.header.filter(col("glassid") === "two").collect().foreach { r =>
       r.getDouble(r.fieldIndex("shift_x")) shouldBe -1.2 +- 1e-6
       r.getDouble(r.fieldIndex("theta_urad")) shouldBe -60.0 +- 0.05
     }
-    // each product's sites pair with both products' fit rows (2 × 8);
-    // rot_id is projected, so the two header rows do not double it again
+    // each product's sites pair with its own fit row only; rot_id is
+    // projected, so the two header rows do not double them
     assert(detailProducts(rot.detail) == Map(
       ("ok1", "A", T0, -2233093054476105771L) -> (8L, 8L),
-      ("two", "A", T0, key) -> (16L, 8L),
-      ("two", "G", T0, key) -> (16L, 8L)))
+      ("two", "A", T0, key) -> (8L, 8L),
+      ("two", "G", T0, key) -> (8L, 8L)))
     assert(rot.detail.columns.toSeq ==
       Seq("glassid", "tstamp", "product", "site_idx", "x_rs", "y_rs", "rot_id"))
     assert(errorRows(rot.errors).isEmpty)
@@ -395,7 +395,6 @@ class RotFlowSpec extends SparkTestBase {
   }
 
   test("plan fence: one slice scan per chunk, no design-table rescan, one-pass melts") {
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.expressions.PosExplode
     import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -409,9 +408,10 @@ class RotFlowSpec extends SparkTestBase {
     def outputs(r: RotFlow.RotResult) = Seq(r.header, r.detail, r.errors)
       .map(_.queryExecution.optimizedPlan)
 
-    // the flow as it runs: every output reads the chunk's cached tagged
-    // slice, not the raw source, and none reads the design table
-    try outputs(RotFlow.run(spark, raw, spark.read.parquet(s"$dir/dv"))).foreach { p =>
+    // the flows as they run: every ROT and AVM output reads the chunk's
+    // cached tagged slice, not the raw source, and none reads the design table
+    try (outputs(RotFlow.run(spark, raw, spark.read.parquet(s"$dir/dv"))) ++
+        outputs(graft.flows.AvmFlow.run(raw))).foreach { p =>
       assert(scanned(p).isEmpty, s"an output rescans a source:\n$p")
     } finally Caches.release()
 

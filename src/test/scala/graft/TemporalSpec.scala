@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   * the in-repo witnesses that the algorithms (not just the hashes)
   * agree. */
 class TemporalSpec extends SparkTestBase {
-  import spark.implicits._
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sfDir)
 
