@@ -1,14 +1,108 @@
 package graft
 
+import java.time.{LocalDateTime, ZoneOffset}
 import graft.api.QueryApi
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** The interactive query API: both physical strategies agree (the
   * reference's own correctness harness, eda_query.py:240-257), the
-  * pipeline chains, and the map-shaped edge result groups correctly. */
+  * pipeline chains, and the map-shaped edge result groups correctly.
+  * Every call's rows are also pinned IN ORDER against a plain-Scala
+  * answer computed from the fixture's orders and lineitem rows. */
 class ApiSpec extends SparkTestBase {
   import spark.implicits._
 
   private def ids = Seq(1L, 7L, 13L, 25L).toDF("id")
+
+  // --- plain-Scala reference over the fixture rows --------------------
+  private case class Ord(key: Long, cust: Long, date: LocalDateTime, prio: String)
+  private case class Line(order: Long, number: Int, qty: Double)
+
+  private lazy val orderRows: Seq[Ord] =
+    spark.read.parquet(s"$sfDir/orders.parquet")
+      .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority").collect()
+      .map(r => Ord(r.getLong(0), r.getLong(1), r.getAs[LocalDateTime](2), r.getString(3))).toSeq
+  private lazy val linesByOrder: Map[Long, Seq[Line]] =
+    spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .select("l_orderkey", "l_linenumber", "l_quantity").collect()
+      .map(r => Line(r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq.groupBy(_.order)
+  private lazy val customersWithOrders: Set[Long] = orderRows.map(_.cust).toSet
+
+  /** glassHistory: the requested customers' orders by (glass, start, step). */
+  private def refHistory(req: Seq[Option[Long]]): Seq[(Long, Long, LocalDateTime, String)] = {
+    val want = req.flatten.toSet
+    orderRows.filter(o => want(o.cust))
+      .sortBy(o => (o.cust, o.date.toEpochSecond(ZoneOffset.UTC), o.date.getNano, o.key))
+      .map(o => (o.cust, o.key, o.date, o.prio))
+  }
+  /** glassData over that history: its lines by (glass, step, site). */
+  private def refData(req: Seq[Option[Long]]): Seq[(Long, Long, LocalDateTime, Int, Double)] =
+    refHistory(req).flatMap { case (g, step, start, _) =>
+      linesByOrder.getOrElse(step, Nil).map(l => (g, step, start, l.number, l.qty))
+    }.sortBy(t => (t._1, t._2, t._4))
+  /** glassRawData: the requested customers' lines by (glass, step, site). */
+  private def refRaw(req: Seq[Option[Long]]): Seq[(Long, Long, Int, Double)] = {
+    val want = req.flatten.toSet
+    orderRows.filter(o => want(o.cust)).flatMap(o =>
+      linesByOrder.getOrElse(o.key, Nil).map(l => (o.cust, o.key, l.number, l.qty)))
+      .sortBy(t => (t._1, t._2, t._3))
+  }
+  /** missingIds: each distinct requested id with no order, nulls first
+    * (a null id matches no order, so it is reported as missing). */
+  private def refMissing(req: Seq[Option[Long]]): Seq[Option[Long]] =
+    req.distinct.filterNot(_.exists(customersWithOrders)).sortBy(_.getOrElse(Long.MinValue))
+
+  private def request(req: Seq[Option[Long]]): DataFrame =
+    req.map(_.map(java.lang.Long.valueOf).orNull).toDF("id")
+  private def lng(r: Row, i: Int): Option[Long] =
+    if (r.isNullAt(i)) None else Some(r.getLong(i))
+
+  // duplicate ids, a null id, unknown ids (every fixture customer
+  // 0..149 has orders, so 155, -5 and 999999999 have none) and known
+  // ids out of order
+  private val edgeReq: Seq[Option[Long]] =
+    Seq(Some(7L), Some(1L), Some(7L), None, Some(999999999L), Some(13L),
+        Some(155L), Some(-5L), Some(25L), Some(1L), Some(999999999L))
+  // a wide request: every customer key up to 160 (150.. unknown), some
+  // twice, so the answer spans several partitions before the edge sort
+  private val wideReq: Seq[Option[Long]] =
+    ((0L to 160L) ++ (150L to 0L by -10L)).map(Some(_))
+
+  private def checkPinned(req: Seq[Option[Long]]): Unit = {
+    val hist = QueryApi.glassHistory(spark, sfDir, request(req)).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getAs[LocalDateTime](2), r.getString(3))).toSeq
+    assert(hist.nonEmpty && hist == refHistory(req), "glassHistory rows or order")
+    val data = QueryApi.glassData(spark, sfDir, QueryApi.glassHistory(spark, sfDir, request(req)))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[LocalDateTime](2), r.getInt(3), r.getDouble(4)))
+      .toSeq
+    assert(data.nonEmpty && data == refData(req), "glassData rows or order")
+    for (sub <- Seq(true, false)) {
+      val raw = QueryApi.glassRawData(spark, sfDir, request(req), subquery = sub).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
+      assert(raw.nonEmpty && raw == refRaw(req), s"glassRawData(subquery = $sub) rows or order")
+    }
+    val miss = QueryApi.missingIds(spark, sfDir, request(req)).collect().map(lng(_, 0)).toSeq
+    assert(miss == refMissing(req), s"missingIds was $miss")
+  }
+
+  test("every call's rows, in order, equal a plain-Scala answer (duplicate, null and unknown ids)") {
+    assert(!customersWithOrders(155L) && customersWithOrders(7L), "fixture assumption")
+    assert(refMissing(edgeReq) == Seq(None, Some(-5L), Some(155L), Some(999999999L)))
+    checkPinned(edgeReq)
+    checkPinned(wideReq)
+    // strict adapter: raises naming every missing id, in order
+    val e = intercept[QueryApi.GlassDoesNotExist] {
+      QueryApi.glassHistoryStrict(spark, sfDir, request(edgeReq.filter(_.nonEmpty)))
+    }
+    assert(e.glassIds == Seq(-5L, 155L, 999999999L))
+    // a null id is a miss too: the adapter raises rather than answering
+    intercept[Exception](QueryApi.glassHistoryStrict(spark, sfDir, request(edgeReq)))
+    // and with only known (duplicated) ids it is glassHistory, in order
+    val known = Seq(Some(25L), Some(7L), Some(25L), Some(1L))
+    val ok = QueryApi.glassHistoryStrict(spark, sfDir, request(known)).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getAs[LocalDateTime](2), r.getString(3))).toSeq
+    assert(ok == refHistory(known))
+  }
 
   test("glass_raw_data: subquery and decorrelated strategies return the same relation") {
     val a = QueryApi.glassRawData(spark, sfDir, ids, subquery = true)
