@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet sources over the shared testdata dir.
   *
@@ -15,10 +16,61 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * all time-windowed queries filter on a timestamp column so a
   * date-partitioned layout gets partition pruning, and every query projects
   * explicit columns so the scan's ReadSchema stays narrow.
+  *
+  * Schema memo: inferring a parquet schema runs a Spark job (a footer
+  * read) on every `spark.read.parquet`, which a request-sized caller
+  * such as `QueryApi` pays on every call. [[apply]] therefore infers
+  * each table's schema once and reads with `spark.read.schema(memo)`.
+  * The memo is keyed by the path and the session's parquet SQL conf
+  * (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`: [[events]]
+  * toggles `nanosAsLong`, which changes the inferred type), and an
+  * entry holds only while the path's [[fingerprint]] (file names,
+  * lengths, mtimes) is unchanged, so a table rewritten in place is
+  * re-inferred; checking it costs one file-status call per read (a
+  * listing, for a directory table). A cold first read still infers.
+  * The memo holds the
+  * `StructType`, never a DataFrame: every read builds a fresh relation,
+  * so the file listing stays fresh and a self-join still gets new
+  * exprIds.
   */
 object Tables {
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val conf = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
+    val schema = schemas((path, conf), fingerprint(spark, path))(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** A source's file signature: the names, lengths and modification
+    * times of the files at `path` (the file itself, or a directory's
+    * entries), sorted and joined. File-system metadata only, no rows are
+    * read. A table regenerated under the same path signs differently, so
+    * anything keyed by it (artifact paths, the memos here) goes stale. */
+  def fingerprint(s: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val stats =
+      if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).toSeq else Seq(fs.getFileStatus(p))
+    stats.map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+      .sorted.mkString("|")
+  }
+
+  /** File metadata memoized per key while the source's fingerprint
+    * holds; a new fingerprint replaces the key's entry, so the memo
+    * stays one entry per key. The value is computed outside the map's
+    * lock: it may run a Spark job, and two racing callers computing the
+    * same value is harmless. */
+  private final class FileMemo[K, V] {
+    private val m = new java.util.concurrent.ConcurrentHashMap[K, (String, V)]()
+    def apply(key: K, fp: String)(compute: => V): V = {
+      val hit = m.get(key)
+      if (hit != null && hit._1 == fp) hit._2
+      else { val v = compute; m.put(key, (fp, v)); v }
+    }
+  }
+  private val schemas = new FileMemo[(String, Seq[(String, String)]), StructType]
 
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = apply(s, d, "orders")
@@ -95,14 +147,16 @@ object Tables {
     * ONE scan partition no matter what
     * `spark.sql.files.maxPartitionBytes` says — and the narrow CPU-heavy
     * stage downstream then runs single-threaded until its first shuffle.
-    * The split-count probe is memoized per path (it is file metadata),
-    * and the guard keeps this a no-op in the 100 TB case: a corpus with
-    * thousands of row groups already scans wider than the core count and
-    * must NOT pay a gratuitous full-corpus shuffle here. */
-  private val scanParts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    * The split-count probe is memoized per path while the path's
+    * [[fingerprint]] holds (it is file metadata; a table regenerated in
+    * place is probed again), and the guard keeps this a no-op in the
+    * 100 TB case: a corpus with thousands of row groups already scans
+    * wider than the core count and must NOT pay a gratuitous
+    * full-corpus shuffle here. */
+  private val scanParts = new FileMemo[String, Int]
   def fanOut(df: DataFrame, path: String): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val parts = scanParts.computeIfAbsent(path, _ => df.rdd.getNumPartitions)
+    val parts = scanParts(path, fingerprint(df.sparkSession, path))(df.rdd.getNumPartitions)
     if (parts < target) df.repartition(target) else df
   }
 

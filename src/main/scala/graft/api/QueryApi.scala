@@ -1,7 +1,9 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import graft.Tables
 
 /** The interactive query API surface (reference eda_query.py:260-277
@@ -15,8 +17,34 @@ import graft.Tables
   * Mapped onto the shared testdata star schema: glass → customer key,
   * history → orders, detail → lineitem. Against a real warehouse the
   * same pipelines run over `spark.read.jdbc` sources unchanged.
+  *
+  * Edge sort: every call ends in ONE single-partition sort
+  * (`repartition(1).sortWithinPartitions`), not `orderBy`. A global
+  * `orderBy` plans a range-partitioned exchange whose partitioner first
+  * runs a sampling job that rescans the whole joined input; an answer
+  * here is bounded by the request and `collect` gathers it on one node
+  * anyway, so sorting it in one partition samples nothing and costs one
+  * request-sized exchange. (A caller that turns an answer into a large
+  * relation should sort it itself.)
   */
 object QueryApi {
+
+  /** The edge sort described above. */
+  private def edgeSort(cols: String*)(df: DataFrame): DataFrame =
+    df.repartition(1).sortWithinPartitions(cols.map(col): _*)
+
+  /** `df` without a trailing edge sort, for a call that joins another
+    * call's answer: a join ignores its inputs' order and partitioning,
+    * and the edge sort's single-partition exchange would otherwise stay
+    * under the join as one more request-sized shuffle and job. Any
+    * other plan is returned as it is. */
+  private def withoutEdgeSort(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
+    case s: Sort if !s.global => s.child match {
+      case r: Repartition if r.numPartitions == 1 && r.shuffle => Shim.ofRows(df.sparkSession, r.child)
+      case _ => df
+    }
+    case _ => df
+  }
 
   /** glass_history (reference eda_query.py:164-171, dbs/auto.py:19-38):
     * per-id history rows, time-ordered — the driving keyed lookup. `ids`
@@ -29,7 +57,7 @@ object QueryApi {
       .join(broadcast(keyed), col("o_custkey") === col("custkey"), "left_semi")
       .select(col("o_custkey").as("glass_id"), col("o_orderkey").as("step_id"),
               col("o_orderdate").as("glass_start_time"), col("o_orderpriority"))
-      .orderBy("glass_id", "glass_start_time", "step_id")
+      .transform(edgeSort("glass_id", "glass_start_time", "step_id"))
   }
 
   /** The reference's typed miss signal (dbs/auto.py:13, raised at :37
@@ -46,18 +74,24 @@ object QueryApi {
     * typo'd id. `glassHistory(ids)`'s key set and `missingIds(ids)`
     * partition the request: every requested id appears in exactly one.
     *
-    * Shape: ONE broadcast semi pass over orders (the same probe
-    * glassHistory runs) reduces to the ≤|ids| distinct hit keys, and
-    * the miss is a broadcast anti over the request itself — orders is
-    * never shuffled and the anti join is request-sized × request-sized. */
+    * Shape: ONE aggregation. The requested keys (hit = false) and the
+    * keys of ONE broadcast semi pass over orders (the same probe
+    * glassHistory runs; hit = true) are unioned, gathered into the
+    * edge sort's single partition, grouped by key, and the keys whose
+    * max(hit) is false are the misses. Orders is never shuffled, only
+    * the request and its hit rows are, and the aggregation needs no
+    * exchange of its own. A null id matches no order, so it is reported
+    * as missing (first, in the sort). */
   def missingIds(s: SparkSession, dir: String, ids: DataFrame): DataFrame = {
     val keyed = ids.toDF("custkey")
     val hit = Tables.orders(s, dir)
       .join(broadcast(keyed), col("o_custkey") === col("custkey"), "left_semi")
-      .select(col("o_custkey").as("custkey")).distinct()
-    keyed.join(broadcast(hit), Seq("custkey"), "left_anti")
-      .select(col("custkey").as("glass_id")).distinct()
-      .orderBy("glass_id")
+      .select(col("o_custkey").as("custkey"), lit(true).as("hit"))
+    keyed.select(col("custkey"), lit(false).as("hit")).unionByName(hit)
+      .repartition(1)
+      .groupBy(col("custkey").as("glass_id")).agg(max(col("hit")).as("hit"))
+      .filter(!col("hit")).select("glass_id")
+      .sortWithinPartitions("glass_id")
   }
 
   /** [[glassHistory]] with the reference's raise-on-miss contract: any
@@ -72,50 +106,35 @@ object QueryApi {
 
   /** glass_data (reference eda_query.py:174-187, dbs/auto.py:41-62): the
     * per-(glass, step, start_time) detail lookup — the 50-process pool
-    * becomes one equi-join from the history relation. */
+    * becomes one equi-join from the history relation (joined without
+    * its edge sort when it is a [[glassHistory]] answer). */
   def glassData(s: SparkSession, dir: String, history: DataFrame): DataFrame = {
     Tables.lineitem(s, dir)
-      .join(history.select(col("step_id"), col("glass_id"), col("glass_start_time")),
+      .join(withoutEdgeSort(history).select(col("step_id"), col("glass_id"), col("glass_start_time")),
         col("l_orderkey") === col("step_id"))
       .select(col("glass_id"), col("step_id"), col("glass_start_time"),
               col("l_linenumber").as("site"), col("l_quantity").as("param_value"))
-      .orderBy("glass_id", "step_id", "site")
+      .transform(edgeSort("glass_id", "step_id", "site"))
   }
 
   /** glass_raw_data with the caller-selectable physical strategy flag
     * (reference `subquery=True/False`, eda_query.py:216-231, D3):
-    *  - `subquery = true`  → the correlated-IN phrasing through the SQL
-    *    parser (Catalyst decorrelates it);
+    *  - `subquery = true`  → the IN-subquery phrasing
+    *    (`o_custkey IN (SELECT custkey FROM ids)`, built with
+    *    `Column.isin(Dataset)`; Catalyst decorrelates it);
     *  - `subquery = false` → the hand-decorrelated semi-join.
     * Both produce the same relation — the reference's own timing harness
     * cross-checked exactly this, and ApiSpec keeps doing so. */
-  private val viewSeq = new java.util.concurrent.atomic.AtomicLong()
-
   def glassRawData(s: SparkSession, dir: String, ids: DataFrame,
-                   subquery: Boolean): DataFrame = {
-    val keyed = ids.toDF("custkey")
-    if (subquery) {
-      // per-call view names so concurrent callers can't interleave; the
-      // views are dropped before returning — s.sql analyzes eagerly, so
-      // the returned plan no longer needs them and leaving them would
-      // leak catalog entries for the session's lifetime
-      val n = viewSeq.incrementAndGet()
-      Tables.lineitem(s, dir).createOrReplaceTempView(s"api_lineitem_$n")
-      Tables.orders(s, dir).createOrReplaceTempView(s"api_orders_$n")
-      keyed.createOrReplaceTempView(s"api_ids_$n")
-      try s.sql(
-        s"""SELECT o.o_custkey AS glass_id, l.l_orderkey AS step_id,
-          |       l.l_linenumber AS site, l.l_quantity AS param_value
-          |FROM api_lineitem_$n l JOIN api_orders_$n o ON l.l_orderkey = o.o_orderkey
-          |WHERE o.o_custkey IN (SELECT custkey FROM api_ids_$n)
-          |ORDER BY glass_id, step_id, site""".stripMargin)
-      finally {
-        s.catalog.dropTempView(s"api_lineitem_$n")
-        s.catalog.dropTempView(s"api_orders_$n")
-        s.catalog.dropTempView(s"api_ids_$n")
-      }
-    } else glassRawDataFrom(Tables.lineitem(s, dir), Tables.orders(s, dir), ids)
-  }
+                   subquery: Boolean): DataFrame =
+    if (subquery)
+      Tables.lineitem(s, dir)
+        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
+        .where(col("o_custkey").isin(ids.toDF("custkey")))
+        .select(col("o_custkey").as("glass_id"), col("l_orderkey").as("step_id"),
+                col("l_linenumber").as("site"), col("l_quantity").as("param_value"))
+        .transform(edgeSort("glass_id", "step_id", "site"))
+    else glassRawDataFrom(Tables.lineitem(s, dir), Tables.orders(s, dir), ids)
 
   /** Source-agnostic form of the decorrelated pipeline: the same program
     * over ANY lineitem/orders relations — parquet in tests,
@@ -131,7 +150,7 @@ object QueryApi {
         col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("glass_id"), col("l_orderkey").as("step_id"),
               col("l_linenumber").as("site"), col("l_quantity").as("param_value"))
-      .orderBy("glass_id", "step_id", "site")
+      .transform(edgeSort("glass_id", "step_id", "site"))
   }
 
   /** The map-shaped result the reference's API hands back

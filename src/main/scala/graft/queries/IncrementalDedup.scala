@@ -93,17 +93,10 @@ object IncrementalDedup extends QueryModule {
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
 
   /** Same staleness contract as the PQ index: the artifact key folds in
-    * the documents table's file names/lengths/mtimes, so a regenerated
+    * the documents table's [[Tables.fingerprint]], so a regenerated
     * corpus under the same path keys to a fresh index. Metadata only. */
-  private[graft] def dataFingerprint(s: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stats =
-      if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).toSeq else Seq(fs.getFileStatus(p))
-    val sig = stats.map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    md5key(s"$dir#dedup#$sig")
-  }
+  private[graft] def dataFingerprint(s: SparkSession, dir: String): String =
+    md5key(s"$dir#dedup#${Tables.fingerprint(s, s"$dir/documents.parquet")}")
 
   private[graft] def indexPath(s: SparkSession, dir: String): String =
     s"$indexRoot/dedup-${dataFingerprint(s, dir)}"

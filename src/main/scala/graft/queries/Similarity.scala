@@ -2131,20 +2131,14 @@ object Similarity extends QueryModule {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
 
-  /** Cheap source fingerprint: names, lengths, and mtimes of the
-    * embeddings table's files. Folded into the index key, so a corpus
+  /** Cheap source fingerprint: the embeddings table's
+    * [[Tables.fingerprint]] (names, lengths and mtimes of its files,
+    * hashed with the dir). Folded into the index key, so a corpus
     * regenerated under the SAME path gets a fresh index instead of
     * silently serving codes built from the old data — the staleness
     * hazard a path-only key carries. FS metadata only; never reads rows. */
-  private[graft] def pqDataFingerprint(s: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stats =
-      if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).toSeq else Seq(fs.getFileStatus(p))
-    val sig = stats.map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-    md5key(s"$dir#$sig")
-  }
+  private[graft] def pqDataFingerprint(s: SparkSession, dir: String): String =
+    md5key(s"$dir#${Tables.fingerprint(s, s"$dir/embeddings.parquet")}")
 
   private[graft] def pqIndexPath(s: SparkSession, dir: String): String =
     s"$pqIndexRoot/${pqDataFingerprint(s, dir)}"
