@@ -39,10 +39,7 @@ object QueryApi {
     * under the join as one more request-sized shuffle and job. Any
     * other plan is returned as it is. */
   private def withoutEdgeSort(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
-    case s: Sort if !s.global => s.child match {
-      case r: Repartition if r.numPartitions == 1 && r.shuffle => Shim.ofRows(df.sparkSession, r.child)
-      case _ => df
-    }
+    case Sort(_, false, Repartition(1, true, child), _) => Shim.ofRows(df.sparkSession, child)
     case _ => df
   }
 

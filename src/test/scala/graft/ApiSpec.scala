@@ -126,16 +126,18 @@ class ApiSpec extends SparkTestBase {
       case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
     }
 
-  private def calls(req: Seq[Option[Long]]): Seq[(String, () => DataFrame)] = Seq(
-    "history" -> (() => QueryApi.glassHistory(spark, sfDir, request(req))),
+  private def calls: Seq[(String, () => DataFrame)] = Seq(
+    "history" -> (() => QueryApi.glassHistory(spark, sfDir, request(edgeReq))),
     "data" -> (() => QueryApi.glassData(spark, sfDir,
-      QueryApi.glassHistory(spark, sfDir, request(req)))),
-    "raw_sql" -> (() => QueryApi.glassRawData(spark, sfDir, request(req), subquery = true)),
-    "raw_join" -> (() => QueryApi.glassRawData(spark, sfDir, request(req), subquery = false)),
-    "missing" -> (() => QueryApi.missingIds(spark, sfDir, request(req))))
+      QueryApi.glassHistory(spark, sfDir, request(edgeReq)))),
+    "raw_sql" -> (() => QueryApi.glassRawData(spark, sfDir, request(edgeReq), subquery = true)),
+    "raw_join" -> (() => QueryApi.glassRawData(spark, sfDir, request(edgeReq), subquery = false)),
+    "missing" -> (() => QueryApi.missingIds(spark, sfDir, request(edgeReq))))
 
-  // Spark jobs per warm call on the fixture: the sampling job of a
-  // range-partitioned sort, or a schema inference, would each add one.
+  // Spark jobs per warm call on the fixture (history: broadcast the
+  // request, the semi-join's map stage, the sorted result); the
+  // sampling job of a range-partitioned sort, or a schema inference,
+  // would each add one.
   private val jobCeiling = Map("history" -> 3, "data" -> 4, "raw_sql" -> 4,
     "raw_join" -> 4, "missing" -> 3)
 
@@ -149,10 +151,10 @@ class ApiSpec extends SparkTestBase {
         String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull),
         e.stageInfos.map(_.details).mkString("\n")))
     }
-    calls(edgeReq).foreach(_._2().collect()) // warm: every table's schema is known
+    calls.foreach(_._2().collect()) // warm: every table's schema is known
     sc.addSparkListener(listener)
     try {
-      for ((name, call) <- calls(edgeReq)) {
+      for ((name, call) <- calls) {
         sc.setJobGroup(name, s"api $name")
         val df = call()
         assert(rangeExchanges(df.queryExecution.executedPlan).isEmpty,
