@@ -148,6 +148,29 @@ class IncrementalDedupSpec extends SparkTestBase {
     }
   }
 
+  test("two takedown requests on one base publish two tombstones, each with its own priced ids") {
+    // a tombstone keyed only by its base path would let the second
+    // request find the first one's marker and serve its stale ids
+    withTempRoot { _ =>
+      import org.apache.spark.sql.functions.col
+      val idx = IncrementalDedup.buildIndex(spark, sfDir)
+      val roster = spark.read.parquet(s"$idx/exact")
+        .select(col("keeper").as("doc_id"))
+      val base = IncrementalDedup.tombPath(spark, sfDir)
+      def ids(t: String) = spark.read.parquet(s"$t/ids").collect().map(_.getLong(0)).toSet
+      def want(m: Int) = roster.filter(col("doc_id") % 7 === m)
+        .collect().map(_.getLong(0)).toSet
+      val t1 = IncrementalDedup.takedown(spark, roster.filter(col("doc_id") % 7 === 3), idx, base)
+      val t2 = IncrementalDedup.takedown(spark, roster.filter(col("doc_id") % 7 === 5), idx, base)
+      assert(want(3).nonEmpty && want(5).nonEmpty, "fixture requests are empty — test vacuous")
+      assert(ids(t1) == want(3), "first tombstone does not hold the first request")
+      assert(ids(t2) == want(5), "second request served the first request's tombstone")
+      // replaying the first request lands on its own tombstone again
+      assert(IncrementalDedup.takedown(spark,
+        roster.filter(col("doc_id") % 7 === 3), idx, base) == t1)
+    }
+  }
+
   test("q162 retention window: retired-era content is readmitted, live-era still blocks") {
     import spark.implicits._
     withTempRoot { root =>

@@ -47,6 +47,30 @@ class IncrementalIndexSpec extends SparkTestBase {
     }
   }
 
+  test("two vector takedown requests on one chain publish two tombstones, each with its own priced ids") {
+    // a tombstone keyed only by its base path would let the second
+    // request find the first one's marker and serve its stale ids
+    withTempRoot { _ =>
+      import org.apache.spark.sql.functions.col
+      val gen1 = Similarity.ingestIncBatch(spark, sfDir)
+      val gens = Seq(s"${Similarity.incIndexRoot(spark, sfDir)}/gen0", gen1)
+      val roster = gens.map(g => spark.read.parquet(s"$g/codes").select("vec_id"))
+        .reduce(_ unionByName _).distinct()
+      val base = s"${Similarity.incIndexRoot(spark, sfDir)}/tomb"
+      def ids(t: String) = spark.read.parquet(s"$t/ids").collect().map(_.getLong(0)).toSet
+      def want(m: Int) = roster.filter(col("vec_id") % 7 === m)
+        .collect().map(_.getLong(0)).toSet
+      val t1 = Similarity.pqTakedown(spark, roster.filter(col("vec_id") % 7 === 3), gens, base)
+      val t2 = Similarity.pqTakedown(spark, roster.filter(col("vec_id") % 7 === 5), gens, base)
+      assert(want(3).nonEmpty && want(5).nonEmpty, "fixture requests are empty — test vacuous")
+      assert(ids(t1) == want(3), "first tombstone does not hold the first request")
+      assert(ids(t2) == want(5), "second request served the first request's tombstone")
+      // replaying the first request lands on its own tombstone again
+      assert(Similarity.pqTakedown(spark,
+        roster.filter(col("vec_id") % 7 === 3), gens, base) == t1)
+    }
+  }
+
   test("a takedown against the COMPACTED vector artifact composes: compaction is invisible to later lifecycle ops") {
     // the lexical family's claim (LexIndexSpec), vector edition: after
     // a tombstone is physically folded in, a later request that
