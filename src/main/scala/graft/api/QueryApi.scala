@@ -60,9 +60,13 @@ object QueryApi {
   /** The reference's typed miss signal (dbs/auto.py:13, raised at :37
     * when a history lookup returns no rows). A distributed lookup can't
     * raise per-id mid-plan, so the primary surface is [[missingIds]];
-    * this exception is the strict-caller adapter over it. */
-  final case class GlassDoesNotExist(glassIds: Seq[Long])
-    extends IllegalArgumentException(s"(type=${glassIds.mkString(",")})")
+    * this exception is the strict-caller adapter over it. `glassIds`
+    * are the missing non-null ids in order; `nullId` says the request
+    * also held a null id, which the message names first (where
+    * [[missingIds]] sorts it). */
+  final case class GlassDoesNotExist(glassIds: Seq[Long], nullId: Boolean = false)
+    extends IllegalArgumentException(
+      s"(type=${((if (nullId) Seq("null") else Nil) ++ glassIds.map(_.toString)).mkString(",")})")
 
   /** The miss surface of [[glassHistory]] (reference GlassDoesNotExist,
     * dbs/auto.py:13,37): the requested ids with NO history row, as a
@@ -96,8 +100,10 @@ object QueryApi {
     * naming ALL missing ids (the relational check is request-bounded —
     * the one collect is over [[missingIds]], never over history). */
   def glassHistoryStrict(s: SparkSession, dir: String, ids: DataFrame): DataFrame = {
-    val miss = missingIds(s, dir, ids).collect().map(_.getLong(0)).toSeq
-    if (miss.nonEmpty) throw GlassDoesNotExist(miss)
+    val miss = missingIds(s, dir, ids).collect().toSeq
+    if (miss.nonEmpty)
+      throw GlassDoesNotExist(miss.filterNot(_.isNullAt(0)).map(_.getLong(0)),
+        nullId = miss.exists(_.isNullAt(0)))
     glassHistory(s, dir, ids)
   }
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryModule, Tables}
+import graft.{Artifacts, QueryModule, Tables}
 
 /** Corpus curation operators a large-scale training-data pipeline runs
   * AFTER dedup (Dedup.scala) and quality scoring (TextPipeline.scala):
@@ -1601,7 +1601,7 @@ object Curation extends QueryModule {
     * relations are corpus-keyed artifacts a production pipeline
     * materializes once per corpus snapshot, not once per consumer. The
     * first consumer builds + publishes (fingerprinted, marker-last —
-    * the q78 contract via IncrementalDedup.publish); every later
+    * the q78 contract via Artifacts.publish); every later
     * consumer serves from the 2-column parquet, so the composition's
     * plan carries four scans instead of four detector stacks. No oracle
     * change: artifact rows ARE the deterministic parent relations, and
@@ -1610,9 +1610,7 @@ object Curation extends QueryModule {
   private def verdictArtifact(s: SparkSession, dir: String, name: String)
                              (build: => DataFrame): DataFrame = {
     val fp = IncrementalDedup.dataFingerprint(s, dir)
-    val path = new org.apache.hadoop.fs.Path(
-      s"${IncrementalDedup.indexRoot}/verdict-$name-$fp")
-    IncrementalDedup.publish(s, path) { tmp =>
+    val path = Artifacts.publish(s, s"${Artifacts.root}/verdict-$name-$fp") { tmp =>
       build.write.mode("overwrite").parquet(s"$tmp/keep")
     }
     s.read.parquet(s"$path/keep")

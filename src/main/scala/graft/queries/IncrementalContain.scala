@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QueryModule, Tables}
+import graft.{Artifacts, QueryModule, Tables}
 
 /** q179 — INCREMENTAL CONTAINMENT INTAKE: q172's asymmetric
   * set-containment detector in the production artifact shape (the q84
@@ -57,22 +57,18 @@ import graft.{QueryModule, Tables}
   * contained_in_batch).
   */
 object IncrementalContain extends QueryModule {
-  import IncrementalDedup.{ShardBase, assertRekeyDisjoint, publish}
+  import IncrementalDedup.{ShardBase, assertRekeyDisjoint}
 
   private[graft] val MinSet = 4    // contained side must carry >= 4 shingles
   private val SnipMinToks = 12     // snippets cut docs with >= 12 tokens
 
-  private def md5key(x: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-
   private[graft] def indexPath(s: SparkSession, dir: String): String = {
     val fp = IncrementalDedup.dataFingerprint(s, dir)
-    s"${IncrementalDedup.indexRoot}/contain-${md5key(s"contain#$fp")}"
+    s"${Artifacts.root}/contain-${Artifacts.key(s"contain#$fp")}"
   }
   private[graft] def shardPath(s: SparkSession, dir: String): String = {
     val fp = IncrementalDedup.dataFingerprint(s, dir)
-    s"${IncrementalDedup.indexRoot}/contain-shard-${md5key(s"containshard#$fp")}"
+    s"${Artifacts.root}/contain-shard-${Artifacts.key(s"containshard#$fp")}"
   }
 
   private def corpusDocs(s: SparkSession, dir: String): DataFrame =
@@ -98,9 +94,8 @@ object IncrementalContain extends QueryModule {
     * frozen df) from the given docs — the era-granular build q183's
     * retention window composes; [[buildIndex]] is the single-era case. */
   private[graft] def buildGenIndex(s: SparkSession, docs: DataFrame,
-                                   outPath: String): String = {
-    val path = new org.apache.hadoop.fs.Path(outPath)
-    publish(s, path) { tmp =>
+                                   outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       assertRekeyDisjoint(docs, "contain")
       val sets = Dedup.shingleSetsOf(docs)
       sets.write.mode("overwrite").parquet(s"$tmp/sets")
@@ -109,20 +104,15 @@ object IncrementalContain extends QueryModule {
       postings.groupBy("tok").agg(count(lit(1)).as("df"))
         .write.mode("overwrite").parquet(s"$tmp/df")
     }
-    path.toString
-  }
 
   /** Offline: persist postings, verification sets, and frozen df. */
   private[graft] def buildIndex(s: SparkSession, dir: String): String =
     buildGenIndex(s, corpusDocs(s, dir), indexPath(s, dir))
 
-  private[graft] def stageShard(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(shardPath(s, dir))
-    publish(s, path) { tmp =>
+  private[graft] def stageShard(s: SparkSession, dir: String): String =
+    Artifacts.publish(s, shardPath(s, dir)) { tmp =>
       shardDocs(s, dir).write.mode("overwrite").parquet(s"$tmp/docs")
     }
-    path.toString
-  }
 
   /** Postings with each container's verification set attached
     * (cdoc, tok, s2, n2) — the static side of both the batch serve and
@@ -274,9 +264,8 @@ object IncrementalContain extends QueryModule {
   /** Fold kept shard docs into a new artifact generation: postings and
     * sets union (re-keyed ids are disjoint by the guard), df summed. */
   private[graft] def ingest(s: SparkSession, shard: DataFrame,
-                            idxPath: String, outPath: String): String = {
-    val path = new org.apache.hadoop.fs.Path(outPath)
-    publish(s, path) { tmp =>
+                            idxPath: String, outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       val kept = shard.join(
         verdictsAgainst(s, shard, idxPath).filter(col("keep")).select("doc_id"), "doc_id")
       val keptSets = Dedup.shingleSetsOf(kept)
@@ -290,8 +279,6 @@ object IncrementalContain extends QueryModule {
         .groupBy("tok").agg(sum(col("df")).as("df"))
         .write.mode("overwrite").parquet(s"$tmp/df")
     }
-    path.toString
-  }
 
   private def q179(s: SparkSession, dir: String): DataFrame = {
     val idx = buildIndex(s, dir)
@@ -315,34 +302,15 @@ object IncrementalContain extends QueryModule {
   // corpus is never read.
   private[graft] def tombPath(s: SparkSession, dir: String): String = {
     val fp = IncrementalDedup.dataFingerprint(s, dir)
-    s"${IncrementalDedup.indexRoot}/contain-tomb-${md5key(s"containtomb#$fp")}"
+    s"${Artifacts.root}/contain-tomb-${Artifacts.key(s"containtomb#$fp")}"
   }
 
-  /** Publish the redaction tombstone: the request priced against the
-    * index's own sets roster (unknown ids drop — the q133 contract).
-    * The published path folds in a digest of the PRICED id set (the
-    * verdictArtifact discipline), so two different requests against the
-    * same base path can never collide on the marker gate — without the
-    * digest, a second call with a different ids set would silently
-    * no-op and serve the first request's stale tombstone (round-17
-    * ADVICE item). The request is broadcast-small by contract, so the
-    * one bounded collect here is control-plane, not data-plane. */
+  /** Publish the redaction tombstone under `outBase`: the request
+    * priced against the index's own sets roster (unknown ids drop — the
+    * q133 contract; [[Artifacts.tombstone]]). */
   private[graft] def takedown(s: SparkSession, ids: DataFrame,
-                              idxPath: String, outPath: String): String = {
-    val priced = s.read.parquet(s"$idxPath/sets").select("doc_id")
-      .join(broadcast(ids), "doc_id").distinct()
-    val pricedIds = priced.collect().map(_.getLong(0)).sorted
-    val full = s"$outPath-${md5key(pricedIds.mkString(","))}"
-    val path = new org.apache.hadoop.fs.Path(full)
-    publish(s, path) { tmp =>
-      s.createDataFrame(s.sparkContext.parallelize(
-          pricedIds.toIndexedSeq.map(org.apache.spark.sql.Row(_)), 1),
-          new org.apache.spark.sql.types.StructType()
-            .add("doc_id", org.apache.spark.sql.types.LongType, nullable = false))
-        .write.mode("overwrite").parquet(s"$tmp/ids")
-    }
-    full
-  }
+                              idxPath: String, outBase: String): String =
+    Artifacts.tombstone(s, s.read.parquet(s"$idxPath/sets").select("doc_id"), ids, outBase)
 
   /** q179's serve with redaction: `container` nulls where the cited
     * min-container is tombstoned; verdict/keep are untouched (the
@@ -390,7 +358,7 @@ object IncrementalContain extends QueryModule {
   // non-vacuously exercised on the driver corpus.
   private[graft] def genPath(s: SparkSession, dir: String, tag: String): String = {
     val fp = IncrementalDedup.dataFingerprint(s, dir)
-    s"${IncrementalDedup.indexRoot}/contain-gen$tag-${md5key(s"containgen$tag#$fp")}"
+    s"${Artifacts.root}/contain-gen$tag-${Artifacts.key(s"containgen$tag#$fp")}"
   }
 
   private def q183(s: SparkSession, dir: String): DataFrame = {

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QueryModule, Tables}
+import graft.{Artifacts, QueryModule, Tables}
 
 /** q84 — INCREMENTAL DEDUP AGAINST A PERSISTED CORPUS INDEX: the
   * production intake shape. A 100 TB corpus is deduped ONCE (q31/q33's
@@ -59,14 +59,6 @@ import graft.{QueryModule, Tables}
   */
 object IncrementalDedup extends QueryModule {
 
-  /** Artifact root shared by every persisted-index family (dedup,
-    * media, prepare, pack, lexical): env var, then system property,
-    * then the tmpdir fallback. */
-  private[graft] def indexRoot: String =
-    sys.env.get("SPARK_GRAFT_INDEX_DIR")
-      .orElse(sys.props.get("graft.index.dir"))
-      .getOrElse(s"${System.getProperty("java.io.tmpdir")}/graft_dedup_index")
-
   /** Shard re-key base shared by the intake families: a day's doc ids
     * land above every corpus id, making append order = doc_id order
     * and additivity-by-disjointness true by construction. */
@@ -88,49 +80,16 @@ object IncrementalDedup extends QueryModule {
           "re-keyed shard ids would collide with corpus ids; raise the re-key base")
   }
 
-  private def md5key(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-
   /** Same staleness contract as the PQ index: the artifact key folds in
     * the documents table's [[Tables.fingerprint]], so a regenerated
     * corpus under the same path keys to a fresh index. Metadata only. */
   private[graft] def dataFingerprint(s: SparkSession, dir: String): String =
-    md5key(s"$dir#dedup#${Tables.fingerprint(s, s"$dir/documents.parquet")}")
+    Artifacts.key(s"$dir#dedup#${Tables.fingerprint(s, s"$dir/documents.parquet")}")
 
   private[graft] def indexPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/dedup-${dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/dedup-${dataFingerprint(s, dir)}"
   private[graft] def shardPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/dedup-shard-${dataFingerprint(s, dir)}"
-
-  private[graft] def fsFor(s: SparkSession, path: org.apache.hadoop.fs.Path) =
-    path.getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  private[graft] def complete(fs: org.apache.hadoop.fs.FileSystem,
-                       p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(p, "_COMPLETE"))
-
-  /** The q78 publication contract: assemble under a private temp, marker
-    * LAST inside the temp, atomic rename into place, concurrent winner
-    * kept (same fingerprint ⇒ same deterministic content). */
-  private[graft] def publish(s: SparkSession, path: org.apache.hadoop.fs.Path)
-                     (write: org.apache.hadoop.fs.Path => Unit): Unit = {
-    val fs = fsFor(s, path)
-    if (complete(fs, path)) return
-    val tmp = new org.apache.hadoop.fs.Path(
-      path.getParent, s".${path.getName}.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    write(tmp)
-    fs.create(new org.apache.hadoop.fs.Path(tmp, "_COMPLETE"), true).close() // marker LAST
-    fs.mkdirs(path.getParent)
-    if (fs.exists(path) && !complete(fs, path)) fs.delete(path, true) // evict half-built squatter
-    if (!fs.exists(path)) {
-      if (!fs.rename(tmp, path) && !complete(fs, path))
-        throw new IllegalStateException(s"could not publish dedup artifact at $path")
-    }
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (!complete(fs, path))
-      throw new IllegalStateException(s"dedup artifact at $path incomplete after publish")
-  }
+    s"${Artifacts.root}/dedup-shard-${dataFingerprint(s, dir)}"
 
   private def corpusDocs(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).select("doc_id", "text").filter(col("doc_id") % 5 =!= 4)
@@ -147,9 +106,8 @@ object IncrementalDedup extends QueryModule {
   }
 
   /** Offline: persist the corpus's exact-hash state and LSH band-key set. */
-  private[graft] def buildIndex(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(indexPath(s, dir))
-    publish(s, path) { tmp =>
+  private[graft] def buildIndex(s: SparkSession, dir: String): String =
+    Artifacts.publish(s, indexPath(s, dir)) { tmp =>
       val corpus = corpusDocs(s, dir)
       assertRekeyDisjoint(corpus, "dedup")
       corpus.groupBy(md5(col("text")).as("h"))
@@ -159,19 +117,14 @@ object IncrementalDedup extends QueryModule {
         .select("band", "bandkey").distinct()
         .write.mode("overwrite").parquet(s"$tmp/bands")
     }
-    path.toString
-  }
 
   /** Stage the day's intake shard as its own artifact (in production the
     * shard ARRIVES as files; staging it keeps q84's serving plan free of
     * any documents-table scan, which PlanSpec asserts). */
-  private[graft] def stageShard(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(shardPath(s, dir))
-    publish(s, path) { tmp =>
+  private[graft] def stageShard(s: SparkSession, dir: String): String =
+    Artifacts.publish(s, shardPath(s, dir)) { tmp =>
       shardDocs(s, dir).write.mode("overwrite").parquet(s"$tmp/docs")
     }
-    path.toString
-  }
 
   /** Online: verdict every shard doc against the index ONLY. */
   private[graft] def verdictsAgainst(s: SparkSession, shard: DataFrame,
@@ -220,9 +173,8 @@ object IncrementalDedup extends QueryModule {
     * so the union is conflict-free; replaying the same shard against the
     * new generation keeps nothing, making re-ingest a content no-op. */
   private[graft] def ingest(s: SparkSession, shard: DataFrame,
-                            idxPath: String, outPath: String): String = {
-    val path = new org.apache.hadoop.fs.Path(outPath)
-    publish(s, path) { tmp =>
+                            idxPath: String, outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       val kept = shard.join(
         verdictsAgainst(s, shard, idxPath).filter(col("keep")).select("doc_id"), "doc_id")
       s.read.parquet(s"$idxPath/exact")
@@ -234,8 +186,6 @@ object IncrementalDedup extends QueryModule {
         .distinct()
         .write.mode("overwrite").parquet(s"$tmp/bands")
     }
-    path.toString
-  }
 
   private def q84(s: SparkSession, dir: String): DataFrame = {
     val idx = buildIndex(s, dir)       // offline, cached by fingerprint
@@ -272,20 +222,15 @@ object IncrementalDedup extends QueryModule {
   // id-free, so one policy covers the trio; q142 lands it on the
   // family whose verdict relation the ledger and specs already audit.
   private[graft] def tombPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/dedup-tomb-${dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/dedup-tomb-${dataFingerprint(s, dir)}"
 
-  /** Publish the redaction tombstone: the request priced against the
-    * index's own keeper roster (unknown ids drop — the q133 contract). */
+  /** Publish the redaction tombstone under `outBase`: the request
+    * priced against the index's own keeper roster (unknown ids drop —
+    * the q133 contract; [[Artifacts.tombstone]]). */
   private[graft] def takedown(s: SparkSession, ids: DataFrame,
-                              idxPath: String, outPath: String): String = {
-    val path = new org.apache.hadoop.fs.Path(outPath)
-    publish(s, path) { tmp =>
-      s.read.parquet(s"$idxPath/exact").select(col("keeper").as("doc_id"))
-        .join(broadcast(ids), "doc_id").distinct()
-        .write.mode("overwrite").parquet(s"$tmp/ids")
-    }
-    outPath
-  }
+                              idxPath: String, outBase: String): String =
+    Artifacts.tombstone(s,
+      s.read.parquet(s"$idxPath/exact").select(col("keeper").as("doc_id")), ids, outBase)
 
   /** q84's serve with redaction: corpus_keeper nulls where the cited
     * keeper is tombstoned; verdict/keep are untouched (the content
@@ -401,13 +346,12 @@ object IncrementalDedup extends QueryModule {
   // corpus is never read at serve time (generations + staged shard
   // only); windowing is O(live generations), retirement is free.
   private[graft] def genPath(s: SparkSession, dir: String, tag: String): String =
-    s"$indexRoot/dedupe$tag-${dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/dedupe$tag-${dataFingerprint(s, dir)}"
 
   /** One era's index generation from the given docs. */
   private[graft] def buildGenIndex(s: SparkSession, docs: DataFrame,
-                                   path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    publish(s, p) { tmp =>
+                                   path: String): String =
+    Artifacts.publish(s, path) { tmp =>
       assertRekeyDisjoint(docs, "dedup-gen")
       docs.groupBy(md5(col("text")).as("h"))
         .agg(min(col("doc_id")).as("keeper"))
@@ -416,8 +360,6 @@ object IncrementalDedup extends QueryModule {
         .select("band", "bandkey").distinct()
         .write.mode("overwrite").parquet(s"$tmp/bands")
     }
-    path
-  }
 
   private def q162(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "text")

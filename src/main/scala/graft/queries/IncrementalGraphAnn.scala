@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.QueryModule
+import graft.{Artifacts, QueryModule}
 
 /** q188/q189 — the INCREMENTAL GRAPH-ANN serving family (the q84/q87
   * move on the q184 graph index — the catalog's eighth persisted
@@ -63,13 +63,8 @@ import graft.QueryModule
   * content stops influencing results entirely).
   */
 object IncrementalGraphAnn extends QueryModule {
-  import IncrementalDedup.{indexRoot, publish}
   import Similarity.{GraphBeam, GraphBuildProbe, GraphEntries, GraphK,
     GraphPerCell, GraphRounds, NumQueries, PivotPhase, PivotStride}
-
-  private def md5key(x: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
 
   /** Data fingerprint + the BUILD CONFIG: a graph artifact is only
     * reusable by the config that built it — a registered-density change
@@ -82,19 +77,19 @@ object IncrementalGraphAnn extends QueryModule {
       s"P${GraphBuildProbe}E${GraphEntries}B${GraphBeam}R$GraphRounds"
 
   private[graft] def indexPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/gann-${md5key(s"gann#${fp(s, dir)}")}"
+    s"${Artifacts.root}/gann-${Artifacts.key(s"gann#${fp(s, dir)}")}"
   private[graft] def genPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/gann-gen1-${md5key(s"ganngen1#${fp(s, dir)}")}"
+    s"${Artifacts.root}/gann-gen1-${Artifacts.key(s"ganngen1#${fp(s, dir)}")}"
   private[graft] def eraPath(s: SparkSession, dir: String, tag: String): String =
-    s"$indexRoot/gann-era$tag-${md5key(s"gannera$tag#${fp(s, dir)}")}"
+    s"${Artifacts.root}/gann-era$tag-${Artifacts.key(s"gannera$tag#${fp(s, dir)}")}"
   private[graft] def compPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/gann-comp-${md5key(s"ganncomp#${fp(s, dir)}")}"
+    s"${Artifacts.root}/gann-comp-${Artifacts.key(s"ganncomp#${fp(s, dir)}")}"
   private[graft] def batchPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/gann-batch-${md5key(s"gannbatch#${fp(s, dir)}")}"
+    s"${Artifacts.root}/gann-batch-${Artifacts.key(s"gannbatch#${fp(s, dir)}")}"
   private[graft] def queryPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/gann-q-${md5key(s"gannq#${fp(s, dir)}")}"
+    s"${Artifacts.root}/gann-q-${Artifacts.key(s"gannq#${fp(s, dir)}")}"
   private[graft] def tombBase(s: SparkSession, dir: String): String =
-    s"$indexRoot/gann-tomb-${md5key(s"ganntomb#${fp(s, dir)}")}"
+    s"${Artifacts.root}/gann-tomb-${Artifacts.key(s"ganntomb#${fp(s, dir)}")}"
 
   /** All vectors, rolled up: (vec_id, qa, n2) — the q184 quantization. */
   private def allVecs(s: SparkSession, dir: String): DataFrame =
@@ -143,9 +138,8 @@ object IncrementalGraphAnn extends QueryModule {
     * serve is scatter-gather over era walks, not a union walk). */
   private[graft] def buildGenIndex(s: SparkSession, dir: String,
                                    pred: org.apache.spark.sql.Column,
-                                   outPath: String): String = {
-    val path = new org.apache.hadoop.fs.Path(outPath)
-    publish(s, path) { tmp =>
+                                   outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       val base = allVecs(s, dir).filter(pred)
       base.cache()
       val pivots = base.filter(col("vec_id") % PivotStride === PivotPhase)
@@ -159,27 +153,19 @@ object IncrementalGraphAnn extends QueryModule {
         .write.mode("overwrite").parquet(s"$tmp/adj")
       aff.unpersist(); base.unpersist()
     }
-    path.toString
-  }
 
   /** Stage the day's batch (quantized at stage time, like the shard
     * docs of the text families) and the query workload. */
-  private[graft] def stageBatch(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(batchPath(s, dir))
-    publish(s, path) { tmp =>
+  private[graft] def stageBatch(s: SparkSession, dir: String): String =
+    Artifacts.publish(s, batchPath(s, dir)) { tmp =>
       allVecs(s, dir).filter(col("vec_id") % 5 === 4)
         .write.mode("overwrite").parquet(s"$tmp/vecs")
     }
-    path.toString
-  }
-  private[graft] def stageQueries(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(queryPath(s, dir))
-    publish(s, path) { tmp =>
+  private[graft] def stageQueries(s: SparkSession, dir: String): String =
+    Artifacts.publish(s, queryPath(s, dir)) { tmp =>
       allVecs(s, dir).filter(col("vec_id") < NumQueries)
         .write.mode("overwrite").parquet(s"$tmp/vecs")
     }
-    path.toString
-  }
 
   /** Fold the staged batch into a new generation: batch assigned and
     * probed against the FROZEN pivots; its out-edges drawn from base ∪
@@ -187,9 +173,8 @@ object IncrementalGraphAnn extends QueryModule {
     * back-links that make the new content reachable). Vectors/members
     * union; pivots copy FROZEN. */
   private[graft] def ingest(s: SparkSession, idxPath: String,
-                            bPath: String, outPath: String): String = {
-    val path = new org.apache.hadoop.fs.Path(outPath)
-    publish(s, path) { tmp =>
+                            bPath: String, outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       val pivots = s.read.parquet(s"$idxPath/pivots")
       val baseVecs = s.read.parquet(s"$idxPath/vectors")
       val baseMembers = s.read.parquet(s"$idxPath/members")
@@ -210,8 +195,6 @@ object IncrementalGraphAnn extends QueryModule {
       pivots.write.mode("overwrite").parquet(s"$tmp/pivots")
       bEdges.unpersist(); bAff.unpersist(); batch.unpersist()
     }
-    path.toString
-  }
 
   private def tombOf(s: SparkSession, tombPaths: Seq[String]): Option[DataFrame] =
     if (tombPaths.isEmpty) None
@@ -312,25 +295,13 @@ object IncrementalGraphAnn extends QueryModule {
       .select(col("qid"), col("vec_id"), round(col("cos"), 6).as("cosine"), col("rank"))
       .orderBy("qid", "rank")
 
-  /** Publish the takedown tombstone: the request priced against the
-    * generation's own vectors roster, digest folded into the path (the
-    * q182 discipline — two requests can never collide on the marker). */
+  /** Publish the takedown tombstone under `outBase`: the request
+    * priced against the generation's own vectors roster, keyed
+    * `doc_id` as [[dropTomb]] reads it ([[Artifacts.tombstone]]). */
   private[graft] def takedown(s: SparkSession, ids: DataFrame,
-                              idxPath: String, outBase: String): String = {
-    val priced = s.read.parquet(s"$idxPath/vectors").select(col("vec_id").as("doc_id"))
-      .join(broadcast(ids.select(col("doc_id"))), "doc_id").distinct()
-    val pricedIds = priced.collect().map(_.getLong(0)).sorted
-    val full = s"$outBase-${md5key(pricedIds.mkString(","))}"
-    val path = new org.apache.hadoop.fs.Path(full)
-    publish(s, path) { tmp =>
-      s.createDataFrame(s.sparkContext.parallelize(
-          pricedIds.toIndexedSeq.map(org.apache.spark.sql.Row(_)), 1),
-          new org.apache.spark.sql.types.StructType()
-            .add("doc_id", org.apache.spark.sql.types.LongType, nullable = false))
-        .write.mode("overwrite").parquet(s"$tmp/ids")
-    }
-    full
-  }
+                              idxPath: String, outBase: String): String =
+    Artifacts.tombstone(s,
+      s.read.parquet(s"$idxPath/vectors").select(col("vec_id").as("doc_id")), ids, outBase)
 
   /** The ingested (serving) generation — build, stage, ingest; each
     * step marker-gated, so repeat calls only read. Shared by q188/q189
@@ -412,9 +383,8 @@ object IncrementalGraphAnn extends QueryModule {
   // replay, and the two serves may legitimately differ at the
   // entry-frontier margin.
   private[graft] def compact(s: SparkSession, idxPath: String,
-                             tombPaths: Seq[String], outPath: String): String = {
-    val path = new org.apache.hadoop.fs.Path(outPath)
-    publish(s, path) { tmp =>
+                             tombPaths: Seq[String], outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       val tomb = tombOf(s, tombPaths)
       val pivots = s.read.parquet(s"$idxPath/pivots")
       val survPiv = dropTomb(pivots, tomb, Seq("cell"))
@@ -448,8 +418,6 @@ object IncrementalGraphAnn extends QueryModule {
       }
       members.select("vec_id", "cell").write.mode("overwrite").parquet(s"$tmp/members")
     }
-    path.toString
-  }
 
   private def q191(s: SparkSession, dir: String): DataFrame = {
     val gen = servingIndex(s, dir)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{QueryModule, Tables}
+import graft.{Artifacts, QueryModule, Tables}
 import graft.functions.Multimodal
 import graft.functions.Multimodal.MediaRow
 
@@ -19,7 +19,7 @@ import graft.functions.Multimodal.MediaRow
   * daily).
   *
   * The artifact (fingerprinted, marker-last, q78's publication
-  * contract via [[IncrementalDedup.publish]]):
+  * contract via [[Artifacts.publish]]):
   *  - `exact/` — (media_type, fhash, keeper): the full perceptual hash
   *    of every DISTINCT corpus media item (image 64-bit aHash, audio
   *    32-bit envelope hash, video 128-bit keyframe signature) with its
@@ -65,12 +65,10 @@ import graft.functions.Multimodal.MediaRow
   */
 object IncrementalMediaDedup extends QueryModule {
 
-  private def indexRoot: String = IncrementalDedup.indexRoot
-
   private[graft] def indexPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/media-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/media-${IncrementalDedup.dataFingerprint(s, dir)}"
   private[graft] def shardPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/media-shard-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/media-shard-${IncrementalDedup.dataFingerprint(s, dir)}"
 
   /** Synthesize media rows for (doc_id, src) pairs: the row is keyed by
     * doc_id but its CONTENT (modality and payload) is the src doc's —
@@ -153,9 +151,8 @@ object IncrementalMediaDedup extends QueryModule {
   /** Offline: persist the corpus's perceptual-exact state and capped
     * band index. The decode runs HERE, once — serving never re-decodes
     * corpus media. */
-  private[graft] def buildIndex(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(indexPath(s, dir))
-    IncrementalDedup.publish(s, path) { tmp =>
+  private[graft] def buildIndex(s: SparkSession, dir: String): String =
+    Artifacts.publish(s, indexPath(s, dir)) { tmp =>
       val hashes = hashesOf(mediaFor(corpusIds(s, dir)))
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       try {
@@ -166,19 +163,14 @@ object IncrementalMediaDedup extends QueryModule {
           .write.mode("overwrite").parquet(s"$tmp/bands")
       } finally hashes.unpersist()
     }
-    path.toString
-  }
 
   /** Stage the day's media shard as files (in production it ARRIVES as
     * files; staging keeps q101's serving plan free of any documents
     * scan, which PlanSpec asserts). */
-  private[graft] def stageShard(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(shardPath(s, dir))
-    IncrementalDedup.publish(s, path) { tmp =>
+  private[graft] def stageShard(s: SparkSession, dir: String): String =
+    Artifacts.publish(s, shardPath(s, dir)) { tmp =>
       mediaFor(shardIds(s, dir)).write.mode("overwrite").parquet(s"$tmp/media")
     }
-    path.toString
-  }
 
   /** Online: verdict every shard media item against the index ONLY. */
   private[graft] def verdictsAgainst(s: SparkSession, shardMedia: Dataset[MediaRow],
@@ -223,9 +215,8 @@ object IncrementalMediaDedup extends QueryModule {
     * shard against the new generation keeps nothing; re-ingest is a
     * content no-op (IncrementalMediaDedupSpec). */
   private[graft] def ingest(s: SparkSession, shardMedia: Dataset[MediaRow],
-                            idxPath: String, outPath: String): String = {
-    val path = new org.apache.hadoop.fs.Path(outPath)
-    IncrementalDedup.publish(s, path) { tmp =>
+                            idxPath: String, outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       val keptIds = verdictsAgainst(s, shardMedia, idxPath)
         .filter(col("keep")).select("doc_id")
       val kept = hashesOf(shardMedia)
@@ -242,8 +233,6 @@ object IncrementalMediaDedup extends QueryModule {
       unionBands.join(ok, Seq("media_type", "band", "bk"), "left_semi")
         .write.mode("overwrite").parquet(s"$tmp/bands")
     }
-    path.toString
-  }
 
   private def q101(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -403,29 +392,19 @@ object IncrementalMediaDedup extends QueryModule {
   // stops citing the removed id. `bands/` carries member HASHES, not
   // doc ids, so the near-dup probe is already takedown-clean. Tombstone
   // = request ∩ the keeper roster (media never re-decoded, corpus never
-  // read); serving = q101's plan + ONE broadcast left join nulling the
-  // citation. Oracle = q101's composed three-codec ground truth with
-  // the CASE redaction — a hash match proves only the citation column
-  // moves.
+  // read), published by IncrementalDedup.takedown over this index's
+  // `exact/`, which has the dedup index's keeper shape; serving =
+  // q101's plan + ONE broadcast left join nulling the citation. Oracle
+  // = q101's composed three-codec ground truth with the CASE redaction
+  // — a hash match proves only the citation column moves.
   private[graft] def tombPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/media-tomb-${IncrementalDedup.dataFingerprint(s, dir)}"
-
-  private[graft] def takedown(s: SparkSession, ids: DataFrame,
-                              idxPath: String, outPath: String): String = {
-    val path = new org.apache.hadoop.fs.Path(outPath)
-    IncrementalDedup.publish(s, path) { tmp =>
-      s.read.parquet(s"$idxPath/exact").select(col("keeper").as("doc_id"))
-        .join(broadcast(ids), "doc_id").distinct()
-        .write.mode("overwrite").parquet(s"$tmp/ids")
-    }
-    outPath
-  }
+    s"${Artifacts.root}/media-tomb-${IncrementalDedup.dataFingerprint(s, dir)}"
 
   private def q143(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val idx = buildIndex(s, dir)
     val shard = stageShard(s, dir)
-    val t = takedown(s,
+    val t = IncrementalDedup.takedown(s,
       s.read.parquet(s"$idx/exact").select(col("keeper").as("doc_id"))
         .filter(col("doc_id") % 7 === 3),
       idx, tombPath(s, dir))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryModule, Tables}
+import graft.{Artifacts, QueryModule, Tables}
 
 /** q128 — INCREMENTAL PACKED-SHARD INTAKE: the q84 artifact pattern
   * applied to the PACKING family, completing its production shapes —
@@ -17,8 +17,7 @@ import graft.{QueryModule, Tables}
   * corpus token — only the boundary sequence (the trailing partial
   * one) is ever rewritten.
   *
-  * The artifact (fingerprinted, marker-last — [[IncrementalDedup
-  * .publish]]):
+  * The artifact (fingerprinted, marker-last — [[Artifacts.publish]]):
   *  - `seqs/`  — every FULL training sequence of the corpus pack:
   *    (seq_id, n_tokens = SeqLen, n_docs, first_doc, last_doc,
   *    content_hash). Frozen forever: full sequences are immutable
@@ -71,8 +70,6 @@ object IncrementalPack extends QueryModule {
     * (doc_id order) is arrival order: corpus first, then the day. */
   private val ShardBase = IncrementalDedup.ShardBase
 
-  private def indexRoot: String = IncrementalDedup.indexRoot
-
   // "pack3": the roster carries (start_off, n_tokens) alongside the
   // sequence span so the pad-rewrite (q145) can place a removed doc's
   // hole positions from the artifact alone — without ever reading the
@@ -80,9 +77,9 @@ object IncrementalPack extends QueryModule {
   // artifact a completed marker would otherwise serve (fingerprints
   // key the DATA, not the layout; "pack2" added the roster itself).
   private[graft] def indexPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/pack3-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/pack3-${IncrementalDedup.dataFingerprint(s, dir)}"
   private[graft] def shardPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/pack-shard-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/pack-shard-${IncrementalDedup.dataFingerprint(s, dir)}"
 
   private def corpusDocs(s: SparkSession, dir: String): DataFrame =
     Tables.documentsWide(s, dir).select("doc_id", "text")
@@ -179,7 +176,7 @@ object IncrementalPack extends QueryModule {
     * content-bearing rows whose (at most one) partial row becomes the
     * tail, `spans` the doc→sequence-span roster (the removal-request
     * surface — q139). */
-  private def writeGeneration(tmp: org.apache.hadoop.fs.Path,
+  private def writeGeneration(tmp: String,
                               fullSeqs: DataFrame, packed: DataFrame,
                               total: DataFrame, spans: DataFrame): Unit = {
     fullSeqs.write.mode("overwrite").parquet(s"$tmp/seqs")
@@ -202,9 +199,8 @@ object IncrementalPack extends QueryModule {
 
   /** Offline: pack the corpus once, persist frozen full sequences +
     * the one-row packing state. */
-  private[graft] def buildPackState(s: SparkSession, docs: DataFrame, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    IncrementalDedup.publish(s, p) { tmp =>
+  private[graft] def buildPackState(s: SparkSession, docs: DataFrame, path: String): String =
+    Artifacts.publish(s, path) { tmp =>
       IncrementalDedup.assertRekeyDisjoint(docs, "pack")
       // offsets run twice (token rows + the narrow spans roster): the
       // prefix sum is cheap next to the explode it feeds, and only the
@@ -218,16 +214,11 @@ object IncrementalPack extends QueryModule {
         docSpansFromOffsets(offs))
       finally packed.unpersist()
     }
-    path
-  }
 
-  private[graft] def stageShard(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(shardPath(s, dir))
-    IncrementalDedup.publish(s, path) { tmp =>
+  private[graft] def stageShard(s: SparkSession, dir: String): String =
+    Artifacts.publish(s, shardPath(s, dir)) { tmp =>
       shardDocs(s, dir).write.mode("overwrite").parquet(s"$tmp/docs")
     }
-    path.toString
-  }
 
   /** Online: pack the shard at the frozen offset and stitch the
     * boundary sequence — content kept as a string so [[ingest]] can
@@ -291,11 +282,10 @@ object IncrementalPack extends QueryModule {
     * that are now full freeze into `seqs/`; `state/` advances to the
     * new global total and the new trailing partial. Re-running a day
     * against the same input generation is content-identical, and
-    * [[IncrementalDedup.publish]] makes a same-path replay a no-op. */
+    * [[Artifacts.publish]] makes a same-path replay a no-op. */
   private[graft] def ingest(s: SparkSession, shard: DataFrame,
-                            idxPath: String, outPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    IncrementalDedup.publish(s, p) { tmp =>
+                            idxPath: String, outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       val tail = servedTail(s, shard, idxPath)
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       try {
@@ -317,8 +307,6 @@ object IncrementalPack extends QueryModule {
           s.read.parquet(s"$idxPath/docspans").unionByName(shardSpans))
       } finally tail.unpersist()
     }
-    outPath
-  }
 
   private def q128(s: SparkSession, dir: String): DataFrame = {
     val idx = buildPackState(s, corpusDocs(s, dir), indexPath(s, dir))
@@ -762,7 +750,7 @@ object IncrementalPack extends QueryModule {
   //                below the cut shift by exactly 0 with no cut logic).
   // A request that misses the pack folds to the identity (stored tail
   // passes through). The fold is deterministic and marker-published:
-  // a same-path replay is a no-op (IncrementalDedup.publish).
+  // a same-path replay is a no-op (Artifacts.publish).
   //
   // q147 serves gen1's ROSTER — the one relation q146 doesn't already
   // prove — against an oracle that re-derives survivor offsets from
@@ -776,9 +764,8 @@ object IncrementalPack extends QueryModule {
   // no explode, no corpus read beyond the suffix survivors'.
   private[graft] def applyTakedown(s: SparkSession, ids: DataFrame,
                                    idxPath: String, docStore: DataFrame,
-                                   outPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    IncrementalDedup.publish(s, p) { tmp =>
+                                   outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       val spans = s.read.parquet(s"$idxPath/docspans")
       val tomb = spans.join(broadcast(requestIds(ids)), "doc_id")
       val cutRel = takedownCut(tomb)
@@ -853,8 +840,6 @@ object IncrementalPack extends QueryModule {
           keptSpans.unionByName(movedSpans))
       } finally rebuilt.unpersist()
     }
-    outPath
-  }
 
   private def q147(s: SparkSession, dir: String): DataFrame = {
     val idx = corpusIndex(s, dir)
@@ -862,7 +847,7 @@ object IncrementalPack extends QueryModule {
       s.read.parquet(s"$idx/docspans").select("doc_id")
         .filter(col("doc_id") % 7 === 3),
       idx, corpusDocs(s, dir),
-      s"$indexRoot/pack3rm-${IncrementalDedup.dataFingerprint(s, dir)}")
+      s"${Artifacts.root}/pack3rm-${IncrementalDedup.dataFingerprint(s, dir)}")
     s.read.parquet(s"$gen1/docspans")
       .select("doc_id", "first_seq", "last_seq", "start_off", "n_tokens")
       .orderBy("doc_id")
@@ -948,9 +933,8 @@ object IncrementalPack extends QueryModule {
   // as far as every downstream consumer can observe.
   private[graft] def applyPadTakedown(s: SparkSession, ids: DataFrame,
                                       idxPath: String, docStore: DataFrame,
-                                      outPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    IncrementalDedup.publish(s, p) { tmp =>
+                                      outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       val req = requestIds(ids)
       val hits = hitSeqIds(s, req, idxPath)
       val rebuilt = paddedHitSeqs(s, req, idxPath, docStore)
@@ -989,8 +973,6 @@ object IncrementalPack extends QueryModule {
             .join(broadcast(req), Seq("doc_id"), "left_anti"))
       } finally rebuilt.unpersist()
     }
-    outPath
-  }
 
   private def q148(s: SparkSession, dir: String): DataFrame = {
     val idx = corpusIndex(s, dir)
@@ -998,7 +980,7 @@ object IncrementalPack extends QueryModule {
       s.read.parquet(s"$idx/docspans").select("doc_id")
         .filter(col("doc_id") % 7 === 3),
       idx, corpusDocs(s, dir),
-      s"$indexRoot/pack3pad-${IncrementalDedup.dataFingerprint(s, dir)}")
+      s"${Artifacts.root}/pack3pad-${IncrementalDedup.dataFingerprint(s, dir)}")
     serve(s, corpusDocs(s, dir).filter(lit(false)), gen1)
   }
 

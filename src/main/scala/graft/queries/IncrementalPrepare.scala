@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{QueryModule, Tables}
+import graft.{Artifacts, QueryModule, Tables}
 
 /** q102 — INCREMENTAL CORPUS-PREPARE INTAKE: the q84 artifact pattern
   * applied to the PREPARE family, completing its three production
@@ -16,8 +16,7 @@ import graft.{QueryModule, Tables}
   * WITHOUT re-aggregating segment document frequencies or rescanning
   * the corpus.
   *
-  * The artifact (fingerprinted, marker-last — [[IncrementalDedup
-  * .publish]]):
+  * The artifact (fingerprinted, marker-last — [[Artifacts.publish]]):
   *  - `segdf/` — the corpus's FULL (source, skey, df) segment
   *    document-frequency counts (not thresholded: counts are what
   *    ingest can accumulate; the boilerplate relation is the df ≥
@@ -49,12 +48,10 @@ import graft.{QueryModule, Tables}
   */
 object IncrementalPrepare extends QueryModule {
 
-  private def indexRoot: String = IncrementalDedup.indexRoot
-
   private[graft] def indexPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/prep-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/prep-${IncrementalDedup.dataFingerprint(s, dir)}"
   private[graft] def shardPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/prep-shard-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/prep-shard-${IncrementalDedup.dataFingerprint(s, dir)}"
 
   private def corpusDocs(s: SparkSession, dir: String): DataFrame =
     Tables.documentsWide(s, dir).select("doc_id", "source", "text")
@@ -82,9 +79,8 @@ object IncrementalPrepare extends QueryModule {
 
   /** Offline: persist the corpus's segment-df counts and cleaned-hash
     * dedup state. Segment df and stripping both run HERE, once. */
-  private[graft] def buildIndex(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(indexPath(s, dir))
-    IncrementalDedup.publish(s, path) { tmp =>
+  private[graft] def buildIndex(s: SparkSession, dir: String): String =
+    Artifacts.publish(s, indexPath(s, dir)) { tmp =>
       val segs = Corpus.segmented(corpusDocs(s, dir))
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       try {
@@ -97,16 +93,11 @@ object IncrementalPrepare extends QueryModule {
           .write.mode("overwrite").parquet(s"$tmp/exact")
       } finally segs.unpersist()
     }
-    path.toString
-  }
 
-  private[graft] def stageShard(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(shardPath(s, dir))
-    IncrementalDedup.publish(s, path) { tmp =>
+  private[graft] def stageShard(s: SparkSession, dir: String): String =
+    Artifacts.publish(s, shardPath(s, dir)) { tmp =>
       shardDocs(s, dir).write.mode("overwrite").parquet(s"$tmp/docs")
     }
-    path.toString
-  }
 
   /** Online: strip + verdict + place every shard doc against the
     * artifact ONLY. */
@@ -144,9 +135,8 @@ object IncrementalPrepare extends QueryModule {
     * (disjoint from the index and unique within the shard by the
     * verdict's own definition). */
   private[graft] def ingest(s: SparkSession, shard: DataFrame,
-                            idxPath: String, outPath: String): String = {
-    val path = new org.apache.hadoop.fs.Path(outPath)
-    IncrementalDedup.publish(s, path) { tmp =>
+                            idxPath: String, outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       val keptIds = verdictsAgainst(s, shard, idxPath)
         .filter(col("verdict") === "kept").select("doc_id")
       val kept = shard.join(keptIds, Seq("doc_id"), "left_semi")
@@ -164,8 +154,6 @@ object IncrementalPrepare extends QueryModule {
           .select(col("clean_hash"), col("doc_id").as("keeper")))
         .write.mode("overwrite").parquet(s"$tmp/exact")
     }
-    path.toString
-  }
 
   private def q102(s: SparkSession, dir: String): DataFrame = {
     val idx = buildIndex(s, dir)
@@ -273,26 +261,17 @@ object IncrementalPrepare extends QueryModule {
   // content cannot re-enter), the citation nulls. `segdf/` is
   // (source, skey, df) counts — no doc ids, takedown-clean; shard/pos
   // placement keys on the SHARD's ids only. Tombstone = request ∩ the
-  // keeper roster; serving = q102's plan + ONE broadcast left join.
+  // keeper roster (IncrementalDedup.takedown over this index's
+  // `exact/`, which has the dedup index's keeper shape); serving =
+  // q102's plan + ONE broadcast left join.
   // Oracle = q102's composed ground truth with the CASE redaction.
   private[graft] def tombPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/prep-tomb-${IncrementalDedup.dataFingerprint(s, dir)}"
-
-  private[graft] def takedown(s: SparkSession, ids: DataFrame,
-                              idxPath: String, outPath: String): String = {
-    val path = new org.apache.hadoop.fs.Path(outPath)
-    IncrementalDedup.publish(s, path) { tmp =>
-      s.read.parquet(s"$idxPath/exact").select(col("keeper").as("doc_id"))
-        .join(broadcast(ids), "doc_id").distinct()
-        .write.mode("overwrite").parquet(s"$tmp/ids")
-    }
-    outPath
-  }
+    s"${Artifacts.root}/prep-tomb-${IncrementalDedup.dataFingerprint(s, dir)}"
 
   private def q144(s: SparkSession, dir: String): DataFrame = {
     val idx = buildIndex(s, dir)
     val shard = stageShard(s, dir)
-    val t = takedown(s,
+    val t = IncrementalDedup.takedown(s,
       s.read.parquet(s"$idx/exact").select(col("keeper").as("doc_id"))
         .filter(col("doc_id") % 7 === 3),
       idx, tombPath(s, dir))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{QueryModule, Tables}
+import graft.{Artifacts, QueryModule, Tables}
 
 /** q131–q134 — the PERSISTED LEXICAL INDEX lifecycle, completing the
   * retrieval family's production shapes the way q78/q79/q87/q124
@@ -19,8 +19,7 @@ import graft.{QueryModule, Tables}
   * incremental contract: the watermark replay discipline of
   * /root/reference/nikon_ETL.py:425-499.)
   *
-  * The artifact (fingerprinted, marker-last — [[IncrementalDedup
-  * .publish]]):
+  * The artifact (fingerprinted, marker-last — [[Artifacts.publish]]):
   *  - `postings/` — the inverted index: (term, doc_id, tf, dl),
   *    globally sorted by (term, doc_id) at build time so parquet
   *    row-group min/max stats prune a term-restricted serve scan to
@@ -62,20 +61,18 @@ object LexIndex extends QueryModule {
 
   private val ShardBase = IncrementalDedup.ShardBase
 
-  private def indexRoot: String = IncrementalDedup.indexRoot
-
   private[graft] def fullPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/lex-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/lex-${IncrementalDedup.dataFingerprint(s, dir)}"
   private[graft] def gen0Path(s: SparkSession, dir: String): String =
-    s"$indexRoot/lex0-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/lex0-${IncrementalDedup.dataFingerprint(s, dir)}"
   private[graft] def gen1Path(s: SparkSession, dir: String): String =
-    s"$indexRoot/lex1-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/lex1-${IncrementalDedup.dataFingerprint(s, dir)}"
   private[graft] def tombPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/lext-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/lext-${IncrementalDedup.dataFingerprint(s, dir)}"
   private[graft] def compactPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/lexc-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/lexc-${IncrementalDedup.dataFingerprint(s, dir)}"
   private[graft] def fullTombPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/lexft-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/lexft-${IncrementalDedup.dataFingerprint(s, dir)}"
 
   private def corpusDocs(s: SparkSession, dir: String): DataFrame =
     Tables.documentsWide(s, dir).select("doc_id", "text")
@@ -111,7 +108,7 @@ object LexIndex extends QueryModule {
     * (doc_id, dl): the per-doc length roster takedown accounting reads
     * so a removal request never needs the raw corpus (every doc has
     * ≥ 1 split token, so the roster covers every indexed doc). */
-  private def writeGeneration(tmp: org.apache.hadoop.fs.Path, docs: DataFrame): Unit = {
+  private def writeGeneration(tmp: String, docs: DataFrame): Unit = {
     postingsOf(docs).sort("term", "doc_id")
       .write.mode("overwrite").parquet(s"$tmp/postings")
     // doclens/stats are NARROW passes over docs (a scalar length per
@@ -123,11 +120,8 @@ object LexIndex extends QueryModule {
   }
 
   /** Offline build: the full corpus as generation 0. */
-  private[graft] def build(s: SparkSession, docs: DataFrame, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    IncrementalDedup.publish(s, p)(tmp => writeGeneration(tmp, docs))
-    path
-  }
+  private[graft] def build(s: SparkSession, docs: DataFrame, path: String): String =
+    Artifacts.publish(s, path)(tmp => writeGeneration(tmp, docs))
 
   /** The intake chain's corpus generation (q132–q134): [[build]] plus
     * the fail-loud re-key disjointness guard — the additivity proofs
@@ -135,23 +129,17 @@ object LexIndex extends QueryModule {
     * breaks the precondition must refuse to build, not serve wrong
     * df/N ([[IncrementalDedup.assertRekeyDisjoint]]). Priced once, at
     * publish time. */
-  private def buildGen0(s: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(gen0Path(s, dir))
-    IncrementalDedup.publish(s, p) { tmp =>
+  private def buildGen0(s: SparkSession, dir: String): String =
+    Artifacts.publish(s, gen0Path(s, dir)) { tmp =>
       val docs = corpusDocs(s, dir)
       IncrementalDedup.assertRekeyDisjoint(docs, "lex")
       writeGeneration(tmp, docs)
     }
-    gen0Path(s, dir)
-  }
 
   /** Daily intake: the shard's postings and stats delta, computed from
     * the day's documents alone and published as a generation. */
-  private[graft] def ingest(s: SparkSession, shard: DataFrame, outPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    IncrementalDedup.publish(s, p)(tmp => writeGeneration(tmp, shard))
-    outPath
-  }
+  private[graft] def ingest(s: SparkSession, shard: DataFrame, outPath: String): String =
+    Artifacts.publish(s, outPath)(tmp => writeGeneration(tmp, shard))
 
   /** Serve the fixed workload from artifact generations only: postings
     * union (workload terms as literal pushed filters), stats added
@@ -205,9 +193,8 @@ object LexIndex extends QueryModule {
     * skew N/avgdl for every later serve and compaction). */
   private[graft] def takedown(s: SparkSession, ids: DataFrame,
                               genPaths: Seq[String], outPath: String,
-                              tombPaths: Seq[String] = Nil): String = {
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    IncrementalDedup.publish(s, p) { tmp =>
+                              tombPaths: Seq[String] = Nil): String =
+    Artifacts.publish(s, outPath) { tmp =>
       val live = genPaths.map(g => s.read.parquet(s"$g/doclens"))
         .reduce(_ unionByName _)
         .join(broadcast(ids), "doc_id")
@@ -218,8 +205,6 @@ object LexIndex extends QueryModule {
       roster.agg((-count(lit(1))).as("n_docs"), (-sum(col("dl"))).as("n_toks"))
         .write.mode("overwrite").parquet(s"$tmp/stats")
     }
-    outPath
-  }
 
   /** COMPACT generations ∪ tombstones into ONE physical artifact (the
     * q124 lifecycle move, lexical edition): tombstoned postings and
@@ -230,9 +215,8 @@ object LexIndex extends QueryModule {
     * LexIndexSpec both pin it). Offline, once per epoch; the one
     * corpus-sized input is the fixed-width postings relation itself. */
   private[graft] def compact(s: SparkSession, genPaths: Seq[String],
-                             tombPaths: Seq[String], outPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    IncrementalDedup.publish(s, p) { tmp =>
+                             tombPaths: Seq[String], outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       val dead = tombPaths.map(t => s.read.parquet(s"$t/ids"))
         .reduceOption(_ unionByName _)
       def drop(df: DataFrame): DataFrame =
@@ -246,8 +230,6 @@ object LexIndex extends QueryModule {
         .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_toks")).as("n_toks"))
         .write.mode("overwrite").parquet(s"$tmp/stats")
     }
-    outPath
-  }
 
   private def q131(s: SparkSession, dir: String): DataFrame =
     serve(s, Seq(fullIndex(s, dir)))
@@ -337,7 +319,7 @@ object LexIndex extends QueryModule {
   // free (a generation list edit). The corpus is never read at serve
   // time.
   private[graft] def lexEraPath(s: SparkSession, dir: String, tag: String): String =
-    s"$indexRoot/lexr$tag-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/lexr$tag-${IncrementalDedup.dataFingerprint(s, dir)}"
 
   private def q166(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documentsWide(s, dir).select("doc_id", "text")
@@ -411,11 +393,11 @@ object LexIndex extends QueryModule {
     5 -> "slow fast")
 
   private[graft] def phrasePath(s: SparkSession, dir: String): String =
-    s"$indexRoot/phr-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/phr-${IncrementalDedup.dataFingerprint(s, dir)}"
   private[graft] def phrGen0Path(s: SparkSession, dir: String): String =
-    s"$indexRoot/phr0-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/phr0-${IncrementalDedup.dataFingerprint(s, dir)}"
   private[graft] def phrGen1Path(s: SparkSession, dir: String): String =
-    s"$indexRoot/phr1-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/phr1-${IncrementalDedup.dataFingerprint(s, dir)}"
 
   /** The positional postings relation of a (doc_id, text) corpus:
     * (term, doc_id, pos) for every token occurrence. */
@@ -428,14 +410,11 @@ object LexIndex extends QueryModule {
     * posexplode into (term, doc_id, pos)-sorted postings — the only
     * pass that ever reads the text. */
   private[graft] def buildPhraseGen(s: SparkSession, docs: DataFrame,
-                                    path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    IncrementalDedup.publish(s, p) { tmp =>
+                                    path: String): String =
+    Artifacts.publish(s, path) { tmp =>
       positionsOf(docs).sort("term", "doc_id", "pos")
         .write.mode("overwrite").parquet(s"$tmp/positions")
     }
-    path
-  }
 
   /** Build-or-reuse the full-corpus positional index (q155's artifact). */
   private[graft] def buildPhraseIndex(s: SparkSession, dir: String): String =
@@ -537,9 +516,9 @@ object LexIndex extends QueryModule {
   // indistinguishable from the logical union — q160's oracle IS
   // q159's SQL, the q134 move.
   private[graft] def phrTombPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/phrt-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/phrt-${IncrementalDedup.dataFingerprint(s, dir)}"
   private[graft] def phrCompactPath(s: SparkSession, dir: String): String =
-    s"$indexRoot/phrc-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/phrc-${IncrementalDedup.dataFingerprint(s, dir)}"
 
   /** Serve phrases from generations minus tombstoned ids: the postings
     * union anti-joins each tombstone's broadcast id list before the
@@ -564,22 +543,18 @@ object LexIndex extends QueryModule {
   /** Publish a positional tombstone: just the bare id list — phrase
     * serving has no statistics to adjust. */
   private[graft] def phraseTakedown(s: SparkSession, ids: DataFrame,
-                                    outPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    IncrementalDedup.publish(s, p) { tmp =>
+                                    outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       ids.select("doc_id").distinct()
         .write.mode("overwrite").parquet(s"$tmp/ids")
     }
-    outPath
-  }
 
   /** Compact positional generations ∪ tombstones into one artifact:
     * masked rows physically dropped, (term, doc_id, pos) order
     * restored for scan pruning. */
   private[graft] def phraseCompact(s: SparkSession, genPaths: Seq[String],
-                                   tombPaths: Seq[String], outPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    IncrementalDedup.publish(s, p) { tmp =>
+                                   tombPaths: Seq[String], outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       val dead = tombPaths.map(t => s.read.parquet(s"$t/ids"))
         .reduce(_ unionByName _)
       genPaths.map(g => s.read.parquet(s"$g/positions"))
@@ -588,21 +563,17 @@ object LexIndex extends QueryModule {
         .sort("term", "doc_id", "pos")
         .write.mode("overwrite").parquet(s"$tmp/positions")
     }
-    outPath
-  }
 
   /** The positional chain's generations (gen0 + intake), built-or-
     * reused — shared by q157/q159/q160. */
   private def phraseChain(s: SparkSession, dir: String): (String, String) = {
-    val g0Path = phrGen0Path(s, dir)
-    val p = new org.apache.hadoop.fs.Path(g0Path)
-    IncrementalDedup.publish(s, p) { tmp =>
+    val g0 = Artifacts.publish(s, phrGen0Path(s, dir)) { tmp =>
       val docs = corpusDocs(s, dir)
       IncrementalDedup.assertRekeyDisjoint(docs, "phrase")
       positionsOf(docs).sort("term", "doc_id", "pos")
         .write.mode("overwrite").parquet(s"$tmp/positions")
     }
-    (g0Path, buildPhraseGen(s, shardDocs(s, dir), phrGen1Path(s, dir)))
+    (g0, buildPhraseGen(s, shardDocs(s, dir), phrGen1Path(s, dir)))
   }
 
   private def q159(s: SparkSession, dir: String): DataFrame = {
@@ -638,7 +609,7 @@ object LexIndex extends QueryModule {
   // docs vacated slots). Eras split by doc_id parity (era 0 = retired
   // evens, era 1 = live odds — the q162 fixture geometry).
   private[graft] def phrEraPath(s: SparkSession, dir: String, tag: String): String =
-    s"$indexRoot/phrr$tag-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/phrr$tag-${IncrementalDedup.dataFingerprint(s, dir)}"
 
   private def q169(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documentsWide(s, dir).select("doc_id", "text")

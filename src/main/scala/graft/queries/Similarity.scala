@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryModule, Tables}
+import graft.{Artifacts, QueryModule, Tables}
 
 /** Similarity search over the `embeddings` table (64-dim unit vectors):
   * brute-force cosine top-k as the exact baseline, plus two bucketed
@@ -1065,8 +1065,7 @@ object Similarity extends QueryModule {
   private[graft] def adcRanks(s: SparkSession, dir: String,
                               qids: Seq[Int], k: Int,
                               tombPaths: Seq[String] = Nil): DataFrame = {
-    buildPqIndex(s, dir)
-    val path = pqIndexPath(s, dir)
+    val path = buildPqIndex(s, dir)
     val codebook = s.read.parquet(s"$path/codebook")
     val codes = dropTombstoned(s, s.read.parquet(s"$path/codes"), tombPaths)
     val qquant = pqQuantRows(Tables.embeddings(s, dir)
@@ -2116,20 +2115,8 @@ object Similarity extends QueryModule {
   // shares its oracle — the q57/q62 pairing pattern for storage paths.
   // If the artifact is absent (driver runs entries in any order), q79
   // builds it first; its own plan still reads only the artifact.
-  // The artifact lives on whatever FileSystem the configured root maps
-  // to — HDFS, S3A, or local — through the Hadoop FileSystem API, never
-  // java.io.File: at 100 TB the index is cluster storage, and the
-  // marker-last / atomic-publish guarantees must hold THERE, not just on
-  // a local disk. Root resolution: env (the deployment knob, mirroring
-  // SPARK_GRAFT_SF_DIR) → system property (test override) → local tmp.
-  private def pqIndexRoot: String =
-    sys.env.get("SPARK_GRAFT_INDEX_DIR")
-      .orElse(sys.props.get("graft.index.dir"))
-      .getOrElse(s"${System.getProperty("java.io.tmpdir")}/graft_pq_index")
-
-  private def md5key(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+  // The artifact is published and rooted like every serving artifact
+  // (graft.Artifacts).
 
   /** Cheap source fingerprint: the embeddings table's
     * [[Tables.fingerprint]] (names, lengths and mtimes of its files,
@@ -2138,69 +2125,27 @@ object Similarity extends QueryModule {
     * silently serving codes built from the old data — the staleness
     * hazard a path-only key carries. FS metadata only; never reads rows. */
   private[graft] def pqDataFingerprint(s: SparkSession, dir: String): String =
-    md5key(s"$dir#${Tables.fingerprint(s, s"$dir/embeddings.parquet")}")
+    Artifacts.key(s"$dir#${Tables.fingerprint(s, s"$dir/embeddings.parquet")}")
 
   private[graft] def pqIndexPath(s: SparkSession, dir: String): String =
-    s"$pqIndexRoot/${pqDataFingerprint(s, dir)}"
+    s"${Artifacts.root}/${pqDataFingerprint(s, dir)}"
 
   /** Idempotent offline build: codebook (one Lloyd step, the family's
-    * shared training) + per-vector codes → parquet. Publication is
-    * crash- and race-safe twice over: the artifact is assembled in a
-    * private temp directory and atomically renamed into place (two
-    * concurrent drivers cannot interleave writes — the loser discards
-    * its temp), and the `_COMPLETE` marker is still written LAST inside
-    * the temp, so even on stores where rename is a copy (S3 without a
-    * committer) a half-published index is detected and rebuilt, never
-    * served. */
-  /** Shared atomic-publish machinery for every index artifact (q78's
-    * full index, q87's generational one): assemble under a dot-prefixed
-    * private temp, write the `_COMPLETE` marker LAST inside the temp,
-    * then atomically rename into place. Hadoop rename moves src INTO an
-    * existing destination directory rather than failing, so a
-    * half-built squatter (exists, no marker — a crashed pre-temp-era
-    * build or manual damage) is evicted first, never renamed into. If a
-    * concurrent build wins the race between these steps, its artifact
-    * is complete and equivalent (same fingerprint ⇒ same data ⇒ same
-    * deterministic training): keep theirs, drop ours; a stray tmp
-    * renamed inside is dot-prefixed and invisible to parquet listings.
-    * No-op if the destination already carries its marker. */
-  private def publishArtifact(fs: org.apache.hadoop.fs.FileSystem,
-                              path: org.apache.hadoop.fs.Path)
-                             (write: org.apache.hadoop.fs.Path => Unit): Unit = {
-    def complete(p: org.apache.hadoop.fs.Path) =
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_COMPLETE"))
-    if (complete(path)) return
-    val tmp = new org.apache.hadoop.fs.Path(
-      path.getParent, s".${path.getName}.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    write(tmp)
-    fs.create(new org.apache.hadoop.fs.Path(tmp, "_COMPLETE"), true).close() // marker LAST
-    fs.mkdirs(path.getParent)
-    if (fs.exists(path) && !complete(path)) fs.delete(path, true)
-    if (!fs.exists(path)) {
-      if (!fs.rename(tmp, path) && !complete(path))
-        throw new IllegalStateException(s"could not publish artifact at $path")
-    }
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (!complete(path))
-      throw new IllegalStateException(s"artifact at $path incomplete after publish")
-  }
-
-  private[graft] def buildPqIndex(s: SparkSession, dir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(pqIndexPath(s, dir))
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    publishArtifact(fs, path) { tmp =>
+    * shared training) + per-vector codes → parquet, published marker-last
+    * ([[Artifacts.publish]]), so a half-published index is rebuilt,
+    * never served. Returns the index path. */
+  private[graft] def buildPqIndex(s: SparkSession, dir: String): String =
+    Artifacts.publish(s, pqIndexPath(s, dir)) { tmp =>
       val quantS = pqQuant(s, dir)
       val cents2 = pqUpdate(quantS, pqAssign(quantS, pqSeeds(quantS)))
       val codes = pqAssign(quantS, cents2).select("vec_id", "sub", "cid")
       cents2.write.mode("overwrite").parquet(s"$tmp/codebook")
       codes.write.mode("overwrite").parquet(s"$tmp/codes")
     }
-  }
 
   private def q78(s: SparkSession, dir: String): DataFrame = {
-    buildPqIndex(s, dir)
     // the build's checkable artifact view: every vector's stored code
-    s.read.parquet(s"${pqIndexPath(s, dir)}/codes")
+    s.read.parquet(s"${buildPqIndex(s, dir)}/codes")
       .groupBy("vec_id")
       .agg(expr("array_join(transform(array_sort(collect_list(struct(sub, cid))), x -> x.cid), '-')")
         .as("code"))
@@ -2237,8 +2182,7 @@ object Similarity extends QueryModule {
   }
 
   private def q79(s: SparkSession, dir: String): DataFrame = {
-    buildPqIndex(s, dir)
-    val path = pqIndexPath(s, dir)
+    val path = buildPqIndex(s, dir)
     serveAdc(s, dir,
       s.read.parquet(s"$path/codebook"),  // K·M rows
       s.read.parquet(s"$path/codes"))     // the 8-nibble corpus
@@ -2270,22 +2214,18 @@ object Similarity extends QueryModule {
   private val IncBatchSql = s"vec_id >= $PqK AND vec_id % 10 = 7"
 
   private[graft] def incIndexRoot(s: SparkSession, dir: String): String =
-    s"$pqIndexRoot/${pqDataFingerprint(s, dir)}-inc"
+    s"${Artifacts.root}/${pqDataFingerprint(s, dir)}-inc"
 
   /** gen0: codebook trained on yesterday's corpus (everything outside
     * the batch) + yesterday's codes. */
-  private[graft] def buildIncBase(s: SparkSession, dir: String): String = {
-    val gen0 = new org.apache.hadoop.fs.Path(s"${incIndexRoot(s, dir)}/gen0")
-    val fs = gen0.getFileSystem(s.sparkContext.hadoopConfiguration)
-    publishArtifact(fs, gen0) { tmp =>
+  private[graft] def buildIncBase(s: SparkSession, dir: String): String =
+    Artifacts.publish(s, s"${incIndexRoot(s, dir)}/gen0") { tmp =>
       val train = pqQuant(s, dir).filter(!expr(IncBatchSql))
       val cents = pqUpdate(train, pqAssign(train, pqSeeds(train)))
       cents.write.mode("overwrite").parquet(s"$tmp/codebook")
       pqAssign(train, cents).select("vec_id", "sub", "cid")
         .write.mode("overwrite").parquet(s"$tmp/codes")
     }
-    gen0.toString
-  }
 
   /** gen1: the incoming batch encoded with gen0's STORED codebook — no
     * retraining, no scan of yesterday's vectors (the embeddings read
@@ -2293,15 +2233,12 @@ object Similarity extends QueryModule {
     * sees gen1's marker and returns without a job. */
   private[graft] def ingestIncBatch(s: SparkSession, dir: String): String = {
     val gen0 = buildIncBase(s, dir)
-    val gen1 = new org.apache.hadoop.fs.Path(s"${incIndexRoot(s, dir)}/gen1")
-    val fs = gen1.getFileSystem(s.sparkContext.hadoopConfiguration)
-    publishArtifact(fs, gen1) { tmp =>
+    Artifacts.publish(s, s"${incIndexRoot(s, dir)}/gen1") { tmp =>
       val codebook = s.read.parquet(s"$gen0/codebook")
       val batch = pqQuantRows(Tables.embeddings(s, dir).filter(expr(IncBatchSql)))
       pqAssign(batch, codebook).select("vec_id", "sub", "cid")
         .write.mode("overwrite").parquet(s"$tmp/codes")
     }
-    gen1.toString
   }
 
   private def q87(s: SparkSession, dir: String): DataFrame = {
@@ -2364,7 +2301,7 @@ object Similarity extends QueryModule {
   private val GateStaleMaxPpm = 300000L // retrain once >30% of codes postdate training
 
   private[graft] def inc2IndexRoot(s: SparkSession, dir: String): String =
-    s"$pqIndexRoot/${pqDataFingerprint(s, dir)}-inc2"
+    s"${Artifacts.root}/${pqDataFingerprint(s, dir)}-inc2"
 
   /** The two-batch generation chain: gen0 (codebook trained on the
     * corpus minus both batches + its codes), then gen1/gen2 encoding
@@ -2374,25 +2311,21 @@ object Similarity extends QueryModule {
   private[graft] def buildInc2Chain(s: SparkSession, dir: String): Seq[String] = {
     val root = inc2IndexRoot(s, dir)
     val trainWhere = s"NOT (($IncBatchSql) OR ($IncBatch2Sql))"
-    val gen0 = new org.apache.hadoop.fs.Path(s"$root/gen0")
-    val fs = gen0.getFileSystem(s.sparkContext.hadoopConfiguration)
-    publishArtifact(fs, gen0) { tmp =>
+    val gen0 = Artifacts.publish(s, s"$root/gen0") { tmp =>
       val train = pqQuant(s, dir).filter(expr(trainWhere))
       val cents = pqUpdate(train, pqAssign(train, pqSeeds(train)))
       cents.write.mode("overwrite").parquet(s"$tmp/codebook")
       pqAssign(train, cents).select("vec_id", "sub", "cid")
         .write.mode("overwrite").parquet(s"$tmp/codes")
     }
-    Seq(IncBatchSql, IncBatch2Sql).zipWithIndex.foreach { case (batch, i) =>
-      val gen = new org.apache.hadoop.fs.Path(s"$root/gen${i + 1}")
-      publishArtifact(fs, gen) { tmp =>
+    gen0 +: Seq(IncBatchSql, IncBatch2Sql).zipWithIndex.map { case (batch, i) =>
+      Artifacts.publish(s, s"$root/gen${i + 1}") { tmp =>
         val codebook = s.read.parquet(s"$gen0/codebook")
         val rows = pqQuantRows(Tables.embeddings(s, dir).filter(expr(batch)))
         pqAssign(rows, codebook).select("vec_id", "sub", "cid")
           .write.mode("overwrite").parquet(s"$tmp/codes")
       }
     }
-    (0 to 2).map(i => s"$root/gen$i")
   }
 
   /** Anti-join served codes against every tombstone generation's id
@@ -2413,10 +2346,8 @@ object Similarity extends QueryModule {
     * edition); with no tombstones this is exactly q124's compaction.
     * Idempotent and marker-last like every other artifact. */
   private[graft] def compactChain(s: SparkSession, gens: Seq[String],
-                                  tombPaths: Seq[String], outPath: String): String = {
-    val out = new org.apache.hadoop.fs.Path(outPath)
-    val fs = out.getFileSystem(s.sparkContext.hadoopConfiguration)
-    publishArtifact(fs, out) { tmp =>
+                                  tombPaths: Seq[String], outPath: String): String =
+    Artifacts.publish(s, outPath) { tmp =>
       // rewrite, don't move: the source generations stay intact until
       // the compact artifact carries its marker (crash ⇒ still servable)
       s.read.parquet(s"${gens.head}/codebook")
@@ -2426,8 +2357,6 @@ object Similarity extends QueryModule {
       }.reduce(_ unionByName _), tombPaths)
         .write.mode("overwrite").parquet(s"$tmp/codes")
     }
-    out.toString
-  }
 
   private[graft] def compactInc2(s: SparkSession, dir: String): String =
     compactChain(s, buildInc2Chain(s, dir), Nil, s"${inc2IndexRoot(s, dir)}/compact")
@@ -2531,22 +2460,18 @@ object Similarity extends QueryModule {
   // what q87/q124 already move.
   private val PqTakedownWhere = "vec_id % 7 = 3"
 
-  /** Publish a TAKEDOWN generation for the vector index: `ids/` = the
-    * request intersected with the chain's own code roster (unknown ids
-    * are dropped — the q133 contract — so the artifact records exactly
-    * what it removes). Marker-last/idempotent like every generation. */
+  /** The chain's code roster: every vec_id some generation codes. */
+  private def pqRoster(s: SparkSession, genPaths: Seq[String]): DataFrame =
+    genPaths.map(g => s.read.parquet(s"$g/codes").select("vec_id"))
+      .reduce(_ unionByName _).distinct()
+
+  /** Publish a TAKEDOWN generation for the vector index under
+    * `outBase`: `ids/` = the request intersected with the chain's own
+    * code roster (unknown ids are dropped — the q133 contract — so the
+    * artifact records exactly what it removes; [[Artifacts.tombstone]]). */
   private[graft] def pqTakedown(s: SparkSession, ids: DataFrame,
-                                genPaths: Seq[String], outPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    publishArtifact(fs, p) { tmp =>
-      genPaths.map(g => s.read.parquet(s"$g/codes").select("vec_id"))
-        .reduce(_ unionByName _).distinct()
-        .join(broadcast(ids), "vec_id")
-        .write.mode("overwrite").parquet(s"$tmp/ids")
-    }
-    outPath
-  }
+                                genPaths: Seq[String], outBase: String): String =
+    Artifacts.tombstone(s, pqRoster(s, genPaths), ids, outBase)
 
   /** Encode raw vectors with a STORED codebook — ingest's per-vector
     * kernel, exposed so the takedown spec can build the never-saw-them
@@ -2558,17 +2483,14 @@ object Similarity extends QueryModule {
     * arithmetic (every 7th indexed vector "opted out" — the q133
     * fixture contract); the request is a bare id list. */
   private def pqTakedownIds(s: SparkSession, genPaths: Seq[String]): DataFrame =
-    genPaths.map(g => s.read.parquet(s"$g/codes").select("vec_id"))
-      .reduce(_ unionByName _).distinct()
-      .filter(expr(PqTakedownWhere))
+    pqRoster(s, genPaths).filter(expr(PqTakedownWhere))
 
   /** The FULL-index (q78/q79 artifact) takedown twin for the served
     * hybrid fusion (Corpus q138): the shared removal request
     * ({id % 7 = 3} — LexIndex.takedownIds' arithmetic, so both arms
     * mask the SAME list) priced against the chain's own code roster. */
   private[graft] def fullPqTombstone(s: SparkSession, dir: String): String = {
-    buildPqIndex(s, dir)
-    val path = pqIndexPath(s, dir)
+    val path = buildPqIndex(s, dir)
     pqTakedown(s, pqTakedownIds(s, Seq(path)), Seq(path), s"$path-tomb")
   }
 
@@ -2630,25 +2552,20 @@ object Similarity extends QueryModule {
   // plan — broadcast distance tables, per-query cost independent of
   // corpus size; retirement is a generation-list edit.
   private[graft] def retIndexRoot(s: SparkSession, dir: String): String =
-    s"$pqIndexRoot/${pqDataFingerprint(s, dir)}-ret"
+    s"${Artifacts.root}/${pqDataFingerprint(s, dir)}-ret"
 
   /** The retention chain's era generations: the full build's stored
     * codes split by id parity into two marker-last artifacts (codes
     * move, vectors are never re-read or re-encoded). */
   private[graft] def buildRetChain(s: SparkSession, dir: String): (String, String) = {
-    buildPqIndex(s, dir)
-    val codes = s"${pqIndexPath(s, dir)}/codes"
+    val codes = s"${buildPqIndex(s, dir)}/codes"
     val root = retIndexRoot(s, dir)
-    def era(tag: String, keepOdd: Boolean): String = {
-      val p = new org.apache.hadoop.fs.Path(s"$root/era$tag")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      publishArtifact(fs, p) { tmp =>
+    def era(tag: String, keepOdd: Boolean): String =
+      Artifacts.publish(s, s"$root/era$tag") { tmp =>
         s.read.parquet(codes)
           .filter(col("vec_id") % 2 === (if (keepOdd) 1 else 0))
           .write.mode("overwrite").parquet(s"$tmp/codes")
       }
-      p.toString
-    }
     (era("0", keepOdd = false), era("1", keepOdd = true))
   }
 

@@ -131,8 +131,7 @@ object Takedown extends QueryModule {
         .agg(count(lit(1)).as("n_rows")))
 
     // vector: the q79 artifact's code roster
-    Similarity.buildPqIndex(s, dir)
-    val codes = s.read.parquet(s"${Similarity.pqIndexPath(s, dir)}/codes")
+    val codes = s.read.parquet(s"${Similarity.buildPqIndex(s, dir)}/codes")
     val vecIds = codes.select("vec_id").distinct().filter(col("vec_id") % 7 === 3)
     val vec = one("vector", "tombstone",
       vecIds.agg(count(lit(1)).as("n_priced")),

@@ -108,8 +108,13 @@ class ApiSpec extends SparkTestBase {
       QueryApi.glassHistoryStrict(spark, sfDir, request(edgeReq.filter(_.nonEmpty)))
     }
     assert(e.glassIds == Seq(-5L, 155L, 999999999L))
-    // a null id is a miss too: the adapter raises rather than answering
-    intercept[Exception](QueryApi.glassHistoryStrict(spark, sfDir, request(edgeReq)))
+    // a null id is a miss too: the adapter raises the typed miss, naming
+    // the null first and then the missing ids in order
+    val withNull = intercept[QueryApi.GlassDoesNotExist] {
+      QueryApi.glassHistoryStrict(spark, sfDir, request(edgeReq))
+    }
+    assert(withNull.nullId && withNull.glassIds == Seq(-5L, 155L, 999999999L))
+    assert(withNull.getMessage == "(type=null,-5,155,999999999)")
     // and with only known (duplicated) ids it is glassHistory, in order
     val known = Seq(Some(25L), Some(7L), Some(25L), Some(1L))
     val ok = QueryApi.glassHistoryStrict(spark, sfDir, request(known)).collect()

@@ -8,17 +8,6 @@ import org.apache.spark.sql.functions._
   * ingest/replay idempotency of the containment intake loop. */
 class IncrementalContainSpec extends SparkTestBase {
 
-  private def withTempRoot[A](f: String => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft_contain_test").toString
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root
-    try f(root)
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None    => sys.props.remove("graft.index.dir")
-    }
-  }
-
   /** Every doc draws from its own token alphabet, so the only
     * containments are the PLANTED prefix cuts:
     *  - corpus: 0, 6, 10, 20 (ids % 5 != 4); 0/10/20 are % 10 == 0 with
@@ -43,7 +32,7 @@ class IncrementalContainSpec extends SparkTestBase {
   }
 
   test("q179 verdicts: planted prefix cuts route to corpus/batch containment, new pages keep") {
-    withTempRoot { _ =>
+    withIndexRoot { _ =>
       val dir = plantedDir()
       val out = SparkEntry.queries("q179_contain_intake")(spark, dir).collect()
         .map(r => r.getLong(0) -> ((r.getString(1), r.getBoolean(2), r.get(3)))).toMap
@@ -61,7 +50,7 @@ class IncrementalContainSpec extends SparkTestBase {
   }
 
   test("q179 ingest is idempotent: replay keeps nothing, re-ingest is a content no-op") {
-    withTempRoot { root =>
+    withIndexRoot { root =>
       val idx = IncrementalContain.buildIndex(spark, sfDir)
       val shard = spark.read.parquet(s"${IncrementalContain.stageShard(spark, sfDir)}/docs")
       def rows(p: String) = IncrementalContain.verdictsAgainst(spark, shard, p)
@@ -98,7 +87,7 @@ class IncrementalContainSpec extends SparkTestBase {
   }
 
   test("q182 takedown: redact, don't re-admit — citation nulls, blocking verdict stands") {
-    withTempRoot { _ =>
+    withIndexRoot { _ =>
       val dir = plantedDir()
       // planted corpus ids {0, 6, 10, 20}: only 10 matches the % 7 = 3
       // request, and 10 is a CITED container (snippet 1000010's)
@@ -119,7 +108,7 @@ class IncrementalContainSpec extends SparkTestBase {
   }
 
   test("q183 retention window: retired-era containments readmit, live-era ones block") {
-    withTempRoot { root =>
+    withIndexRoot { root =>
       val dir = plantedDir()
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "text").filter(col("doc_id") % 5 =!= 4)
@@ -154,7 +143,7 @@ class IncrementalContainSpec extends SparkTestBase {
   }
 
   test("q183 on the driver corpus: non-vacuous readmission, readmitted ⊆ kept") {
-    withTempRoot { _ =>
+    withIndexRoot { _ =>
       val rows = SparkEntry.queries("q183_contain_retention")(spark, sfDir).collect()
       graft.Caches.release()
       assert(rows.exists(_.getBoolean(4)),

@@ -7,17 +7,6 @@ import graft.queries.IncrementalDedup
   * ingest/replay idempotency of the incremental intake loop. */
 class IncrementalDedupSpec extends SparkTestBase {
 
-  private def withTempRoot[A](f: String => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft_dedup_test").toString
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root
-    try f(root)
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None    => sys.props.remove("graft.index.dir")
-    }
-  }
-
   private def verdictRows(idx: String): Seq[(Long, String, Boolean, Any)] = {
     val shard = spark.read.parquet(s"${IncrementalDedup.stageShard(spark, sfDir)}/docs")
     IncrementalDedup.verdictsAgainst(spark, shard, idx).collect()
@@ -25,7 +14,7 @@ class IncrementalDedupSpec extends SparkTestBase {
   }
 
   test("dedup index storage contract: root honored, half-built rebuilt, fingerprint keys the data") {
-    withTempRoot { root =>
+    withIndexRoot { root =>
       val want = SparkEntry.queries("q84_incremental_dedup")(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getBoolean(2), r.get(3))).toSeq
       assert(want.nonEmpty)
@@ -60,7 +49,7 @@ class IncrementalDedupSpec extends SparkTestBase {
   }
 
   test("ingest is idempotent: replay keeps nothing, re-ingest is a content no-op") {
-    withTempRoot { root =>
+    withIndexRoot { root =>
       val idx = IncrementalDedup.buildIndex(spark, sfDir)
       val shard = spark.read.parquet(s"${IncrementalDedup.stageShard(spark, sfDir)}/docs")
       val v1 = verdictRows(idx)
@@ -123,7 +112,7 @@ class IncrementalDedupSpec extends SparkTestBase {
     // input); the redaction serve unions the generations' id rosters,
     // and without the distinct a doubled id would duplicate every
     // verdict row citing it through the left join
-    withTempRoot { root =>
+    withIndexRoot { root =>
       import org.apache.spark.sql.functions.col
       val idx = IncrementalDedup.buildIndex(spark, sfDir)
       val shard = spark.read.parquet(s"${IncrementalDedup.stageShard(spark, sfDir)}/docs")
@@ -151,7 +140,7 @@ class IncrementalDedupSpec extends SparkTestBase {
   test("two takedown requests on one base publish two tombstones, each with its own priced ids") {
     // a tombstone keyed only by its base path would let the second
     // request find the first one's marker and serve its stale ids
-    withTempRoot { _ =>
+    withIndexRoot { _ =>
       import org.apache.spark.sql.functions.col
       val idx = IncrementalDedup.buildIndex(spark, sfDir)
       val roster = spark.read.parquet(s"$idx/exact")
@@ -173,7 +162,7 @@ class IncrementalDedupSpec extends SparkTestBase {
 
   test("q162 retention window: retired-era content is readmitted, live-era still blocks") {
     import spark.implicits._
-    withTempRoot { root =>
+    withIndexRoot { root =>
       // era 0 (retired): X exact, N near-target; era 1 (live): Y
       val nearBase = (1 to 16).map(i => s"n$i").mkString(" ")
       val era0 = Seq((0L, "x1 x2 x3 x4 x5 x6"), (2L, nearBase)).toDF("doc_id", "text")

@@ -9,19 +9,8 @@ import org.apache.hadoop.fs.Path
   * no-retrain guarantee (rebuilding gen1 never touches gen0). */
 class IncrementalIndexSpec extends SparkTestBase {
 
-  private def withTempRoot[A](f: String => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft_incidx_test").toString
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root
-    try f(root)
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None    => sys.props.remove("graft.index.dir")
-    }
-  }
-
   test("incremental index: generations partition the corpus, replay is a storage no-op") {
-    withTempRoot { root =>
+    withIndexRoot { root =>
       val want = SparkEntry.queries("q87_pq_index_ingest")(spark, sfDir).collect().toSeq
       assert(want.nonEmpty)
       val gen0 = s"${Similarity.incIndexRoot(spark, sfDir)}/gen0"
@@ -50,7 +39,7 @@ class IncrementalIndexSpec extends SparkTestBase {
   test("two vector takedown requests on one chain publish two tombstones, each with its own priced ids") {
     // a tombstone keyed only by its base path would let the second
     // request find the first one's marker and serve its stale ids
-    withTempRoot { _ =>
+    withIndexRoot { _ =>
       import org.apache.spark.sql.functions.col
       val gen1 = Similarity.ingestIncBatch(spark, sfDir)
       val gens = Seq(s"${Similarity.incIndexRoot(spark, sfDir)}/gen0", gen1)
@@ -77,7 +66,7 @@ class IncrementalIndexSpec extends SparkTestBase {
     // RE-LISTS the compacted-away ids prices only the ids still in the
     // roster — no tombPaths plumbing needed, the compacted codes ARE
     // the clean roster
-    withTempRoot { root =>
+    withIndexRoot { root =>
       import org.apache.spark.sql.functions.{broadcast, col}
       val compact = Similarity.compactInc2(spark, sfDir)
       val codes0 = spark.read.parquet(s"$compact/codes").drop("gen")
@@ -106,7 +95,7 @@ class IncrementalIndexSpec extends SparkTestBase {
   }
 
   test("two-batch chain: ingest twice, compact once — serving identical before/after, compaction idempotent") {
-    withTempRoot { _ =>
+    withIndexRoot { _ =>
       val compact = Similarity.compactInc2(spark, sfDir)
       val root = Similarity.inc2IndexRoot(spark, sfDir)
       val hfs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
@@ -160,13 +149,18 @@ class IncrementalIndexSpec extends SparkTestBase {
 
   test("pq takedown: serve equals encoding only the survivors; compaction physically drops them") {
     import org.apache.spark.sql.functions._
-    withTempRoot { _ =>
+    withIndexRoot { _ =>
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
       val served = rows(SparkEntry.queries("q136_pq_takedown")(spark, sfDir))
       val root = Similarity.incIndexRoot(spark, sfDir)
-      // the tombstone priced exactly the roster's % 7 = 3 slice
-      val tombIds = spark.read.parquet(s"$root/tomb/ids")
+      // the tombstone priced exactly the roster's % 7 = 3 slice; its
+      // path is the base plus a digest of the priced ids, and q136
+      // publishes exactly one
+      val hfs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      val tombs = hfs.globStatus(new Path(s"$root/tomb-*")).toSeq.map(_.getPath.toString)
+      assert(tombs.size == 1, s"expected one tombstone under $root: $tombs")
+      val tombIds = spark.read.parquet(s"${tombs.head}/ids")
         .collect().map(_.getLong(0)).toSet
       val all = Tables.embeddings(spark, sfDir)
         .select("vec_id").collect().map(_.getLong(0)).toSet
@@ -196,7 +190,7 @@ class IncrementalIndexSpec extends SparkTestBase {
   }
 
   test("incremental index: a damaged gen1 is rebuilt identically without touching gen0") {
-    withTempRoot { _ =>
+    withIndexRoot { _ =>
       val want = SparkEntry.queries("q87_pq_index_ingest")(spark, sfDir).collect().toSeq
       val gen0 = s"${Similarity.incIndexRoot(spark, sfDir)}/gen0"
       val gen1 = s"${Similarity.incIndexRoot(spark, sfDir)}/gen1"
@@ -217,7 +211,7 @@ class IncrementalIndexSpec extends SparkTestBase {
   }
 
   test("q167 retention serve drops every retired-era vector and audits resurfacing against the full serve") {
-    withTempRoot { _ =>
+    withIndexRoot { _ =>
       val got = SparkEntry.queries("q167_pq_retention")(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3),
           if (r.isNullAt(4)) -1 else r.getInt(4), r.getBoolean(5))).toSeq

@@ -12,17 +12,6 @@ import graft.functions.Multimodal.MediaRow
   * machinery IncrementalDedupSpec already pins. */
 class IncrementalMediaDedupSpec extends SparkTestBase {
 
-  private def withTempRoot[A](f: String => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft_media_test").toString
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root
-    try f(root)
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None    => sys.props.remove("graft.index.dir")
-    }
-  }
-
   private def loadShard(): Dataset[MediaRow] = {
     import spark.implicits._
     spark.read.parquet(s"${IncrementalMediaDedup.stageShard(spark, sfDir)}/media")
@@ -34,7 +23,7 @@ class IncrementalMediaDedupSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getBoolean(3), r.get(4))).toSeq
 
   test("media ingest is idempotent: replay keeps nothing, re-ingest is a content no-op") {
-    withTempRoot { root =>
+    withIndexRoot { root =>
       val idx = IncrementalMediaDedup.buildIndex(spark, sfDir)
       val shard = loadShard()
       val v1 = verdictRows(shard, idx)
@@ -74,7 +63,7 @@ class IncrementalMediaDedupSpec extends SparkTestBase {
 
   test("a corrupt intake blob costs one dropped row, not the serving job") {
     import spark.implicits._
-    withTempRoot { _ =>
+    withIndexRoot { _ =>
       val idx = IncrementalMediaDedup.buildIndex(spark, sfDir)
       val shard = loadShard()
       val poisoned = shard.unionByName(spark.createDataset(Seq(

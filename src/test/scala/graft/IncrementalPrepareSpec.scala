@@ -9,17 +9,6 @@ import graft.queries.IncrementalPrepare
   * FUTURE intakes, not the one that introduced it). */
 class IncrementalPrepareSpec extends SparkTestBase {
 
-  private def withTempRoot[A](f: String => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft_prep_test").toString
-    val prev = sys.props.get("graft.index.dir")
-    sys.props("graft.index.dir") = root
-    try f(root)
-    finally prev match {
-      case Some(v) => sys.props("graft.index.dir") = v
-      case None    => sys.props.remove("graft.index.dir")
-    }
-  }
-
   private def loadShard(): DataFrame =
     spark.read.parquet(s"${IncrementalPrepare.stageShard(spark, sfDir)}/docs")
 
@@ -28,7 +17,7 @@ class IncrementalPrepareSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getString(4), r.get(5))).toSeq
 
   test("prepare ingest is idempotent: replay keeps nothing, re-ingest is a content no-op") {
-    withTempRoot { root =>
+    withIndexRoot { root =>
       val idx = IncrementalPrepare.buildIndex(spark, sfDir)
       val shard = loadShard()
       val v1 = verdictRows(shard, idx)
@@ -59,7 +48,7 @@ class IncrementalPrepareSpec extends SparkTestBase {
 
   test("frozen-boilerplate semantics: shard-born boilerplate strips the NEXT intake, not its own") {
     import spark.implicits._
-    withTempRoot { root =>
+    withIndexRoot { root =>
       val idx = IncrementalPrepare.buildIndex(spark, sfDir)
       // a template segment no corpus source has (seg length = BoilerSegLen
       // so it segments cleanly), carried by two docs of one source plus

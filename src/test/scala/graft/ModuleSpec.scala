@@ -31,4 +31,35 @@ class ModuleSpec extends SparkTestBase {
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
+
+  test("the artifact protocol exists once: marker literal and md5 keys only in graft.Artifacts") {
+    // a second publish, marker check or path key would fork the protocol
+    // that every serving family shares; md5 digests outside Artifacts are
+    // row-level hashing (signatures, tokens, media hashes), counted per
+    // file so a new one has to be named here
+    val rowHashing = Map(
+      "graft/Artifacts.scala" -> 1,             // Artifacts.key
+      "graft/functions/Multimodal.scala" -> 2,  // media content hashes
+      "graft/queries/Corpus.scala" -> 1,        // md5Hex / md5Int60 per row
+      "graft/queries/Similarity.scala" -> 2,    // SimHash / JL plane signs
+      "graft/queries/TextPipeline.scala" -> 2,  // BPE / unigram token hashes
+      "graft/streaming/Streams.scala" -> 2)     // streaming twins of the above
+    val root = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no main sources at $root")
+    import scala.jdk.CollectionConverters._
+    val sources = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(sources.size > 50, s"source scan found only ${sources.size} files")
+    def count(text: String, needle: String) =
+      java.util.regex.Pattern.quote(needle).r.findAllMatchIn(text).size
+    val found = sources.map { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      (root.relativize(f).toString,
+        count(text, "\"_COMPLETE\""), count(text, "MessageDigest.getInstance(\"MD5\")"))
+    }
+    val markers = found.collect { case (f, n, _) if n > 0 => f }
+    assert(markers == Seq("graft/Artifacts.scala"), s"_COMPLETE literal outside Artifacts: $markers")
+    val md5 = found.collect { case (f, _, n) if n > 0 => f -> n }.toMap
+    assert(md5 == rowHashing, s"MD5 digests differ from the named uses: $md5")
+  }
 }

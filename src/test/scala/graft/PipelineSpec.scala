@@ -1079,10 +1079,7 @@ class PipelineSpec extends SparkTestBase {
   test("persisted PQ index storage contract: half-built index rebuilt, fingerprint keys the data, root configurable") {
     import graft.queries.Similarity
     val hfs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    val root = java.nio.file.Files.createTempDirectory("graft_idx_test").toString
-    val prev = sys.props.get("graft.index.dir")
-    try {
-      sys.props("graft.index.dir") = root
+    withIndexRoot { root =>
       val want = SparkEntry.queries("q79_pq_index_search")(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
       val path = new org.apache.hadoop.fs.Path(Similarity.pqIndexPath(spark, sfDir))
@@ -1115,9 +1112,6 @@ class PipelineSpec extends SparkTestBase {
       assert(touched.setLastModified(touched.lastModified() + 60000))
       assert(Similarity.pqDataFingerprint(spark, dataCopy) != k1,
         "fingerprint blind to a regenerated corpus under the same path")
-    } finally {
-      prev match { case Some(v) => sys.props("graft.index.dir") = v
-                   case None    => sys.props.remove("graft.index.dir") }
     }
   }
 

@@ -218,7 +218,8 @@ class PlanSpec extends SparkTestBase {
     // for the 8 query vectors (pushed-down vec_id bound) — a scan of
     // the full raw corpus would defeat the ADC memory story
     val p = plan(graft.queries.Similarity.queries("q79_pq_index_search")(spark, sfDir))
-    assert(p.contains("graft_pq_index"), "search does not read the index artifact")
+    assert(p.contains(graft.queries.Similarity.pqIndexPath(spark, sfDir)),
+      "search does not read the index artifact")
     val corpusScans = p.split("\n").filter(_.contains("embeddings.parquet"))
     assert(corpusScans.nonEmpty, "query vectors must come from the embeddings table")
     corpusScans.foreach { l =>

@@ -9,6 +9,19 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Run `f` with the artifact root (`graft.index.dir`) pointed at a
+    * fresh temp directory, restoring the previous setting after. */
+  def withIndexRoot[A](f: String => A): A = {
+    val root = java.nio.file.Files.createTempDirectory("graft_index_test").toString
+    val prev = sys.props.get("graft.index.dir")
+    sys.props("graft.index.dir") = root
+    try f(root)
+    finally prev match {
+      case Some(v) => sys.props("graft.index.dir") = v
+      case None    => sys.props.remove("graft.index.dir")
+    }
+  }
 }
 
 object SparkTestBase {
