@@ -394,6 +394,34 @@ class CurationSpec extends SparkTestBase {
     assert(strata.exists(_.length >= 10), "no stratum large enough to exercise the split")
   }
 
+  test("q112 keeps null-lang and null-source documents as their own strata") {
+    def u60(x: String): Long = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(x.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(15), 16)
+    // the oracle's PARTITION BY lang, source groups nulls like any value:
+    // (null, s0), (en, null) and (null, null) are three more strata
+    val fixture = Seq[(Long, String, String)](
+      (0L, "en", "s0"), (1L, "en", "s0"), (2L, null, "s0"), (3L, null, "s0"),
+      (4L, null, "s0"), (5L, "en", null), (6L, "en", null), (7L, null, null))
+    val dir = java.nio.file.Files.createTempDirectory("graft_null_strata").toFile
+    dir.deleteOnExit()
+    import spark.implicits._
+    fixture.map { case (id, lang, src) => (id, s"doc $id text", lang, src) }
+      .toDF("doc_id", "text", "lang", "source")
+      .selectExpr("doc_id", "text", "lang", "source", "CAST(length(text) AS LONG) AS n_chars")
+      .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/documents.parquet")
+    val got = Curation.queries("q112_exact_split")(spark, dir.getAbsolutePath).collect()
+      .map(r => r.getLong(0) -> ((Option(r.getString(1)), Option(r.getString(2)), r.getLong(3))))
+      .toMap
+    assert(got.keySet == fixture.map(_._1).toSet, s"documents lost: ${got.keySet}")
+    fixture.groupBy(r => (Option(r._2), Option(r._3))).foreach { case (stratum, rows) =>
+      rows.sortBy(r => (u60(s"split:${r._1}"), r._1)).zipWithIndex.foreach { case (r, i) =>
+        assert(got(r._1) == ((stratum._1, stratum._2, i + 1L)),
+          s"$stratum doc ${r._1}: got ${got(r._1)}, expect rank ${i + 1}")
+      }
+    }
+  }
+
   test("q113 overlap matrix: exact Jaccard and the KMV sketch both replay; zero-overlap coherence") {
     def md5hex(x: String): String =
       java.security.MessageDigest.getInstance("MD5")
