@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryModule, Tables}
+import graft.{PrefixSum, QueryModule, Tables}
 
 /** Corpus-preparation operators: the steps between "filtered documents"
   * and "training shards" that the curation family (Curation.scala) stops
@@ -115,33 +115,22 @@ object Corpus extends QueryModule {
 
   /** Per-source top-M prune of a (source, skey, df) boilerplate
     * relation — the SERVING generation [[frozenBoiler]] collects.
-    * Ranking runs as the q117 two-phase prefix sum over descending
+    * Ranking is a [[graft.PrefixSum]] position over descending
     * ⌊log₂ df⌋ buckets (log₂ is monotone, so bucket order ≡ df-desc
-    * order): per-(source, bucket) counts give bucket offsets over a
-    * tiny broadcastable relation, buckets wholly past M drop BEFORE
-    * any row-level work, and the within-bucket rank window partitions
-    * by (source, bucket) — never one corpus-df-sized window per
-    * source. Residual (q117's own): a source whose surviving df mass
-    * concentrates in one log₂ bucket concentrates that bucket's
-    * window; the bucket has already been pre-filtered to those
-    * intersecting the top M. Ties at the M boundary cut on skey —
-    * deterministic on any engine. */
+    * order); bucket bound: ≤ 64 log₂ buckets per source. Buckets wholly
+    * past M drop BEFORE any row-level work (the `cap`). Residual: a
+    * source whose surviving df mass concentrates in one log₂ bucket
+    * concentrates that bucket's window; the bucket has already been
+    * pre-filtered to those intersecting the top M. Ties at the M
+    * boundary cut on skey — deterministic on any engine. */
   private[graft] def prunedBoiler(boiler: DataFrame,
-                                  m: Int = BoilerServeTopM): DataFrame = {
+                                  m: Int = BoilerServeTopM): DataFrame =
     // descending ⌊log₂ df⌋ so ascending bucket order walks df downward
-    val b = boiler.withColumn("lb", (lit(63) - (length(bin(col("df"))) - 1)).cast("int"))
-    val offsets = b.groupBy("source", "lb").agg(count(lit(1)).as("c"))
-      .withColumn("off", coalesce(sum(col("c")).over(
-        Window.partitionBy("source").orderBy("lb")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .filter(col("off") < m) // buckets entirely beyond M never reach the rank window
-      .select("source", "lb", "off")
-    b.join(broadcast(offsets), Seq("source", "lb"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("source", "lb").orderBy(col("df").desc, col("skey"))))
-      .filter(col("off") + col("rn") <= m)
+    PrefixSum.positions(
+        boiler.withColumn("lb", (lit(63) - (length(bin(col("df"))) - 1)).cast("int")),
+        Seq("source"), Seq("lb"), Seq(col("df").desc, col("skey")), "pos", cap = Some(m))
+      .filter(col("pos") <= m)
       .select("source", "skey", "df")
-  }
 
   /** The boilerplate relation collected as a FROZEN serving artifact —
     * what the streaming intake twin broadcasts (the q93 bigramScore
@@ -848,21 +837,19 @@ object Corpus extends QueryModule {
   // any engine and any partitioning, no RNG state.
   //
   // Scale shape: positions within a shard are a corpus-sized total
-  // order, so they are materialized with the q60 TWO-PHASE prefix sum,
-  // never a per-shard global sort: the key's HIGH 6 bits form 64 range
-  // buckets per shard (bucket order ≡ key order by construction);
-  // per-(shard, bucket) counts (bounded relation: 16×64 rows) produce
-  // bucket offsets with a window over the tiny counts relation, and the
-  // within-bucket rank is a window over (shard, bucket) — 1024 uniform
-  // partitions whose size is corpus/1024, the audited pattern. At 1000
+  // order, so they are PrefixSum positions, never a per-shard global
+  // sort: the key's HIGH 6 bits form 64 range buckets per shard (bucket
+  // order ≡ key order by construction), and the within-bucket rank is a
+  // window over (shard, bucket) — 1024 uniform partitions whose size is
+  // corpus/1024. At 1000
   // executors the plan is two corpus shuffles (bucket agg + rank
   // window), both on uniform fixed-width keys.
   private[graft] val NumShards = 16
 
   /** The permutation machinery, shared by q92 (whole corpus) and q96
     * (survivors only): every input row gains (shard, pos) — shard from
-    * the md5 key's low 4 bits, pos via the two-phase prefix sum over
-    * the key's high-6-bit range buckets. Pass-through columns survive. */
+    * the md5 key's low 4 bits, pos via a PrefixSum position over the
+    * key's high-6-bit range buckets. Pass-through columns survive. */
   private[graft] def shardPositions(docs: DataFrame): DataFrame = {
     val keyed = docs
       .withColumn("key",
@@ -871,18 +858,9 @@ object Corpus extends QueryModule {
       .withColumn("shard", (col("key") % NumShards).cast("int"))
       // key < 16^15 = 2^60; high 6 bits: div 2^54
       .withColumn("bucket", (col("key") / lit(1L << 54)).cast("int"))
-    val offsets = keyed
-      .groupBy("shard", "bucket").agg(count(lit(1)).as("c"))
-      .withColumn("off", coalesce(sum(col("c")).over(
-        Window.partitionBy("shard").orderBy("bucket")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("shard", "bucket", "off")
-    keyed
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("shard", "bucket").orderBy("key", "doc_id")))
-      .join(broadcast(offsets), Seq("shard", "bucket"))
-      .withColumn("pos", (col("off") + col("rn")).cast("long"))
-      .drop("key", "bucket", "off", "rn")
+    // bucket bound: ≤ 64 key buckets per shard
+    PrefixSum.positions(keyed, Seq("shard"), Seq("bucket"), Seq(col("key"), col("doc_id")), "pos")
+      .drop("key", "bucket")
   }
 
   private def q92(s: SparkSession, dir: String): DataFrame =

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Artifacts, QueryModule, Tables}
+import graft.{Artifacts, PrefixSum, QueryModule, Tables}
 
 /** Corpus curation operators a large-scale training-data pipeline runs
   * AFTER dedup (Dedup.scala) and quality scoring (TextPipeline.scala):
@@ -486,32 +486,22 @@ object Curation extends QueryModule {
   // keeps of q52/q76 hit rates only in expectation; an eval split wants
   // exact counts). Reproducible on any engine and partitioning.
   //
-  // Scale: per-stratum rank is a corpus-sized total order, so it uses
-  // the q92 TWO-PHASE prefix sum, never a per-stratum global sort: the
-  // key's high 6 bits form 64 range buckets (bucket order ≡ key order),
-  // bucket offsets are a window over the bounded strata×64 counts
-  // relation, and the within-bucket rank partitions by (stratum,
-  // bucket) — uniform partitions of corpus/64·|strata| rows. The DuckDB
-  // oracle ranks with ONE plain window, cross-checking the two
-  // formulations under the same hash gate.
+  // Scale: per-stratum rank is a corpus-sized total order, so it is a
+  // PrefixSum position over the key's high 6 bits (bucket order ≡ key
+  // order); bucket bound: ≤ 64 key buckets per stratum. A null lang or
+  // source is its own stratum, as in the oracle's one plain window, so
+  // the sizes join back null-safe too.
   private def q112(s: SparkSession, dir: String): DataFrame = {
     val keyed = Tables.documents(s, dir).select("doc_id", "lang", "source")
       .withColumn("key", conv(substring(md5(concat(lit("split:"),
         col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long"))
       .withColumn("bucket", (col("key") / lit(1L << 54)).cast("int"))
-    val counts = keyed.groupBy("lang", "source", "bucket").agg(count(lit(1)).as("c"))
-    val offsets = counts
-      .withColumn("off", coalesce(sum(col("c")).over(
-        Window.partitionBy("lang", "source").orderBy("bucket")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("lang", "source", "bucket", "off")
-    val sizes = counts.groupBy("lang", "source").agg(sum(col("c")).as("n"))
-    keyed
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("lang", "source", "bucket").orderBy("key", "doc_id")))
-      .join(broadcast(offsets), Seq("lang", "source", "bucket"))
-      .join(broadcast(sizes), Seq("lang", "source"))
-      .withColumn("rank", col("off") + col("rn"))
+    val sizes = keyed.groupBy(col("lang").as("s_lang"), col("source").as("s_source"))
+      .agg(count(lit(1)).as("n"))
+    PrefixSum.positions(keyed, Seq("lang", "source"), Seq("bucket"),
+        Seq(col("key"), col("doc_id")), "rank")
+      .join(broadcast(sizes),
+        col("lang") <=> col("s_lang") && col("source") <=> col("s_source"))
       .withColumn("split",
         when(col("rank") <= expr("n div 10"), lit("test"))
           .when(col("rank") <= expr("2 * (n div 10)"), lit("val"))
@@ -663,13 +653,12 @@ object Curation extends QueryModule {
   // prices each batch at max(len)·count versus its real token sum.
   // The gap in integer ppm is the padding waste a trainer pays.
   //
-  // Scale: both orders materialize positions with the q92/q112
-  // two-phase prefix sum ((group, md5-high-bits) sub-buckets, bounded
-  // offsets relations, uniform rank partitions); the per-batch rollup
+  // Scale: both orders materialize positions as PrefixSum positions
+  // over (group, md5-high-bits) buckets; the per-batch rollup
   // keys (b, group, batch) are uniform by construction, and the final
   // report is 4 rows. The oracle positions each group with ONE plain
-  // window ordered (kb, key, doc_id) — the same total order the
-  // two-phase computes — cross-checking the formulations.
+  // window ordered (kb, key, doc_id) — the same total order —
+  // cross-checking the formulations.
   private val PadBatches = Seq(64, 256)
   private def q118(s: SparkSession, dir: String): DataFrame = {
     val lens = graft.Caches.track(Tables.documents(s, dir)
@@ -682,19 +671,9 @@ object Curation extends QueryModule {
     val bkt = lens
       .withColumn("grp", (col("len") / 16L).cast("int"))
       .withColumn("kb", (col("key") / lit(1L << 54)).cast("int"))
-    def positions(df: DataFrame): DataFrame = {
-      val offsets = df.groupBy("grp", "kb").agg(count(lit(1)).as("c"))
-        .withColumn("off", coalesce(sum(col("c")).over(
-          Window.partitionBy("grp").orderBy("kb")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("grp", "kb", "off")
-      df.withColumn("rn", row_number().over(
-          Window.partitionBy("grp", "kb").orderBy("key", "doc_id")))
-        .join(broadcast(offsets), Seq("grp", "kb"))
-        .withColumn("pos", col("off") + col("rn"))
-    }
     def report(df: DataFrame, strategy: String): DataFrame =
-      positions(df)
+      // bucket bound: ≤ 64 key buckets per group
+      PrefixSum.positions(df, Seq("grp"), Seq("kb"), Seq(col("key"), col("doc_id")), "pos")
         .select(col("grp"), col("pos"), col("len"),
           explode(typedLit(PadBatches)).as("b"))
         .withColumn("batch", expr("(pos - 1) div b"))
@@ -841,38 +820,23 @@ object Curation extends QueryModule {
   // sequence, and how many sequences it spans. All pure integer window
   // math over a global prefix sum of token counts.
   //
-  // Scale shape: a single ORDER BY cumsum window is a one-partition
-  // bottleneck, so the prefix sum is TWO-PHASE — per-bucket partial sums
-  // (bucket = doc_id div BucketSz, a partitioned window), a tiny
-  // bucket-level running-offset window (|buckets| = corpus/BucketSz
-  // rows), and a broadcast join back. Same two-pass prefix-sum every
-  // distributed scan service uses; the oracle computes the plain global
+  // Scale shape: offsets come from IncrementalPack.withStartOff, the
+  // one pack-offset function (a PrefixSum over doc_id-range buckets),
+  // never a one-partition cumsum; the oracle computes the plain global
   // cumsum and the results agree exactly because the arithmetic is
   // identical.
-  private val SeqLen = 2048L
-  private val PackBucket = 1000L
+  private val SeqLen = IncrementalPack.SeqLen
 
-  private def q60(s: SparkSession, dir: String): DataFrame = {
-    val n = Tables.documents(s, dir)
-      .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      .withColumn("bucket", expr(s"doc_id div $PackBucket"))
-    val inBucket = n.withColumn("cum_in_bucket",
-      sum(col("n_tokens")).over(Window.partitionBy("bucket").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val bucketTotals = n.groupBy("bucket").agg(sum(col("n_tokens")).as("btot"))
-      .withColumn("boffset",
-        coalesce(sum(col("btot")).over(Window.orderBy("bucket")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("bucket", "boffset")
-    inBucket.join(broadcast(bucketTotals), "bucket")
-      .withColumn("cum", col("boffset") + col("cum_in_bucket"))
-      .withColumn("start_off", col("cum") - col("n_tokens"))
+  private def q60(s: SparkSession, dir: String): DataFrame =
+    IncrementalPack.withStartOff(Tables.documents(s, dir)
+        .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tokens"),
+          lit(0L).as("base_off")))
+      .withColumn("cum", col("start_off") + col("n_tokens"))
       .withColumn("seq_id", expr(s"start_off div $SeqLen"))
       .withColumn("offset", expr(s"start_off % $SeqLen"))
       .withColumn("n_seqs", expr(s"(cum - 1) div $SeqLen") - col("seq_id") + 1)
       .select("doc_id", "n_tokens", "seq_id", "offset", "n_seqs")
       .orderBy("doc_id")
-  }
 
   // ---------------------------------------------------------------------
   // q127 — PACKED-SEQUENCE MATERIALIZATION: q60 plans the layout; this
@@ -884,45 +848,22 @@ object Curation extends QueryModule {
   // EXACT token content in order — the checkable bytes of the packed
   // shard without dumping the corpus.
   //
-  // Scale shape: document offsets ride q60's two-phase prefix sum
-  // (never a one-partition cumsum); the token explode is narrow; the
-  // ONLY corpus-sized shuffle keys on seq_id, whose groups are FIXED at
-  // SeqLen tokens BY CONSTRUCTION — a perfectly uniform exchange at any
-  // corpus size, and the ordered collect per group is bounded at SeqLen
-  // elements (the q36 bounded-group discipline). The oracle replays the
-  // plain global cumsum + string_agg; identical integers, independent
-  // plan.
-  private def q127(s: SparkSession, dir: String): DataFrame = {
-    val n = Tables.documentsWide(s, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("ts"))
-      .withColumn("n_tokens", size(col("ts")).cast("long"))
-      .withColumn("bucket", expr(s"doc_id div $PackBucket"))
-    val inBucket = n.withColumn("cum_in_bucket",
-      sum(col("n_tokens")).over(Window.partitionBy("bucket").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val bucketTotals = n.groupBy("bucket").agg(sum(col("n_tokens")).as("btot"))
-      .withColumn("boffset",
-        coalesce(sum(col("btot")).over(Window.orderBy("bucket")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("bucket", "boffset")
-    inBucket.join(broadcast(bucketTotals), "bucket")
-      .withColumn("start_off", col("boffset") + col("cum_in_bucket") - col("n_tokens"))
-      .select(col("doc_id"), col("start_off"), posexplode(col("ts")).as(Seq("i", "tok")))
-      .withColumn("p", col("start_off") + col("i"))
-      .withColumn("seq_id", expr(s"p div $SeqLen"))
-      .withColumn("pos", expr(s"p % $SeqLen"))
-      .groupBy("seq_id")
-      .agg(count(lit(1)).cast("int").as("n_tokens"),
-        countDistinct(col("doc_id")).cast("int").as("n_docs"),
-        min(col("doc_id")).as("first_doc"),
-        max(col("doc_id")).as("last_doc"),
-        md5(expr("array_join(transform(array_sort(collect_list(struct(pos, tok))), x -> x.tok), ' ')"))
-          .as("content_hash"))
+  // Scale shape: the pack is IncrementalPack's offline pack (q60's
+  // offsets via IncrementalPack.withStartOff, then a narrow token
+  // explode); the ONLY corpus-sized shuffle keys on
+  // seq_id, whose groups are FIXED at SeqLen tokens BY CONSTRUCTION — a
+  // perfectly uniform exchange at any corpus size, and the ordered
+  // collect per group is bounded at SeqLen elements (the q36
+  // bounded-group discipline). The oracle replays the plain global
+  // cumsum + string_agg; identical integers, independent plan.
+  private def q127(s: SparkSession, dir: String): DataFrame =
+    IncrementalPack.packedWithContent(Tables.documentsWide(s, dir)
+        .select(col("doc_id"), col("text"), lit(0L).as("base_off")))
+      .withColumn("content_hash", md5(col("content")))
       .withColumn("fill_ppm", expr(s"(1000000 * CAST(n_tokens AS BIGINT)) div $SeqLen"))
       .select("seq_id", "n_tokens", "n_docs", "first_doc", "last_doc",
         "fill_ppm", "content_hash")
       .orderBy("seq_id")
-  }
 
   private val q127Sql =
     s"""WITH n AS (
@@ -1477,14 +1418,11 @@ object Curation extends QueryModule {
   // quality ordering — the two relations differ exactly where quality
   // beats chance.
   //
-  // Scale shape: the within-stratum prefix sum is the q60/q156
-  // TWO-PHASE pattern on the BOUNDED (lang, source, qmille) bucket key
-  // (quality is rounded to 6 places and bucketed at per-mille — ≤1001
-  // buckets per stratum, monotone in quality so bucket order refines
-  // the selection order): within-bucket windows partition by the full
-  // bucket key, bucket offsets cumsum over the bounded bucket relation,
-  // and no corpus-sized relation visits a single partition. Budgets are
-  // exact int64 arithmetic (q104's conventions).
+  // Scale shape: the within-stratum prefix sum is a PrefixSum on the
+  // per-mille quality bucket (quality is rounded to 6 places, so bucket
+  // order refines the selection order); bucket bound: ≤ 1001 quality
+  // buckets per stratum. Budgets are exact int64 arithmetic (q104's
+  // conventions).
   private val SelBudgetPct = 40L
   private def q173(s: SparkSession, dir: String): DataFrame = {
     val docs = graft.Caches.track(Tables.documents(s, dir)
@@ -1502,22 +1440,11 @@ object Curation extends QueryModule {
       .withColumn("target_tokens",
         least(expr("wi * ((budget100 div 100) div sum_wi)"), col("s_tokens")))
       .select("lang", "source", "target_tokens")
-    val qm = docs.withColumn("qmille", floor(col("quality") * 1000).cast("long"))
-    val inBucket = qm.withColumn("cum_in",
-      coalesce(sum(col("n_tokens")).over(
-        Window.partitionBy("lang", "source", "qmille")
-          .orderBy(col("quality").desc, col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val offsets = qm.groupBy("lang", "source", "qmille")
-      .agg(sum(col("n_tokens")).as("btoks"))
-      .withColumn("boff",
-        coalesce(sum(col("btoks")).over(
-          Window.partitionBy("lang", "source").orderBy(col("qmille").desc)
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("lang", "source", "qmille", "boff")
-    inBucket.join(offsets, Seq("lang", "source", "qmille"))
+    // quality DESC: buckets ascend in −qmille
+    val qm = docs.withColumn("neg_qmille", -floor(col("quality") * 1000).cast("long"))
+    PrefixSum.running(qm, Seq("lang", "source"), Seq("neg_qmille"),
+        Seq(col("quality").desc, col("doc_id")), col("n_tokens") -> "cum_before")
       .join(broadcast(targets), Seq("lang", "source"))
-      .withColumn("cum_before", col("boff") + col("cum_in"))
       .withColumn("selected", col("cum_before") < col("target_tokens"))
       .select("doc_id", "lang", "source", "n_tokens", "quality",
         "cum_before", "target_tokens", "selected")
@@ -1809,11 +1736,8 @@ object Curation extends QueryModule {
   //
   // Scale shape: scoring is q67's (one vocab-sized model aggregation,
   // one corpus re-scan); the curriculum ORDER then needs a global
-  // token prefix sum over corpus-sized rows — which runs as the q60
-  // TWO-PHASE prefix sum keyed on the BOUNDED millibits domain
-  // (≤ 64·1000 values): within-bucket windows partition by millibits,
-  // bucket offsets cumsum over the bounded bucket relation, and no
-  // corpus-sized relation ever visits a single partition. Pure integer
+  // token prefix sum over corpus-sized rows — a PrefixSum bucketed on
+  // the millibits value itself, a domain-bounded key. Pure integer
   // arithmetic end to end.
   private val CurrPct1 = 20L // phase 1: first 20 % of tokens
   private val CurrPct2 = 50L // phase 2: through 50 % cumulative
@@ -1830,19 +1754,10 @@ object Curation extends QueryModule {
       .agg(count(lit(1)).as("n_tokens"), sum(col("bits")).as("total_bits"))
       .withColumn("millibits", expr("total_bits * 1000 div n_tokens"))
       .select("doc_id", "n_tokens", "millibits"))
-    // two-phase prefix sum of n_tokens in (millibits, doc_id) order
-    val wIn = Window.partitionBy("millibits").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val inB = mb.withColumn("cum_in",
-      coalesce(sum(col("n_tokens")).over(wIn), lit(0L)))
-    val wOff = Window.orderBy("millibits")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = mb.groupBy("millibits").agg(sum(col("n_tokens")).as("bsum"))
-      .withColumn("cum_off", coalesce(sum(col("bsum")).over(wOff), lit(0L)))
-      .select("millibits", "cum_off")
     val tt = mb.agg(sum(col("n_tokens")).as("tt"))
-    inB.join(broadcast(offs), "millibits")
-      .withColumn("cum_before", col("cum_off") + col("cum_in"))
+    // bucket bound: ≤ 64·1000 millibits values
+    PrefixSum.running(mb, Nil, Seq("millibits"), Seq(col("doc_id")),
+        col("n_tokens") -> "cum_before")
       .crossJoin(broadcast(tt))
       .withColumn("phase",
         when(col("cum_before") < expr(s"tt * $CurrPct1 div 100"), lit(1))

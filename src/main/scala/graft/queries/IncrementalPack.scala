@@ -1,10 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Artifacts, QueryModule, Tables}
+import graft.{Artifacts, PrefixSum, QueryModule, Tables}
 
 /** q128 — INCREMENTAL PACKED-SHARD INTAKE: the q84 artifact pattern
   * applied to the PACKING family, completing its production shapes —
@@ -94,10 +93,10 @@ object IncrementalPack extends QueryModule {
       .select((col("doc_id") + ShardBase).as("doc_id"), col("text"))
 
   /** Per-doc packed offsets of a (doc_id, text, base_off) relation —
-    * (doc_id, ts, n_tokens, start_off) via the q60 two-phase prefix
-    * sum, never a one-partition global cumsum. The shared NARROW front
-    * half of [[packedFromOffsets]] (the token explode) and
-    * [[docSpansFromOffsets]] (the roster — no explode at all). */
+    * (doc_id, ts, n_tokens, start_off) via [[withStartOff]]. The
+    * shared NARROW front half of [[packedFromOffsets]] (the token
+    * explode) and [[docSpansFromOffsets]] (the roster — no explode at
+    * all). */
   private def offsetsOf(docs: DataFrame): DataFrame =
     offsetsOfTs(docs.select(col("doc_id"), col("base_off"),
       split(col("text"), " ").as("ts")))
@@ -109,29 +108,19 @@ object IncrementalPack extends QueryModule {
       .withColumn("n_tokens", size(col("ts")).cast("long")))
       .select("doc_id", "ts", "n_tokens", "start_off")
 
-  /** Add `start_off` to any (doc_id, base_off, n_tokens, …) relation
-    * via the q60 two-phase prefix sum — per-bucket partials, a tiny
-    * bucket-offset window, broadcast join back; extra columns ride
-    * through. The sum references its input TWICE (window branch +
-    * bucket totals), so callers whose input embeds an expensive scan
-    * pay it twice — the roster-only path (q146) therefore runs it over
-    * the artifact's own narrow token counts and joins corpus text in
-    * exactly once, downstream (PlanSpec). */
-  private def withStartOff(rel: DataFrame): DataFrame = {
-    val n = rel.withColumn("bucket", expr(s"doc_id div $PackBucket"))
-    val inBucket = n.withColumn("cum_in_bucket",
-      sum(col("n_tokens")).over(Window.partitionBy("bucket").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val bucketTotals = n.groupBy("bucket").agg(sum(col("n_tokens")).as("btot"))
-      .withColumn("boffset",
-        coalesce(sum(col("btot")).over(Window.orderBy("bucket")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("bucket", "boffset")
-    inBucket.join(broadcast(bucketTotals), "bucket")
-      .withColumn("start_off",
-        col("base_off") + col("boffset") + col("cum_in_bucket") - col("n_tokens"))
-      .drop("bucket", "cum_in_bucket", "boffset")
-  }
+  /** Add `start_off` to any (doc_id, base_off, n_tokens, …) relation:
+    * `base_off` plus the tokens of every earlier doc_id (pack order);
+    * extra columns ride through. Bucket bound: ≤ corpus/PackBucket
+    * doc_id ranges. The sum reads its input twice, so the roster-only
+    * path (q146) runs it over the artifact's own narrow token counts
+    * and joins corpus text in exactly once, downstream (PlanSpec). The
+    * offline pack (q60/q127) passes `base_off` 0. */
+  private[graft] def withStartOff(rel: DataFrame): DataFrame =
+    PrefixSum.running(rel.withColumn("bucket", expr(s"doc_id div $PackBucket")),
+        partition = Nil, bucket = Seq("bucket"), order = Seq(col("doc_id")),
+        col("n_tokens") -> "start_off")
+      .withColumn("start_off", col("base_off") + col("start_off"))
+      .drop("bucket")
 
   /** Pack per-doc offsets into per-sequence rows WITH the exact
     * in-order token content string; the grouped collect is bounded at
@@ -151,8 +140,9 @@ object IncrementalPack extends QueryModule {
 
   /** Pack a (doc_id, text, base_off) relation into per-sequence rows;
     * token positions start at `base_off` (lit 0 for the offline pack,
-    * the frozen broadcast total for serving). */
-  private def packedWithContent(docs: DataFrame): DataFrame =
+    * the frozen broadcast total for serving; q127 packs the corpus
+    * this way). */
+  private[graft] def packedWithContent(docs: DataFrame): DataFrame =
     packedFromOffsets(offsetsOf(docs))
 
   /** The doc→sequence-span roster (doc_id, first_seq, last_seq): which

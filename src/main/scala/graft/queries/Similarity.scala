@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Artifacts, QueryModule, Tables}
+import graft.{Artifacts, PrefixSum, QueryModule, Tables}
 
 /** Similarity search over the `embeddings` table (64-dim unit vectors):
   * brute-force cosine top-k as the exact baseline, plus two bucketed
@@ -2792,34 +2792,22 @@ object Similarity extends QueryModule {
   // covers every mode of the embedding space instead of letting the
   // dominant cluster eat the whole budget.
   //
-  // Scale: per-cluster rank is a corpus-sized total order, so it runs
-  // as a TWO-PHASE prefix sum in the q92/q112 family — but bucketed by
-  // ⌊log₂(dist²+1)⌋ (≤64 value-ordered buckets per cluster; log₂ is
-  // monotone, so bucket order ≡ rank order and equal dist² never spans
-  // buckets) instead of md5 high bits: the offsets relation stays
-  // bounded (K×64 rows), and the within-bucket window partitions by
-  // (cid, bucket). Unlike the md5 permutation the bucket sizes follow
-  // the dist² distribution, so a degenerate cluster (all points
-  // equidistant) concentrates one bucket — the documented residual;
-  // the DuckDB oracle ranks with one plain window, cross-checking the
-  // formulations.
+  // Scale: per-cluster rank is a corpus-sized total order, so it is a
+  // PrefixSum position bucketed by ⌊log₂(dist²+1)⌋ (log₂ is monotone,
+  // so bucket order ≡ rank order and equal dist² never spans buckets);
+  // bucket bound: ≤ 64 log₂ buckets per cluster. Unlike an md5
+  // permutation the bucket sizes follow the dist² distribution, so a
+  // degenerate cluster (all points equidistant) concentrates one
+  // bucket — the documented residual; the DuckDB oracle ranks with one
+  // plain window, cross-checking the formulations.
   private def q117(s: SparkSession, dir: String): DataFrame = {
     val a = graft.Caches.track(kmAssignments(s, dir)
       .withColumn("lb", (length(bin(col("dist2") + 1)) - 1).cast("int")))
     val tot = a.agg(count(lit(1)).as("n_total"))
-    val counts = a.groupBy("cid", "lb").agg(count(lit(1)).as("c"))
-    val offsets = counts
-      .withColumn("off", coalesce(sum(col("c")).over(
-        Window.partitionBy("cid").orderBy("lb")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("cid", "lb", "off")
-    val sizes = counts.groupBy("cid").agg(sum(col("c")).as("n_c"))
-    a.withColumn("rn", row_number().over(
-        Window.partitionBy("cid", "lb").orderBy("dist2", "vec_id")))
-      .join(broadcast(offsets), Seq("cid", "lb"))
+    val sizes = a.groupBy("cid").agg(count(lit(1)).as("n_c"))
+    PrefixSum.positions(a, Seq("cid"), Seq("lb"), Seq(col("dist2"), col("vec_id")), "rank")
       .join(broadcast(sizes), Seq("cid"))
       .crossJoin(broadcast(tot))
-      .withColumn("rank", col("off") + col("rn"))
       .withColumn("quota", least(col("n_c"), expr(s"n_total div ${2 * KmK}")))
       .withColumn("keep", col("rank") <= col("quota"))
       .select("vec_id", "cid", "dist2", "rank", "quota", "keep")
@@ -2974,33 +2962,23 @@ object Similarity extends QueryModule {
   // long-context run buys; a near-zero gain says the clustering is too
   // coarse to bother.
   //
-  // Scale shape: both layouts ride the q60 TWO-PHASE prefix sum —
-  // `arrival` bucketed by doc_id ranges, `semantic` bucketed by the
-  // cluster id itself (K buckets, ordered within by doc_id) — so no
-  // corpus-sized relation visits one partition; per-sequence cluster
+  // Scale shape: both layouts are a PrefixSum over doc_id order within
+  // a bucket; bucket bound: ≤ corpus/LayoutBucket doc_id ranges for
+  // `arrival`, the K cluster ids for `semantic`. Per-sequence cluster
   // mass comes from span arithmetic over the ≤(len/SeqLen + 2)-sequence
   // roster explode (tokens never explode); the two report rows are
   // bounded aggregates. Pure integer arithmetic.
   private val LayoutSeqLen = 2048L
   private val LayoutBucket = 1000L
   private def q163(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("nt"))
     val cids = kmAssignments(s, dir).select(col("vec_id").as("doc_id"), col("cid"))
     val docs = graft.Caches.track(toks.join(cids, "doc_id"))
     def layoutRow(name: String, bucket: org.apache.spark.sql.Column): DataFrame = {
-      val b = docs.withColumn("bucket", bucket)
-      val inB = b.withColumn("cum_in", sum(col("nt")).over(
-        Window.partitionBy("bucket").orderBy("doc_id")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      val offs = b.groupBy("bucket").agg(sum(col("nt")).as("btot"))
-        .withColumn("boff", coalesce(sum(col("btot")).over(
-          Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("bucket", "boff")
-      val spans = inB.join(broadcast(offs), "bucket")
-        .withColumn("e", col("boff") + col("cum_in"))
-        .withColumn("st", col("e") - col("nt"))
+      val spans = PrefixSum.running(docs.withColumn("bucket", bucket), Nil, Seq("bucket"),
+          Seq(col("doc_id")), col("nt") -> "st")
+        .withColumn("e", col("st") + col("nt"))
       val perSeqCid = spans
         .select(col("cid"), col("st"), col("e"),
           explode(expr(s"sequence(st div $LayoutSeqLen, (e - 1) div $LayoutSeqLen)")).as("seq"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryModule, Tables}
+import graft.{PrefixSum, QueryModule, Tables}
 import graft.functions.Multimodal
 
 /** Text analysis for training-data pipelines over `documents`: token
@@ -1000,19 +1000,15 @@ object TextPipeline extends QueryModule {
   // cum_share cross 99.9%?), and the OOV mass is 1 − cum_share at the
   // cap. Plan: one uniform (token) aggregation shuffles the corpus ONCE
   // (the exchange is reused by both consumers below); the rank/cumsum
-  // over the vocabulary then runs as the q60 TWO-PHASE prefix sum, not a
-  // single-partition global window — the vocabulary is Heaps-law
-  // unbounded at 100 TB, so "vocab-sized" is not "bounded". Buckets
-  // follow the ranking order (freq DESC, token): the low-frequency tail
-  // (freq < HeadFreq), which under Zipf holds most of the vocabulary and
-  // would make plain log2 bands skew onto the freq=1 partition, buckets
-  // by EXACT freq × first-token-character (same freq inside a bucket, so
-  // prefix order == token order); the head (freq ≥ HeadFreq, few tokens)
-  // buckets by log2 band. Bucket ordering (blo DESC, bpre ASC) is a
-  // refinement of the global order, and the bucket relation is
-  // constant-bounded (≤ HeadFreq·|alphabet| + 63 rows), so the
-  // bucket-offset window is the only partition-less window and runs over
-  // a provably constant input.
+  // over the vocabulary then runs as a PrefixSum, not a single-partition
+  // global window — the vocabulary is Heaps-law unbounded at 100 TB, so
+  // "vocab-sized" is not "bounded". Buckets follow the ranking order
+  // (freq DESC, token): the low-frequency tail (freq < HeadFreq), which
+  // under Zipf holds most of the vocabulary and would make plain log2
+  // bands skew onto the freq=1 partition, buckets by EXACT freq ×
+  // first-token-character (same freq inside a bucket, so prefix order
+  // == token order); the head (freq ≥ HeadFreq, few tokens) buckets by
+  // log2 band.
   private val VocabSize = 16
   private val HeadFreq = 16L
   private def q69(s: SparkSession, dir: String): DataFrame = {
@@ -1020,27 +1016,17 @@ object TextPipeline extends QueryModule {
       .select(explode(split(col("text"), " ")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("freq"))
     val total = freq.agg(sum(col("freq")).as("total"))
+    // freq DESC: buckets ascend in −blo
     val keyed = freq
-      .withColumn("blo", expr(s"CASE WHEN freq < $HeadFreq THEN freq " +
-        "ELSE shiftleft(CAST(1 AS BIGINT), length(bin(freq)) - 1) END"))
+      .withColumn("neg_blo", expr(s"CASE WHEN freq < $HeadFreq THEN -freq " +
+        "ELSE -shiftleft(CAST(1 AS BIGINT), length(bin(freq)) - 1) END"))
       .withColumn("bpre",
         when(col("freq") < HeadFreq, substring(col("token"), 1, 1)).otherwise(lit("")))
-    val wIn = Window.partitionBy("blo", "bpre").orderBy(col("freq").desc, col("token"))
-    val inBucket = keyed
-      .withColumn("rk_in", row_number().over(wIn).cast("long"))
-      .withColumn("cum_in", sum(col("freq")).over(
-        wIn.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val wOff = Window.orderBy(col("blo").desc, col("bpre"))
-    val offsets = keyed.groupBy("blo", "bpre")
-      .agg(count(lit(1)).as("bcnt"), sum(col("freq")).as("bsum"))
-      .withColumn("rk_off", coalesce(sum(col("bcnt")).over(
-        wOff.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("cum_off", coalesce(sum(col("bsum")).over(
-        wOff.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("blo", "bpre", "rk_off", "cum_off")
-    inBucket.join(broadcast(offsets), Seq("blo", "bpre"))
-      .withColumn("rank", (col("rk_off") + col("rk_in")).cast("int"))
-      .withColumn("cum_freq", col("cum_off") + col("cum_in"))
+    // bucket bound: ≤ HeadFreq·|alphabet| + 63 (band, first character) buckets
+    PrefixSum.running(keyed, Nil, Seq("neg_blo", "bpre"), Seq(col("freq").desc, col("token")),
+        lit(1L) -> "rk_before", col("freq") -> "cum_before")
+      .withColumn("rank", (col("rk_before") + 1).cast("int"))
+      .withColumn("cum_freq", col("cum_before") + col("freq"))
       .crossJoin(broadcast(total))
       .withColumn("cum_share", round(col("cum_freq").cast("double") / col("total"), 6))
       .withColumn("in_vocab", col("rank") <= VocabSize)

@@ -44,22 +44,42 @@ class ModuleSpec extends SparkTestBase {
       "graft/queries/Similarity.scala" -> 2,    // SimHash / JL plane signs
       "graft/queries/TextPipeline.scala" -> 2,  // BPE / unigram token hashes
       "graft/streaming/Streams.scala" -> 2)     // streaming twins of the above
+    def count(text: String, needle: String) =
+      java.util.regex.Pattern.quote(needle).r.findAllMatchIn(text).size
+    val found = mainSources.map { case (f, text) =>
+      (f, count(text, "\"_COMPLETE\""), count(text, "MessageDigest.getInstance(\"MD5\")"))
+    }
+    val markers = found.collect { case (f, n, _) if n > 0 => f }
+    assert(markers == Seq("graft/Artifacts.scala"), s"_COMPLETE literal outside Artifacts: $markers")
+    val md5 = found.collect { case (f, _, n) if n > 0 => f -> n }.toMap
+    assert(md5 == rowHashing, s"MD5 digests differ from the named uses: $md5")
+  }
+
+  test("the two-phase prefix sum exists once: exclusive running windows only in graft.PrefixSum") {
+    // a hand-written bucket-offset window would fork PrefixSum's
+    // cardinality argument; the one other exclusive frame is q57's as-of
+    // last() window, which is not a sum
+    val exclusive = "rowsBetween\\(\\s*Window\\.unboundedPreceding\\s*,\\s*-1\\s*\\)".r
+    val partitionLess = "Window\\s*\\.\\s*orderBy\\(".r
+    def counts(re: scala.util.matching.Regex) = mainSources
+      .map { case (f, text) => f -> re.findAllMatchIn(text).size }
+      .filter(_._2 > 0).toMap
+    assert(counts(exclusive) == Map("graft/PrefixSum.scala" -> 2,
+      "graft/queries/Temporal.scala" -> 1), // q57's as-of window
+      s"exclusive running windows outside PrefixSum: ${counts(exclusive)}")
+    assert(counts(partitionLess).keySet.subsetOf(Set("graft/PrefixSum.scala")),
+      s"partition-less Window.orderBy outside PrefixSum: ${counts(partitionLess)}")
+  }
+
+  /** (path relative to src/main/scala, text) of every main source file. */
+  private def mainSources: Seq[(String, String)] = {
     val root = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala")
     assert(java.nio.file.Files.isDirectory(root), s"no main sources at $root")
     import scala.jdk.CollectionConverters._
     val sources = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(sources.size > 50, s"source scan found only ${sources.size} files")
-    def count(text: String, needle: String) =
-      java.util.regex.Pattern.quote(needle).r.findAllMatchIn(text).size
-    val found = sources.map { f =>
-      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      (root.relativize(f).toString,
-        count(text, "\"_COMPLETE\""), count(text, "MessageDigest.getInstance(\"MD5\")"))
-    }
-    val markers = found.collect { case (f, n, _) if n > 0 => f }
-    assert(markers == Seq("graft/Artifacts.scala"), s"_COMPLETE literal outside Artifacts: $markers")
-    val md5 = found.collect { case (f, _, n) if n > 0 => f -> n }.toMap
-    assert(md5 == rowHashing, s"MD5 digests differ from the named uses: $md5")
+    sources.map(f => root.relativize(f).toString ->
+      new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
   }
 }

@@ -118,11 +118,18 @@ class PlanSpec extends SparkTestBase {
     // "bounded"). A partition-less window is legal only
     //   (a) above a constant LIMIT — the ≤top-K rank derivation in
     //       q70/q73/q80 (detected structurally: GlobalLimit below), or
-    //   (b) over a bucket relation of a two-phase prefix sum, exempted
-    //       by name: q60's bucket offsets (|buckets| = corpus/PackBucket,
-    //       three orders of magnitude below the data; the pattern nests
-    //       if another level is ever needed) and q69's bucket offsets
-    //       (≤ HeadFreq·|alphabet| + 63 rows, constant by construction).
+    //   (b) over the bucket-offset relation of a graft.PrefixSum without
+    //       a partition key, exempted by name below. PrefixSum's
+    //       scaladoc holds the cardinality rule (one row per bucket, so
+    //       the bucket must bound the relation independently of corpus
+    //       size); the bounds are
+    //         q60/q127/q128/q146  ≤ corpus/PackBucket doc_id ranges
+    //                             (q128: the day's shard, q146: the
+    //                             rebuild docs)
+    //         q69                 ≤ HeadFreq·|alphabet| + 63 buckets
+    //         q156                ≤ 64·1000 millibits values
+    //         q163                ≤ corpus/LayoutBucket doc_id ranges,
+    //                             plus K cluster ids
     // The top-K rank windows themselves were removed outright
     // (TopK.ranked derives rank from a bounded sort_array aggregate), so
     // (a) exists for defense in depth. Foldable partition keys count as
@@ -130,21 +137,6 @@ class PlanSpec extends SparkTestBase {
     // strips constant keys anyway (partitionBy(lit(0)) degenerates to an
     // empty spec), so the ban cannot be dodged with a literal key.
     import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Window => LogicalWindow}
-    // q127 joined the two-phase-prefix-sum exemption class in round 12:
-    // its bucket-offset window runs over |buckets| = corpus/PackBucket
-    // rows, exactly q60's bounded relation (they share the machinery).
-    // q128's serving prefix sum runs its bucket-offset window over the
-    // DAY'S SHARD buckets (|shard|/PackBucket rows — intake-sized, not
-    // corpus-sized), the same bounded relation class.
-    // q146's repack suffix re-runs the same two-phase sum over the
-    // rebuild docs' buckets — the identical bounded bucket relation.
-    // q156's curriculum prefix sum buckets on the millibits value
-    // itself — a DOMAIN-bounded key (≤ 64·1000 integer values
-    // regardless of corpus size), so its bucket-offset window joins
-    // the same exemption class.
-    // q163 runs TWO layouts' two-phase prefix sums: the arrival
-    // bucket-offset window (doc_id ranges, q60's class) and the
-    // semantic one (cid buckets, K rows — constant).
     val exempt = Map("q60_sequence_packing" -> 1, "q69_vocab_coverage" -> 1,
       "q127_pack_materialize" -> 1, "q128_incremental_pack" -> 1,
       "q146_pack_repack" -> 1, "q156_curriculum_plan" -> 1,
