@@ -9,8 +9,9 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * dedup, media, prepare, pack, lexical, containment, graph-ANN and PQ
   * indexes and the curation verdicts: where artifacts live ([[root]]),
   * how a path is keyed ([[key]]), how an artifact is built once and
-  * published so a replay is a no-op ([[publish]]), and how a removal
-  * request becomes a tombstone generation ([[tombstone]]). Each family
+  * published so a replay is a no-op ([[publish]]), how a removal
+  * request becomes a tombstone generation ([[tombstone]]) and how a
+  * serve reads the live generations back ([[tombstoned]]). Each family
   * keeps its own key derivation (what its paths fingerprint) and its
   * own layout (what a generation holds).
   *
@@ -101,4 +102,11 @@ object Artifacts {
         .write.mode("overwrite").parquet(s"$tmp/ids")
     }
   }
+
+  /** The read half of [[tombstone]]: the ids the generations at `paths`
+    * remove, as the distinct union of their `ids/` (overlapping requests
+    * may name one id twice, and a doubled id would duplicate every row
+    * a left join matches to it), or None when no generation is live. */
+  def tombstoned(s: SparkSession, paths: Seq[String]): Option[DataFrame] =
+    paths.map(t => s.read.parquet(s"$t/ids")).reduceOption(_ unionByName _).map(_.distinct())
 }

@@ -1536,7 +1536,7 @@ object Curation extends QueryModule {
     * tables — the hash gate proves artifact serving ≡ recomputation. */
   private def verdictArtifact(s: SparkSession, dir: String, name: String)
                              (build: => DataFrame): DataFrame = {
-    val fp = IncrementalDedup.dataFingerprint(s, dir)
+    val fp = Intake.dataFingerprint(s, dir)
     val path = Artifacts.publish(s, s"${Artifacts.root}/verdict-$name-$fp") { tmp =>
       build.write.mode("overwrite").parquet(s"$tmp/keep")
     }

@@ -47,32 +47,32 @@ import graft.{Artifacts, QueryModule, Tables}
   * re-key disjointness guard), after which replaying the same shard
   * keeps nothing.
   *
-  * The staged shard plants all three verdict classes on deterministic
-  * splits: genuinely new pages (doc_id % 5 = 4, as-is), corpus
-  * SNIPPETS (first half of corpus docs with doc_id % 10 = 0 and ≥ 12
-  * tokens, re-keyed +1e6 — a prefix cut, so its shingles are a subset
-  * of the full doc's: contained_in_corpus at containment 1.0), and
-  * snippets OF THE NEW PAGES (doc_id % 20 = 4 with ≥ 12 tokens,
-  * re-keyed +3e6 — their containers are shard docs, not corpus:
-  * contained_in_batch).
+  * The staged shard plants all three verdict classes on [[Intake]]'s
+  * splits, three of its arms: the arrivals as they are, corpus
+  * SNIPPETS (first half of each [[Intake.recrawled]] corpus doc with
+  * ≥ 12 tokens, re-keyed +1·ShardBase — a prefix cut, so its shingles
+  * are a subset of the full doc's: contained_in_corpus at containment
+  * 1.0), and snippets OF THE NEW PAGES ([[Intake.resubmitted]]
+  * arrivals with ≥ 12 tokens, re-keyed +3·ShardBase — their containers
+  * are shard docs, not corpus: contained_in_batch).
   */
 object IncrementalContain extends QueryModule {
-  import IncrementalDedup.{ShardBase, assertRekeyDisjoint}
+  import Intake.ShardBase
 
   private[graft] val MinSet = 4    // contained side must carry >= 4 shingles
   private val SnipMinToks = 12     // snippets cut docs with >= 12 tokens
 
   private[graft] def indexPath(s: SparkSession, dir: String): String = {
-    val fp = IncrementalDedup.dataFingerprint(s, dir)
+    val fp = Intake.dataFingerprint(s, dir)
     s"${Artifacts.root}/contain-${Artifacts.key(s"contain#$fp")}"
   }
   private[graft] def shardPath(s: SparkSession, dir: String): String = {
-    val fp = IncrementalDedup.dataFingerprint(s, dir)
+    val fp = Intake.dataFingerprint(s, dir)
     s"${Artifacts.root}/contain-shard-${Artifacts.key(s"containshard#$fp")}"
   }
 
-  private def corpusDocs(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir).select("doc_id", "text").filter(col("doc_id") % 5 =!= 4)
+  private def texts(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).select("doc_id", "text")
 
   /** First-half prefix cut: tokens 1 .. n div 2 rejoined. */
   private def halfCut(docs: DataFrame): DataFrame =
@@ -81,13 +81,11 @@ object IncrementalContain extends QueryModule {
       .select(col("doc_id"),
         expr("array_join(slice(ts, 1, size(ts) div 2), ' ')").as("text"))
 
-  private def shardDocs(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select("doc_id", "text")
-    docs.filter(col("doc_id") % 5 === 4)
-      .unionByName(halfCut(docs.filter(col("doc_id") % 10 === 0))
-        .select((col("doc_id") + ShardBase).as("doc_id"), col("text")))
-      .unionByName(halfCut(docs.filter(col("doc_id") % 20 === 4))
-        .select((col("doc_id") + 3 * ShardBase).as("doc_id"), col("text")))
+  private def shardDocs(docs: DataFrame): DataFrame = {
+    val id = col("doc_id")
+    docs.filter(Intake.arrivals(id))
+      .unionByName(Intake.rekey(halfCut(docs.filter(Intake.recrawled(id))), 1))
+      .unionByName(Intake.rekey(halfCut(docs.filter(Intake.resubmitted(id))), 3))
   }
 
   /** One containment-index generation (postings, verification sets,
@@ -96,7 +94,7 @@ object IncrementalContain extends QueryModule {
   private[graft] def buildGenIndex(s: SparkSession, docs: DataFrame,
                                    outPath: String): String =
     Artifacts.publish(s, outPath) { tmp =>
-      assertRekeyDisjoint(docs, "contain")
+      Intake.assertRekeyDisjoint(docs, "contain")
       val sets = Dedup.shingleSetsOf(docs)
       sets.write.mode("overwrite").parquet(s"$tmp/sets")
       val postings = sets.select(col("doc_id"), explode(col("set")).as("tok"))
@@ -107,11 +105,13 @@ object IncrementalContain extends QueryModule {
 
   /** Offline: persist postings, verification sets, and frozen df. */
   private[graft] def buildIndex(s: SparkSession, dir: String): String =
-    buildGenIndex(s, corpusDocs(s, dir), indexPath(s, dir))
+    buildGenIndex(s, texts(s, dir).filter(Intake.corpus(col("doc_id"))), indexPath(s, dir))
 
   private[graft] def stageShard(s: SparkSession, dir: String): String =
     Artifacts.publish(s, shardPath(s, dir)) { tmp =>
-      shardDocs(s, dir).write.mode("overwrite").parquet(s"$tmp/docs")
+      val all = texts(s, dir)
+      Intake.assertRekeyDisjoint(all, "contain")
+      shardDocs(all).write.mode("overwrite").parquet(s"$tmp/docs")
     }
 
   /** Postings with each container's verification set attached
@@ -301,7 +301,7 @@ object IncrementalContain extends QueryModule {
   // q133 shape: `ids/` = request ∩ the index's own sets roster — the
   // corpus is never read.
   private[graft] def tombPath(s: SparkSession, dir: String): String = {
-    val fp = IncrementalDedup.dataFingerprint(s, dir)
+    val fp = Intake.dataFingerprint(s, dir)
     s"${Artifacts.root}/contain-tomb-${Artifacts.key(s"containtomb#$fp")}"
   }
 
@@ -312,33 +312,14 @@ object IncrementalContain extends QueryModule {
                               idxPath: String, outBase: String): String =
     Artifacts.tombstone(s, s.read.parquet(s"$idxPath/sets").select("doc_id"), ids, outBase)
 
-  /** q179's serve with redaction: `container` nulls where the cited
-    * min-container is tombstoned; verdict/keep are untouched (the
-    * content stays blocked — that is the policy). */
-  private[graft] def verdictsRedacted(s: SparkSession, shard: DataFrame,
-                                      idxPath: String, tombPaths: Seq[String]): DataFrame = {
-    // distinct: overlapping tombstone generations may both name the same
-    // container, and a duplicated redact row would duplicate every
-    // verdict row citing it through the left join
-    val dead = tombPaths.map(t => s.read.parquet(s"$t/ids"))
-      .reduce(_ unionByName _)
-      .distinct()
-      .select(col("doc_id").as("container"), lit(true).as("redact"))
-    verdictsAgainst(s, shard, idxPath)
-      .join(broadcast(dead), Seq("container"), "left")
-      .select(col("doc_id"), col("verdict"), col("keep"),
-        when(col("redact").isNotNull, lit(null).cast("long"))
-          .otherwise(col("container")).as("container"))
-      .orderBy("doc_id")
-  }
-
   private def q182(s: SparkSession, dir: String): DataFrame = {
     val idx = buildIndex(s, dir)
     val shard = stageShard(s, dir)
     val t = takedown(s,
-      s.read.parquet(s"$idx/sets").select("doc_id").filter(col("doc_id") % 7 === 3),
+      s.read.parquet(s"$idx/sets").select("doc_id").filter(Intake.requested(col("doc_id"))),
       idx, tombPath(s, dir))
-    verdictsRedacted(s, s.read.parquet(s"$shard/docs"), idx, Seq(t))
+    Intake.redacted(s, verdictsAgainst(s, s.read.parquet(s"$shard/docs"), idx),
+      "container", Seq(t))
   }
 
   // ---------------------------------------------------------------------
@@ -357,18 +338,16 @@ object IncrementalContain extends QueryModule {
   // containment crosses the retired era and the readmission path is
   // non-vacuously exercised on the driver corpus.
   private[graft] def genPath(s: SparkSession, dir: String, tag: String): String = {
-    val fp = IncrementalDedup.dataFingerprint(s, dir)
+    val fp = Intake.dataFingerprint(s, dir)
     s"${Artifacts.root}/contain-gen$tag-${Artifacts.key(s"containgen$tag#$fp")}"
   }
 
   private def q183(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select("doc_id", "text")
+    val id = col("doc_id")
     val g0 = buildGenIndex(s,
-      docs.filter(col("doc_id") % 5 =!= 4 && col("doc_id") % 2 === 0),
-      genPath(s, dir, "0"))
+      texts(s, dir).filter(Intake.corpus(id) && Intake.era(id, 0)), genPath(s, dir, "0"))
     val g1 = buildGenIndex(s,
-      docs.filter(col("doc_id") % 5 =!= 4 && col("doc_id") % 2 === 1),
-      genPath(s, dir, "1"))
+      texts(s, dir).filter(Intake.corpus(id) && Intake.era(id, 1)), genPath(s, dir, "1"))
     val shard = s.read.parquet(s"${stageShard(s, dir)}/docs")
     val win = verdictsWindow(s, shard, Seq(g1)) // era 0 retired
     // the audit bit: would the retired era's index have contained it?

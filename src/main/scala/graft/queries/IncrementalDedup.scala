@@ -51,79 +51,32 @@ import graft.{Artifacts, QueryModule, Tables}
   * nothing and a re-ingest reproduces a content-identical index
   * (IncrementalDedupSpec's idempotency contract).
   *
-  * The staged shard simulates a real intake mix on the deterministic
-  * doc_id split: the day's genuinely new pages (doc_id % 5 = 4), a
-  * re-crawl of corpus pages (doc_id % 10 = 0, re-keyed +1e6 and again
-  * +2e6 — exact corpus dups), and a double-submitted slice of the new
-  * pages (doc_id % 20 = 4, re-keyed +3e6 — within-shard dups).
+  * The staged shard is [[Intake.shard]]'s intake mix: the day's new
+  * pages, a twice re-keyed re-crawl of corpus pages (exact corpus dups)
+  * and a double-submitted slice of the new pages (within-shard dups).
   */
 object IncrementalDedup extends QueryModule {
 
-  /** Shard re-key base shared by the intake families: a day's doc ids
-    * land above every corpus id, making append order = doc_id order
-    * and additivity-by-disjointness true by construction. */
-  private[graft] val ShardBase = 1000000L
-
-  /** Fail-loud guard for the re-key disjointness precondition. Every
-    * intake family's correctness contract (q84's verdict precedence,
-    * q128's append order, q132's df/N additivity) rests on re-keyed
-    * shard ids landing ABOVE every corpus id — a corpus with doc_id ≥
-    * [[ShardBase]] would silently collide re-keyed ids with corpus ids
-    * and corrupt those results instead of failing. Called inside each
-    * family's corpus-generation publish, so it prices ONE bounded agg
-    * at build time and nothing on the serve path. */
-  private[graft] def assertRekeyDisjoint(corpus: DataFrame, family: String): Unit = {
-    val mx = corpus.agg(max(col("doc_id"))).head()
-    if (!mx.isNullAt(0))
-      require(mx.getLong(0) < ShardBase,
-        s"$family intake: corpus max doc_id ${mx.getLong(0)} >= ShardBase $ShardBase — " +
-          "re-keyed shard ids would collide with corpus ids; raise the re-key base")
-  }
-
-  /** Same staleness contract as the PQ index: the artifact key folds in
-    * the documents table's [[Tables.fingerprint]], so a regenerated
-    * corpus under the same path keys to a fresh index. Metadata only. */
-  private[graft] def dataFingerprint(s: SparkSession, dir: String): String =
-    Artifacts.key(s"$dir#dedup#${Tables.fingerprint(s, s"$dir/documents.parquet")}")
-
   private[graft] def indexPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/dedup-${dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/dedup-${Intake.dataFingerprint(s, dir)}"
   private[graft] def shardPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/dedup-shard-${dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/dedup-shard-${Intake.dataFingerprint(s, dir)}"
 
-  private def corpusDocs(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir).select("doc_id", "text").filter(col("doc_id") % 5 =!= 4)
-
-  private def shardDocs(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select("doc_id", "text")
-    docs.filter(col("doc_id") % 5 === 4)
-      .unionByName(docs.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      .unionByName(docs.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-      .unionByName(docs.filter(col("doc_id") % 20 === 4)
-        .select((col("doc_id") + 3000000L).as("doc_id"), col("text")))
-  }
+  private def texts(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).select("doc_id", "text")
 
   /** Offline: persist the corpus's exact-hash state and LSH band-key set. */
   private[graft] def buildIndex(s: SparkSession, dir: String): String =
-    Artifacts.publish(s, indexPath(s, dir)) { tmp =>
-      val corpus = corpusDocs(s, dir)
-      assertRekeyDisjoint(corpus, "dedup")
-      corpus.groupBy(md5(col("text")).as("h"))
-        .agg(min(col("doc_id")).as("keeper"))
-        .write.mode("overwrite").parquet(s"$tmp/exact")
-      Dedup.minhashBandsOf(corpus)
-        .select("band", "bandkey").distinct()
-        .write.mode("overwrite").parquet(s"$tmp/bands")
-    }
+    buildGenIndex(s, texts(s, dir).filter(Intake.corpus(col("doc_id"))), indexPath(s, dir))
 
   /** Stage the day's intake shard as its own artifact (in production the
     * shard ARRIVES as files; staging it keeps q84's serving plan free of
     * any documents-table scan, which PlanSpec asserts). */
   private[graft] def stageShard(s: SparkSession, dir: String): String =
     Artifacts.publish(s, shardPath(s, dir)) { tmp =>
-      shardDocs(s, dir).write.mode("overwrite").parquet(s"$tmp/docs")
+      val all = texts(s, dir)
+      Intake.assertRekeyDisjoint(all, "dedup")
+      Intake.shard(all).write.mode("overwrite").parquet(s"$tmp/docs")
     }
 
   /** Online: verdict every shard doc against the index ONLY. */
@@ -222,7 +175,7 @@ object IncrementalDedup extends QueryModule {
   // id-free, so one policy covers the trio; q142 lands it on the
   // family whose verdict relation the ledger and specs already audit.
   private[graft] def tombPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/dedup-tomb-${dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/dedup-tomb-${Intake.dataFingerprint(s, dir)}"
 
   /** Publish the redaction tombstone under `outBase`: the request
     * priced against the index's own keeper roster (unknown ids drop —
@@ -232,34 +185,15 @@ object IncrementalDedup extends QueryModule {
     Artifacts.tombstone(s,
       s.read.parquet(s"$idxPath/exact").select(col("keeper").as("doc_id")), ids, outBase)
 
-  /** q84's serve with redaction: corpus_keeper nulls where the cited
-    * keeper is tombstoned; verdict/keep are untouched (the content
-    * stays blocked — that is the policy). */
-  private[graft] def verdictsRedacted(s: SparkSession, shard: DataFrame,
-                                      idxPath: String, tombPaths: Seq[String]): DataFrame = {
-    // distinct: overlapping tombstone generations may both name the
-    // same keeper, and a duplicated redact row would duplicate every
-    // verdict row citing it through the left join
-    val dead = tombPaths.map(t => s.read.parquet(s"$t/ids"))
-      .reduce(_ unionByName _)
-      .distinct()
-      .select(col("doc_id").as("corpus_keeper"), lit(true).as("redact"))
-    verdictsAgainst(s, shard, idxPath)
-      .join(broadcast(dead), Seq("corpus_keeper"), "left")
-      .select(col("doc_id"), col("verdict"), col("keep"),
-        when(col("redact").isNotNull, lit(null).cast("long"))
-          .otherwise(col("corpus_keeper")).as("corpus_keeper"))
-      .orderBy("doc_id")
-  }
-
   private def q142(s: SparkSession, dir: String): DataFrame = {
     val idx = buildIndex(s, dir)
     val shard = stageShard(s, dir)
     val t = takedown(s,
       s.read.parquet(s"$idx/exact").select(col("keeper").as("doc_id"))
-        .filter(col("doc_id") % 7 === 3),
+        .filter(Intake.requested(col("doc_id"))),
       idx, tombPath(s, dir))
-    verdictsRedacted(s, s.read.parquet(s"$shard/docs"), idx, Seq(t))
+    Intake.redacted(s, verdictsAgainst(s, s.read.parquet(s"$shard/docs"), idx),
+      "corpus_keeper", Seq(t))
   }
 
   // The oracle recomputes the COMPOSED (corpus ∪ shard) ground truth from
@@ -346,13 +280,14 @@ object IncrementalDedup extends QueryModule {
   // corpus is never read at serve time (generations + staged shard
   // only); windowing is O(live generations), retirement is free.
   private[graft] def genPath(s: SparkSession, dir: String, tag: String): String =
-    s"${Artifacts.root}/dedupe$tag-${dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/dedupe$tag-${Intake.dataFingerprint(s, dir)}"
 
-  /** One era's index generation from the given docs. */
+  /** One index generation from the given docs: the corpus for
+    * [[buildIndex]], one era for q162. */
   private[graft] def buildGenIndex(s: SparkSession, docs: DataFrame,
                                    path: String): String =
     Artifacts.publish(s, path) { tmp =>
-      assertRekeyDisjoint(docs, "dedup-gen")
+      Intake.assertRekeyDisjoint(docs, "dedup")
       docs.groupBy(md5(col("text")).as("h"))
         .agg(min(col("doc_id")).as("keeper"))
         .write.mode("overwrite").parquet(s"$tmp/exact")
@@ -362,13 +297,11 @@ object IncrementalDedup extends QueryModule {
     }
 
   private def q162(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select("doc_id", "text")
+    val id = col("doc_id")
     val g0 = buildGenIndex(s,
-      docs.filter(col("doc_id") % 5 =!= 4 && col("doc_id") % 2 === 0),
-      genPath(s, dir, "0"))
+      texts(s, dir).filter(Intake.corpus(id) && Intake.era(id, 0)), genPath(s, dir, "0"))
     val g1 = buildGenIndex(s,
-      docs.filter(col("doc_id") % 5 =!= 4 && col("doc_id") % 2 === 1),
-      genPath(s, dir, "1"))
+      texts(s, dir).filter(Intake.corpus(id) && Intake.era(id, 1)), genPath(s, dir, "1"))
     val shard = s.read.parquet(s"${stageShard(s, dir)}/docs")
     val win = verdictsWindow(s, shard, Seq(g1)) // era 0 retired
     // the audit bit: would the retired era have blocked it?

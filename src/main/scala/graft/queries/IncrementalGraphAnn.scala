@@ -129,7 +129,7 @@ object IncrementalGraphAnn extends QueryModule {
   /** Offline: the base generation — frozen pivots, base vectors/members,
     * and the base graph (probes × base members, the q184 rule). */
   private[graft] def buildIndex(s: SparkSession, dir: String): String =
-    buildGenIndex(s, dir, col("vec_id") % 5 =!= 4, indexPath(s, dir))
+    buildGenIndex(s, dir, Intake.corpus(col("vec_id")), indexPath(s, dir))
 
   /** One generation built over the vectors selected by `pred` — the
     * era-granular build q190's retention window composes; its pivots
@@ -158,7 +158,7 @@ object IncrementalGraphAnn extends QueryModule {
     * docs of the text families) and the query workload. */
   private[graft] def stageBatch(s: SparkSession, dir: String): String =
     Artifacts.publish(s, batchPath(s, dir)) { tmp =>
-      allVecs(s, dir).filter(col("vec_id") % 5 === 4)
+      allVecs(s, dir).filter(Intake.arrivals(col("vec_id")))
         .write.mode("overwrite").parquet(s"$tmp/vecs")
     }
   private[graft] def stageQueries(s: SparkSession, dir: String): String =
@@ -195,11 +195,6 @@ object IncrementalGraphAnn extends QueryModule {
       pivots.write.mode("overwrite").parquet(s"$tmp/pivots")
       bEdges.unpersist(); bAff.unpersist(); batch.unpersist()
     }
-
-  private def tombOf(s: SparkSession, tombPaths: Seq[String]): Option[DataFrame] =
-    if (tombPaths.isEmpty) None
-    else Some(tombPaths.map(t => s.read.parquet(s"$t/ids")).reduce(_ unionByName _)
-      .distinct())
 
   /** Anti-join `df` against the tombstone on each of `cols`, then
     * RE-SELECT the original column order: a USING join moves its key
@@ -257,7 +252,7 @@ object IncrementalGraphAnn extends QueryModule {
   private def windowScored(s: SparkSession, idxPaths: Seq[String], qPath: String,
                            tombPaths: Seq[String] = Nil,
                            batched: Option[Boolean] = None): DataFrame = {
-    val tomb = tombOf(s, tombPaths)
+    val tomb = Artifacts.tombstoned(s, tombPaths)
     val qvecs = s.read.parquet(s"$qPath/vecs")
       .select(col("vec_id").as("qid"), col("qa").as("qq"), col("n2").as("n2q"))
     // the measured Q-gate (Similarity.GraphDriverWalkMaxQ): catalog-sized
@@ -321,7 +316,7 @@ object IncrementalGraphAnn extends QueryModule {
     val gen = servingIndex(s, dir)
     val t = takedown(s,
       s.read.parquet(s"$gen/vectors").select(col("vec_id").as("doc_id"))
-        .filter(col("doc_id") % 7 === 3),
+        .filter(Intake.requested(col("doc_id"))),
       gen, tombBase(s, dir))
     serve(s, gen, stageQueries(s, dir), Seq(t))
   }
@@ -340,9 +335,9 @@ object IncrementalGraphAnn extends QueryModule {
   // better neighbor than this served row (the recall cost of the expiry,
   // priced per row from era-0's ARTIFACT vectors, never the raw table).
   private def q190(s: SparkSession, dir: String): DataFrame = {
-    val base = col("vec_id") % 5 =!= 4
-    buildGenIndex(s, dir, base && col("vec_id") % 2 === 0, eraPath(s, dir, "0"))
-    val g1 = buildGenIndex(s, dir, base && col("vec_id") % 2 === 1, eraPath(s, dir, "1"))
+    val id = col("vec_id")
+    buildGenIndex(s, dir, Intake.corpus(id) && Intake.era(id, 0), eraPath(s, dir, "0"))
+    val g1 = buildGenIndex(s, dir, Intake.corpus(id) && Intake.era(id, 1), eraPath(s, dir, "1"))
     val qP = stageQueries(s, dir)
     val served = windowScored(s, Seq(g1), qP) // era 0 retired
     val qvecs = s.read.parquet(s"$qP/vecs")
@@ -385,7 +380,7 @@ object IncrementalGraphAnn extends QueryModule {
   private[graft] def compact(s: SparkSession, idxPath: String,
                              tombPaths: Seq[String], outPath: String): String =
     Artifacts.publish(s, outPath) { tmp =>
-      val tomb = tombOf(s, tombPaths)
+      val tomb = Artifacts.tombstoned(s, tombPaths)
       val pivots = s.read.parquet(s"$idxPath/pivots")
       val survPiv = dropTomb(pivots, tomb, Seq("cell"))
       survPiv.write.mode("overwrite").parquet(s"$tmp/pivots")
@@ -423,7 +418,7 @@ object IncrementalGraphAnn extends QueryModule {
     val gen = servingIndex(s, dir)
     val t = takedown(s,
       s.read.parquet(s"$gen/vectors").select(col("vec_id").as("doc_id"))
-        .filter(col("doc_id") % 7 === 3),
+        .filter(Intake.requested(col("doc_id"))),
       gen, tombBase(s, dir))
     val comp = compact(s, gen, Seq(t), compPath(s, dir))
     serve(s, comp, stageQueries(s, dir))

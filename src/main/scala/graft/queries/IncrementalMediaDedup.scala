@@ -56,19 +56,18 @@ import graft.functions.Multimodal.MediaRow
   * same shard keeps nothing and re-ingest is a content no-op
   * (IncrementalMediaDedupSpec).
   *
-  * The staged shard simulates a real intake mix on the q84 doc_id
-  * split: genuinely new media (doc_id % 5 = 4, own content), re-crawls
-  * of corpus media (doc_id % 10 = 0, re-keyed +1e6 and +2e6 with the
-  * SOURCE doc's content — perceptual-exact corpus dups), and a
-  * double-submitted slice of the new media (doc_id % 20 = 4, re-keyed
-  * +3e6 — within-shard dups).
+  * The staged shard is [[Intake.shard]]'s mix over (doc_id, src):
+  * genuinely new media (own content), twice re-keyed re-crawls of
+  * corpus media carrying the SOURCE doc's content (`src` rides along —
+  * perceptual-exact corpus dups), and a double-submitted slice of the
+  * new media (within-shard dups).
   */
 object IncrementalMediaDedup extends QueryModule {
 
   private[graft] def indexPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/media-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/media-${Intake.dataFingerprint(s, dir)}"
   private[graft] def shardPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/media-shard-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/media-shard-${Intake.dataFingerprint(s, dir)}"
 
   /** Synthesize media rows for (doc_id, src) pairs: the row is keyed by
     * doc_id but its CONTENT (modality and payload) is the src doc's —
@@ -89,20 +88,9 @@ object IncrementalMediaDedup extends QueryModule {
     }
   }
 
-  private def corpusIds(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir).select(col("doc_id")).filter(col("doc_id") % 5 =!= 4)
-      .withColumn("src", col("doc_id"))
-
-  private def shardIds(s: SparkSession, dir: String): DataFrame = {
-    val ids = Tables.documents(s, dir).select(col("doc_id"))
-    ids.filter(col("doc_id") % 5 === 4).withColumn("src", col("doc_id"))
-      .unionByName(ids.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("doc_id").as("src")))
-      .unionByName(ids.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 2000000L).as("doc_id"), col("doc_id").as("src")))
-      .unionByName(ids.filter(col("doc_id") % 20 === 4)
-        .select((col("doc_id") + 3000000L).as("doc_id"), col("doc_id").as("src")))
-  }
+  /** (doc_id, src) with src = doc_id: every row's content is its own. */
+  private def ownIds(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).select(col("doc_id"), col("doc_id").as("src"))
 
   /** (doc_id, media_type, fhash) through the CHECKED decoders — the one
     * hash relation all index/serving stages share. Corrupt payloads
@@ -153,7 +141,7 @@ object IncrementalMediaDedup extends QueryModule {
     * corpus media. */
   private[graft] def buildIndex(s: SparkSession, dir: String): String =
     Artifacts.publish(s, indexPath(s, dir)) { tmp =>
-      val hashes = hashesOf(mediaFor(corpusIds(s, dir)))
+      val hashes = hashesOf(mediaFor(ownIds(s, dir).filter(Intake.corpus(col("doc_id")))))
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       try {
         hashes.groupBy("media_type", "fhash")
@@ -169,7 +157,9 @@ object IncrementalMediaDedup extends QueryModule {
     * scan, which PlanSpec asserts). */
   private[graft] def stageShard(s: SparkSession, dir: String): String =
     Artifacts.publish(s, shardPath(s, dir)) { tmp =>
-      mediaFor(shardIds(s, dir)).write.mode("overwrite").parquet(s"$tmp/media")
+      val ids = ownIds(s, dir)
+      Intake.assertRekeyDisjoint(ids, "media")
+      mediaFor(Intake.shard(ids)).write.mode("overwrite").parquet(s"$tmp/media")
     }
 
   /** Online: verdict every shard media item against the index ONLY. */
@@ -398,7 +388,7 @@ object IncrementalMediaDedup extends QueryModule {
   // = q101's composed three-codec ground truth with the CASE redaction
   // — a hash match proves only the citation column moves.
   private[graft] def tombPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/media-tomb-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/media-tomb-${Intake.dataFingerprint(s, dir)}"
 
   private def q143(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -406,16 +396,10 @@ object IncrementalMediaDedup extends QueryModule {
     val shard = stageShard(s, dir)
     val t = IncrementalDedup.takedown(s,
       s.read.parquet(s"$idx/exact").select(col("keeper").as("doc_id"))
-        .filter(col("doc_id") % 7 === 3),
+        .filter(Intake.requested(col("doc_id"))),
       idx, tombPath(s, dir))
-    val dead = s.read.parquet(s"$t/ids")
-      .select(col("doc_id").as("corpus_keeper"), lit(true).as("redact"))
-    verdictsAgainst(s, s.read.parquet(s"$shard/media").as[MediaRow], idx)
-      .join(broadcast(dead), Seq("corpus_keeper"), "left")
-      .select(col("doc_id"), col("media_type"), col("verdict"), col("keep"),
-        when(col("redact").isNotNull, lit(null).cast("long"))
-          .otherwise(col("corpus_keeper")).as("corpus_keeper"))
-      .orderBy("doc_id")
+    Intake.redacted(s, verdictsAgainst(s, s.read.parquet(s"$shard/media").as[MediaRow], idx),
+      "corpus_keeper", Seq(t))
   }
 
   // Each doc_id carries one media payload (one modality), so — as with

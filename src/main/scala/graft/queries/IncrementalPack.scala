@@ -65,9 +65,9 @@ object IncrementalPack extends QueryModule {
 
   private[graft] val SeqLen = 2048L
   private val PackBucket = 1000L
-  /** Shard doc ids are re-keyed above every corpus id so pack order
-    * (doc_id order) is arrival order: corpus first, then the day. */
-  private val ShardBase = IncrementalDedup.ShardBase
+  // shard doc ids are re-keyed above every corpus id so pack order
+  // (doc_id order) is arrival order: corpus first, then the day
+  import Intake.ShardBase
 
   // "pack3": the roster carries (start_off, n_tokens) alongside the
   // sequence span so the pad-rewrite (q145) can place a removed doc's
@@ -76,21 +76,20 @@ object IncrementalPack extends QueryModule {
   // artifact a completed marker would otherwise serve (fingerprints
   // key the DATA, not the layout; "pack2" added the roster itself).
   private[graft] def indexPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/pack3-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/pack3-${Intake.dataFingerprint(s, dir)}"
   private[graft] def shardPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/pack-shard-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/pack-shard-${Intake.dataFingerprint(s, dir)}"
 
   private def corpusDocs(s: SparkSession, dir: String): DataFrame =
     Tables.documentsWide(s, dir).select("doc_id", "text")
-      .filter(col("doc_id") % 5 =!= 4)
+      .filter(Intake.corpus(col("doc_id")))
 
   /** The day's arrivals: the held-out slice, re-keyed into the append
     * id range (a pack intake appends whatever upstream curation
     * admitted — dedup verdicts are q84/q102's business). */
   private def shardDocs(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir).select("doc_id", "text")
-      .filter(col("doc_id") % 5 === 4)
-      .select((col("doc_id") + ShardBase).as("doc_id"), col("text"))
+    Intake.rekey(Tables.documents(s, dir).select("doc_id", "text")
+      .filter(Intake.arrivals(col("doc_id"))), 1)
 
   /** Per-doc packed offsets of a (doc_id, text, base_off) relation —
     * (doc_id, ts, n_tokens, start_off) via [[withStartOff]]. The
@@ -191,7 +190,7 @@ object IncrementalPack extends QueryModule {
     * the one-row packing state. */
   private[graft] def buildPackState(s: SparkSession, docs: DataFrame, path: String): String =
     Artifacts.publish(s, path) { tmp =>
-      IncrementalDedup.assertRekeyDisjoint(docs, "pack")
+      Intake.assertRekeyDisjoint(docs, "pack")
       // offsets run twice (token rows + the narrow spans roster): the
       // prefix sum is cheap next to the explode it feeds, and only the
       // per-seq explode result is worth a disk persist
@@ -411,7 +410,7 @@ object IncrementalPack extends QueryModule {
     // fixture arithmetic), priced against the roster
     priceTakedown(s,
       s.read.parquet(s"$idx/docspans").select("doc_id")
-        .filter(col("doc_id") % 7 === 3),
+        .filter(Intake.requested(col("doc_id"))),
       idx)
   }
 
@@ -597,7 +596,7 @@ object IncrementalPack extends QueryModule {
     val idx = corpusIndex(s, dir)
     padRewrite(s,
       s.read.parquet(s"$idx/docspans").select("doc_id")
-        .filter(col("doc_id") % 7 === 3),
+        .filter(Intake.requested(col("doc_id"))),
       idx, corpusDocs(s, dir))
   }
 
@@ -717,7 +716,7 @@ object IncrementalPack extends QueryModule {
     val idx = corpusIndex(s, dir)
     repackFrom(s,
       s.read.parquet(s"$idx/docspans").select("doc_id")
-        .filter(col("doc_id") % 7 === 3),
+        .filter(Intake.requested(col("doc_id"))),
       idx, corpusDocs(s, dir))
   }
 
@@ -835,9 +834,9 @@ object IncrementalPack extends QueryModule {
     val idx = corpusIndex(s, dir)
     val gen1 = applyTakedown(s,
       s.read.parquet(s"$idx/docspans").select("doc_id")
-        .filter(col("doc_id") % 7 === 3),
+        .filter(Intake.requested(col("doc_id"))),
       idx, corpusDocs(s, dir),
-      s"${Artifacts.root}/pack3rm-${IncrementalDedup.dataFingerprint(s, dir)}")
+      s"${Artifacts.root}/pack3rm-${Intake.dataFingerprint(s, dir)}")
     s.read.parquet(s"$gen1/docspans")
       .select("doc_id", "first_seq", "last_seq", "start_off", "n_tokens")
       .orderBy("doc_id")
@@ -968,9 +967,9 @@ object IncrementalPack extends QueryModule {
     val idx = corpusIndex(s, dir)
     val gen1 = applyPadTakedown(s,
       s.read.parquet(s"$idx/docspans").select("doc_id")
-        .filter(col("doc_id") % 7 === 3),
+        .filter(Intake.requested(col("doc_id"))),
       idx, corpusDocs(s, dir),
-      s"${Artifacts.root}/pack3pad-${IncrementalDedup.dataFingerprint(s, dir)}")
+      s"${Artifacts.root}/pack3pad-${Intake.dataFingerprint(s, dir)}")
     serve(s, corpusDocs(s, dir).filter(lit(false)), gen1)
   }
 
@@ -1079,7 +1078,7 @@ object IncrementalPack extends QueryModule {
     val idx = corpusIndex(s, dir)
     branchGate(s,
       s.read.parquet(s"$idx/docspans").select("doc_id")
-        .filter(col("doc_id") % 7 === 3),
+        .filter(Intake.requested(col("doc_id"))),
       idx)
   }
 

@@ -49,27 +49,12 @@ import graft.{Artifacts, QueryModule, Tables}
 object IncrementalPrepare extends QueryModule {
 
   private[graft] def indexPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/prep-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/prep-${Intake.dataFingerprint(s, dir)}"
   private[graft] def shardPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/prep-shard-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/prep-shard-${Intake.dataFingerprint(s, dir)}"
 
-  private def corpusDocs(s: SparkSession, dir: String): DataFrame =
+  private def sourcedTexts(s: SparkSession, dir: String): DataFrame =
     Tables.documentsWide(s, dir).select("doc_id", "source", "text")
-      .filter(col("doc_id") % 5 =!= 4)
-
-  /** The q84 intake mix with source/text riding along: new pages,
-    * re-crawls of corpus pages (same source + text under new ids —
-    * exact corpus dups of the CLEANED text), a double-submitted slice. */
-  private def shardDocs(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documentsWide(s, dir).select("doc_id", "source", "text")
-    docs.filter(col("doc_id") % 5 === 4)
-      .unionByName(docs.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("source"), col("text")))
-      .unionByName(docs.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 2000000L).as("doc_id"), col("source"), col("text")))
-      .unionByName(docs.filter(col("doc_id") % 20 === 4)
-        .select((col("doc_id") + 3000000L).as("doc_id"), col("source"), col("text")))
-  }
 
   private def withToksAndHash(cleaned: DataFrame): DataFrame = cleaned
     .withColumn("n_clean_toks",
@@ -81,7 +66,8 @@ object IncrementalPrepare extends QueryModule {
     * dedup state. Segment df and stripping both run HERE, once. */
   private[graft] def buildIndex(s: SparkSession, dir: String): String =
     Artifacts.publish(s, indexPath(s, dir)) { tmp =>
-      val segs = Corpus.segmented(corpusDocs(s, dir))
+      val segs = Corpus.segmented(
+        sourcedTexts(s, dir).filter(Intake.corpus(col("doc_id"))))
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       try {
         val segdf = segs.groupBy("source", "skey")
@@ -94,9 +80,14 @@ object IncrementalPrepare extends QueryModule {
       } finally segs.unpersist()
     }
 
+  /** The q84 intake mix with source/text riding along: re-crawls keep
+    * source + text under new ids, so they are exact corpus dups of the
+    * CLEANED text. */
   private[graft] def stageShard(s: SparkSession, dir: String): String =
     Artifacts.publish(s, shardPath(s, dir)) { tmp =>
-      shardDocs(s, dir).write.mode("overwrite").parquet(s"$tmp/docs")
+      val all = sourcedTexts(s, dir)
+      Intake.assertRekeyDisjoint(all, "prepare")
+      Intake.shard(all).write.mode("overwrite").parquet(s"$tmp/docs")
     }
 
   /** Online: strip + verdict + place every shard doc against the
@@ -266,25 +257,17 @@ object IncrementalPrepare extends QueryModule {
   // q102's plan + ONE broadcast left join.
   // Oracle = q102's composed ground truth with the CASE redaction.
   private[graft] def tombPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/prep-tomb-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/prep-tomb-${Intake.dataFingerprint(s, dir)}"
 
   private def q144(s: SparkSession, dir: String): DataFrame = {
     val idx = buildIndex(s, dir)
     val shard = stageShard(s, dir)
     val t = IncrementalDedup.takedown(s,
       s.read.parquet(s"$idx/exact").select(col("keeper").as("doc_id"))
-        .filter(col("doc_id") % 7 === 3),
+        .filter(Intake.requested(col("doc_id"))),
       idx, tombPath(s, dir))
-    val dead = s.read.parquet(s"$t/ids")
-      .select(col("doc_id").as("corpus_keeper"), lit(true).as("redact"))
-    verdictsAgainst(s, s.read.parquet(s"$shard/docs"), idx)
-      .join(broadcast(dead), Seq("corpus_keeper"), "left")
-      .select(col("doc_id"), col("n_segs"), col("n_kept"), col("n_clean_toks"),
-        col("verdict"),
-        when(col("redact").isNotNull, lit(null).cast("long"))
-          .otherwise(col("corpus_keeper")).as("corpus_keeper"),
-        col("shard"), col("pos"))
-      .orderBy("doc_id")
+    Intake.redacted(s, verdictsAgainst(s, s.read.parquet(s"$shard/docs"), idx),
+      "corpus_keeper", Seq(t))
   }
 
   private val q144Sql = q102Sql.replace(

@@ -59,32 +59,31 @@ import graft.{Artifacts, QueryModule, Tables}
   */
 object LexIndex extends QueryModule {
 
-  private val ShardBase = IncrementalDedup.ShardBase
+  import Intake.ShardBase
 
   private[graft] def fullPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/lex-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/lex-${Intake.dataFingerprint(s, dir)}"
   private[graft] def gen0Path(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/lex0-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/lex0-${Intake.dataFingerprint(s, dir)}"
   private[graft] def gen1Path(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/lex1-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/lex1-${Intake.dataFingerprint(s, dir)}"
   private[graft] def tombPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/lext-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/lext-${Intake.dataFingerprint(s, dir)}"
   private[graft] def compactPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/lexc-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/lexc-${Intake.dataFingerprint(s, dir)}"
   private[graft] def fullTombPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/lexft-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/lexft-${Intake.dataFingerprint(s, dir)}"
 
   private def corpusDocs(s: SparkSession, dir: String): DataFrame =
     Tables.documentsWide(s, dir).select("doc_id", "text")
-      .filter(col("doc_id") % 5 =!= 4)
+      .filter(Intake.corpus(col("doc_id")))
 
   /** The day's arrivals, re-keyed above every corpus id (fresh ids by
     * construction — the additivity precondition; dedup against the
     * corpus is q84/q102's business upstream). */
   private def shardDocs(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir).select("doc_id", "text")
-      .filter(col("doc_id") % 5 === 4)
-      .select((col("doc_id") + ShardBase).as("doc_id"), col("text"))
+    Intake.rekey(Tables.documents(s, dir).select("doc_id", "text")
+      .filter(Intake.arrivals(col("doc_id"))), 1)
 
   /** Full inverted-index relation of a (doc_id, text) corpus:
     * (term, doc_id, tf, dl) for EVERY term — workload-independent, the
@@ -127,12 +126,12 @@ object LexIndex extends QueryModule {
     * the fail-loud re-key disjointness guard — the additivity proofs
     * assume shard ids land above every corpus id, so a corpus that
     * breaks the precondition must refuse to build, not serve wrong
-    * df/N ([[IncrementalDedup.assertRekeyDisjoint]]). Priced once, at
+    * df/N ([[Intake.assertRekeyDisjoint]]). Priced once, at
     * publish time. */
   private def buildGen0(s: SparkSession, dir: String): String =
     Artifacts.publish(s, gen0Path(s, dir)) { tmp =>
       val docs = corpusDocs(s, dir)
-      IncrementalDedup.assertRekeyDisjoint(docs, "lex")
+      Intake.assertRekeyDisjoint(docs, "lex")
       writeGeneration(tmp, docs)
     }
 
@@ -150,6 +149,13 @@ object LexIndex extends QueryModule {
                            tombPaths: Seq[String] = Nil): DataFrame =
     Corpus.bm25TopK(servedScored(s, genPaths, tombPaths))
 
+  /** `df` minus the rows whose doc_id a tombstone generation at
+    * `tombPaths` removes: one broadcast anti-join against
+    * [[Artifacts.tombstoned]]. */
+  private def untombed(s: SparkSession, df: DataFrame, tombPaths: Seq[String]): DataFrame =
+    Artifacts.tombstoned(s, tombPaths)
+      .fold(df)(dead => df.join(broadcast(dead), Seq("doc_id"), "left_anti"))
+
   /** The artifact-served BM25 scored relation (qid, doc_id, score,
     * n_hit) BEFORE the top-k cut — [[serve]]'s core, and the lexical
     * arm of the served hybrid fusion (Corpus q135). */
@@ -163,9 +169,7 @@ object LexIndex extends QueryModule {
     val live = genPaths.map { g =>
       s.read.parquet(s"$g/postings").filter(col("term").isin(workTerms: _*))
     }.reduce(_ unionByName _)
-    val tf = tombPaths.foldLeft(live) { (p, t) =>
-      p.join(broadcast(s.read.parquet(s"$t/ids")), Seq("doc_id"), "left_anti")
-    }
+    val tf = untombed(s, live, tombPaths)
     val stats = (genPaths ++ tombPaths).map(g => s.read.parquet(s"$g/stats"))
       .reduce(_ unionByName _)
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_toks")).as("n_toks"))
@@ -198,9 +202,7 @@ object LexIndex extends QueryModule {
       val live = genPaths.map(g => s.read.parquet(s"$g/doclens"))
         .reduce(_ unionByName _)
         .join(broadcast(ids), "doc_id")
-      val roster = tombPaths.foldLeft(live) { (r, t) =>
-        r.join(broadcast(s.read.parquet(s"$t/ids")), Seq("doc_id"), "left_anti")
-      }
+      val roster = untombed(s, live, tombPaths)
       roster.select("doc_id").write.mode("overwrite").parquet(s"$tmp/ids")
       roster.agg((-count(lit(1))).as("n_docs"), (-sum(col("dl"))).as("n_toks"))
         .write.mode("overwrite").parquet(s"$tmp/stats")
@@ -217,10 +219,7 @@ object LexIndex extends QueryModule {
   private[graft] def compact(s: SparkSession, genPaths: Seq[String],
                              tombPaths: Seq[String], outPath: String): String =
     Artifacts.publish(s, outPath) { tmp =>
-      val dead = tombPaths.map(t => s.read.parquet(s"$t/ids"))
-        .reduceOption(_ unionByName _)
-      def drop(df: DataFrame): DataFrame =
-        dead.fold(df)(d => df.join(broadcast(d), Seq("doc_id"), "left_anti"))
+      def drop(df: DataFrame): DataFrame = untombed(s, df, tombPaths)
       drop(genPaths.map(g => s.read.parquet(s"$g/postings")).reduce(_ unionByName _))
         .sort("term", "doc_id").write.mode("overwrite").parquet(s"$tmp/postings")
       drop(genPaths.map(g => s.read.parquet(s"$g/doclens")).reduce(_ unionByName _))
@@ -247,7 +246,7 @@ object LexIndex extends QueryModule {
     * so the fused serve (q138) masks one request on both artifacts. */
   private[graft] def takedownIds(s: SparkSession, g0: String): DataFrame =
     s.read.parquet(s"$g0/doclens").select("doc_id")
-      .filter(col("doc_id") % 7 === 3)
+      .filter(Intake.requested(col("doc_id")))
 
   /** The FULL-index takedown twin for the served hybrid (Corpus q138):
     * the shared removal request priced against q131's artifact. */
@@ -319,12 +318,12 @@ object LexIndex extends QueryModule {
   // free (a generation list edit). The corpus is never read at serve
   // time.
   private[graft] def lexEraPath(s: SparkSession, dir: String, tag: String): String =
-    s"${Artifacts.root}/lexr$tag-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/lexr$tag-${Intake.dataFingerprint(s, dir)}"
 
   private def q166(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documentsWide(s, dir).select("doc_id", "text")
-    val e0 = build(s, docs.filter(col("doc_id") % 2 === 0), lexEraPath(s, dir, "0"))
-    val e1 = build(s, docs.filter(col("doc_id") % 2 === 1), lexEraPath(s, dir, "1"))
+    val e0 = build(s, docs.filter(Intake.era(col("doc_id"), 0)), lexEraPath(s, dir, "0"))
+    val e1 = build(s, docs.filter(Intake.era(col("doc_id"), 1)), lexEraPath(s, dir, "1"))
     val win = serve(s, Seq(e1))
     val full = serve(s, Seq(e0, e1))
       .select(col("qid"), col("doc_id"), col("rank").as("rank_full"))
@@ -393,11 +392,11 @@ object LexIndex extends QueryModule {
     5 -> "slow fast")
 
   private[graft] def phrasePath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/phr-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/phr-${Intake.dataFingerprint(s, dir)}"
   private[graft] def phrGen0Path(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/phr0-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/phr0-${Intake.dataFingerprint(s, dir)}"
   private[graft] def phrGen1Path(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/phr1-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/phr1-${Intake.dataFingerprint(s, dir)}"
 
   /** The positional postings relation of a (doc_id, text) corpus:
     * (term, doc_id, pos) for every token occurrence. */
@@ -516,21 +515,17 @@ object LexIndex extends QueryModule {
   // indistinguishable from the logical union — q160's oracle IS
   // q159's SQL, the q134 move.
   private[graft] def phrTombPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/phrt-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/phrt-${Intake.dataFingerprint(s, dir)}"
   private[graft] def phrCompactPath(s: SparkSession, dir: String): String =
-    s"${Artifacts.root}/phrc-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/phrc-${Intake.dataFingerprint(s, dir)}"
 
   /** Serve phrases from generations minus tombstoned ids: the postings
-    * union anti-joins each tombstone's broadcast id list before the
-    * adjacency chains (state-free subtractivity — see q159's header). */
+    * union anti-joins the tombstoned ids before the adjacency chains (state-free subtractivity — see q159's header). */
   private[graft] def servePhrasesTomb(s: SparkSession, genPaths: Seq[String],
                                       tombPaths: Seq[String]): DataFrame = {
     val pos = genPaths.map(g => s.read.parquet(s"$g/positions"))
       .reduce(_ unionByName _)
-    val live = tombPaths.foldLeft(pos) { (p, t) =>
-      p.join(broadcast(s.read.parquet(s"$t/ids")), Seq("doc_id"), "left_anti")
-    }
-    phraseOccurrences(live)
+    phraseOccurrences(untombed(s, pos, tombPaths))
       .groupBy("qid", "doc_id").agg(count(lit(1)).as("n_occ"))
       .withColumn("rank", org.apache.spark.sql.functions.row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("qid")
@@ -555,12 +550,8 @@ object LexIndex extends QueryModule {
   private[graft] def phraseCompact(s: SparkSession, genPaths: Seq[String],
                                    tombPaths: Seq[String], outPath: String): String =
     Artifacts.publish(s, outPath) { tmp =>
-      val dead = tombPaths.map(t => s.read.parquet(s"$t/ids"))
-        .reduce(_ unionByName _)
-      genPaths.map(g => s.read.parquet(s"$g/positions"))
-        .reduce(_ unionByName _)
-        .join(broadcast(dead), Seq("doc_id"), "left_anti")
-        .sort("term", "doc_id", "pos")
+      val pos = genPaths.map(g => s.read.parquet(s"$g/positions")).reduce(_ unionByName _)
+      untombed(s, pos, tombPaths).sort("term", "doc_id", "pos")
         .write.mode("overwrite").parquet(s"$tmp/positions")
     }
 
@@ -569,7 +560,7 @@ object LexIndex extends QueryModule {
   private def phraseChain(s: SparkSession, dir: String): (String, String) = {
     val g0 = Artifacts.publish(s, phrGen0Path(s, dir)) { tmp =>
       val docs = corpusDocs(s, dir)
-      IncrementalDedup.assertRekeyDisjoint(docs, "phrase")
+      Intake.assertRekeyDisjoint(docs, "phrase")
       positionsOf(docs).sort("term", "doc_id", "pos")
         .write.mode("overwrite").parquet(s"$tmp/positions")
     }
@@ -581,7 +572,7 @@ object LexIndex extends QueryModule {
     // the standing removal-request arithmetic (q133/q136's fixture):
     // ids from the artifact's own postings roster, never the corpus
     val ids = s.read.parquet(s"$g0/positions").select("doc_id").distinct()
-      .filter(col("doc_id") % 7 === 3)
+      .filter(Intake.requested(col("doc_id")))
     val t = phraseTakedown(s, ids, phrTombPath(s, dir))
     servePhrasesTomb(s, Seq(g0, g1), Seq(t))
   }
@@ -589,7 +580,7 @@ object LexIndex extends QueryModule {
   private def q160(s: SparkSession, dir: String): DataFrame = {
     val (g0, g1) = phraseChain(s, dir)
     val ids = s.read.parquet(s"$g0/positions").select("doc_id").distinct()
-      .filter(col("doc_id") % 7 === 3)
+      .filter(Intake.requested(col("doc_id")))
     val t = phraseTakedown(s, ids, phrTombPath(s, dir))
     val c = phraseCompact(s, Seq(g0, g1), Seq(t), phrCompactPath(s, dir))
     servePhrases(s, Seq(c))
@@ -609,12 +600,12 @@ object LexIndex extends QueryModule {
   // docs vacated slots). Eras split by doc_id parity (era 0 = retired
   // evens, era 1 = live odds — the q162 fixture geometry).
   private[graft] def phrEraPath(s: SparkSession, dir: String, tag: String): String =
-    s"${Artifacts.root}/phrr$tag-${IncrementalDedup.dataFingerprint(s, dir)}"
+    s"${Artifacts.root}/phrr$tag-${Intake.dataFingerprint(s, dir)}"
 
   private def q169(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documentsWide(s, dir).select("doc_id", "text")
-    val e0 = buildPhraseGen(s, docs.filter(col("doc_id") % 2 === 0), phrEraPath(s, dir, "0"))
-    val e1 = buildPhraseGen(s, docs.filter(col("doc_id") % 2 === 1), phrEraPath(s, dir, "1"))
+    val e0 = buildPhraseGen(s, docs.filter(Intake.era(col("doc_id"), 0)), phrEraPath(s, dir, "0"))
+    val e1 = buildPhraseGen(s, docs.filter(Intake.era(col("doc_id"), 1)), phrEraPath(s, dir, "1"))
     val win = servePhrases(s, Seq(e1))
     val full = servePhrases(s, Seq(e0, e1))
       .select(col("qid"), col("doc_id"), col("rank").as("rank_full"))

@@ -2328,15 +2328,14 @@ object Similarity extends QueryModule {
     }
   }
 
-  /** Anti-join served codes against every tombstone generation's id
-    * list — the serve-time takedown mask. Broadcast: a removal request
-    * is tiny next to the corpus, so the mask costs one hash probe per
-    * code row and nothing corpus-sized moves. */
+  /** Anti-join served codes against the tombstoned ids — the
+    * serve-time takedown mask. Broadcast: a removal request is tiny
+    * next to the corpus, so the mask costs one hash probe per code row
+    * and nothing corpus-sized moves. */
   private def dropTombstoned(s: SparkSession, codes: DataFrame,
                              tombPaths: Seq[String]): DataFrame =
-    tombPaths.foldLeft(codes) { (c, t) =>
-      c.join(broadcast(s.read.parquet(s"$t/ids")), Seq("vec_id"), "left_anti")
-    }
+    Artifacts.tombstoned(s, tombPaths)
+      .fold(codes)(dead => codes.join(broadcast(dead), Seq("vec_id"), "left_anti"))
 
   /** Fold a generation chain ∪ tombstones into ONE artifact (codebook +
     * surviving codes with `gen` provenance): the q84 compaction pattern
@@ -2912,9 +2911,9 @@ object Similarity extends QueryModule {
         round(col("v").cast("double") * 10000.0).cast("long").as("q"))
     def cents(slice: DataFrame) = slice.groupBy("label", "pos")
       .agg(expr("sum(q) div count(1)").as("c"), count(lit(1)).as("n"))
-    val corp = cents(q.filter(col("vec_id") % 5 =!= 4))
+    val corp = cents(q.filter(Intake.corpus(col("vec_id"))))
       .select(col("label"), col("pos"), col("c").as("cc"), col("n").as("nc"))
-    val intake = cents(q.filter(col("vec_id") % 5 === 4))
+    val intake = cents(q.filter(Intake.arrivals(col("vec_id"))))
       .select(col("label"), col("pos"), col("c").as("ci"), col("n").as("ni"))
     corp.join(intake, Seq("label", "pos"))
       .groupBy("label")

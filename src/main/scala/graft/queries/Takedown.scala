@@ -7,11 +7,12 @@ import graft.QueryModule
 
 /** q140 — CROSS-FAMILY TAKEDOWN COMPLIANCE LEDGER: the governance
   * relation a removal request actually produces in a 2026 training-data
-  * pipeline. One bare-id request ({id % 7 = 3} — the fixture arithmetic
-  * every takedown operator shares) arrives from user-ops/legal knowing
-  * NOTHING about which artifacts hold the data; the ledger prices it
-  * against every persisted family's own roster and states, per family,
-  * the mechanism that honors it and the rows it touches:
+  * pipeline. One bare-id request ([[Intake.requested]]: the fixture
+  * arithmetic every takedown operator shares) arrives from
+  * user-ops/legal knowing NOTHING about which artifacts hold the data;
+  * the ledger prices it against every persisted family's own roster
+  * and states, per family, the mechanism that honors it and the rows
+  * it touches:
   *
   *  - `dedup / redact`       — q142's contract on the q84 index: the
   *    hash rows stay (removed content keeps BLOCKING — re-admission
@@ -73,42 +74,23 @@ object Takedown extends QueryModule {
       col("n_priced"), col("n_rows"))
 
   private def q140(s: SparkSession, dir: String): DataFrame = {
-    // dedup: the q84 artifact's keeper roster — the REDACTION contract
-    // (q142): the hash rows stay (content keeps blocking), the keeper
-    // citations null; a doc keeps at most one hash (one text each), so
-    // rows redacted = docs priced, structurally
-    val dedupIdx = IncrementalDedup.buildIndex(s, dir)
-    val exact = s.read.parquet(s"$dedupIdx/exact")
-    val dIds = exact.select(col("keeper").as("doc_id"))
-      .filter(col("doc_id") % 7 === 3)
-    val ded = one("dedup", "redact",
-      dIds.agg(count(lit(1)).as("n_priced")),
-      exact.join(broadcast(dIds.select(col("doc_id").as("keeper"))), "keeper")
-        .agg(count(lit(1)).as("n_rows")))
-
-    // media: the q101 artifact's keeper roster — q143's redaction
-    // contract (one media payload per doc ⇒ a keeper cites exactly its
-    // own hash group, so rows redacted = docs priced, structurally —
-    // the same arithmetic as the dedup row)
-    val mediaIdx = IncrementalMediaDedup.buildIndex(s, dir)
-    val mExact = s.read.parquet(s"$mediaIdx/exact")
-    val mIds = mExact.select(col("keeper").as("doc_id"))
-      .filter(col("doc_id") % 7 === 3)
-    val med = one("media", "redact",
-      mIds.agg(count(lit(1)).as("n_priced")),
-      mExact.join(broadcast(mIds.select(col("doc_id").as("keeper"))), "keeper")
-        .agg(count(lit(1)).as("n_rows")))
-
-    // prepare: the q102 artifact's cleaned-hash keeper roster — q144's
-    // redaction contract (one cleaned text per doc ⇒ same structure)
-    val prepIdx = IncrementalPrepare.buildIndex(s, dir)
-    val pExact = s.read.parquet(s"$prepIdx/exact")
-    val prIds = pExact.select(col("keeper").as("doc_id"))
-      .filter(col("doc_id") % 7 === 3)
-    val prep = one("prepare", "redact",
-      prIds.agg(count(lit(1)).as("n_priced")),
-      pExact.join(broadcast(prIds.select(col("doc_id").as("keeper"))), "keeper")
-        .agg(count(lit(1)).as("n_rows")))
+    // the hash-state trio (dedup q84, media q101, prepare q102): each
+    // artifact's `exact/` keeper roster under the REDACTION contract
+    // (q142/q143/q144): the hash rows stay (content keeps blocking),
+    // the keeper citations null; a doc keeps at most one hash (one
+    // text, one media payload, one cleaned text each), so rows
+    // redacted = docs priced, structurally
+    def redact(family: String, idx: String): DataFrame = {
+      val exact = s.read.parquet(s"$idx/exact")
+      val ids = exact.select(col("keeper").as("doc_id")).filter(Intake.requested(col("doc_id")))
+      one(family, "redact",
+        ids.agg(count(lit(1)).as("n_priced")),
+        exact.join(broadcast(ids.select(col("doc_id").as("keeper"))), "keeper")
+          .agg(count(lit(1)).as("n_rows")))
+    }
+    val ded = redact("dedup", IncrementalDedup.buildIndex(s, dir))
+    val med = redact("media", IncrementalMediaDedup.buildIndex(s, dir))
+    val prep = redact("prepare", IncrementalPrepare.buildIndex(s, dir))
 
     // contain: the q179 artifact's sets roster — q182's redaction
     // contract (the shingle state keeps blocking; the min-container
@@ -116,7 +98,7 @@ object Takedown extends QueryModule {
     // priced, structurally — the dedup-row arithmetic)
     val containIdx = IncrementalContain.buildIndex(s, dir)
     val cSets = s.read.parquet(s"$containIdx/sets")
-    val cIds = cSets.select("doc_id").filter(col("doc_id") % 7 === 3)
+    val cIds = cSets.select("doc_id").filter(Intake.requested(col("doc_id")))
     val con = one("contain", "redact",
       cIds.agg(count(lit(1)).as("n_priced")),
       cSets.join(broadcast(cIds), "doc_id").agg(count(lit(1)).as("n_rows")))
@@ -124,7 +106,7 @@ object Takedown extends QueryModule {
     // lexical: the q131 artifact's roster and postings
     val lexIdx = LexIndex.fullIndex(s, dir)
     val lexIds = s.read.parquet(s"$lexIdx/doclens")
-      .select("doc_id").filter(col("doc_id") % 7 === 3)
+      .select("doc_id").filter(Intake.requested(col("doc_id")))
     val lex = one("lexical", "tombstone",
       lexIds.agg(count(lit(1)).as("n_priced")),
       s.read.parquet(s"$lexIdx/postings").join(broadcast(lexIds), "doc_id")
@@ -132,7 +114,7 @@ object Takedown extends QueryModule {
 
     // vector: the q79 artifact's code roster
     val codes = s.read.parquet(s"${Similarity.buildPqIndex(s, dir)}/codes")
-    val vecIds = codes.select("vec_id").distinct().filter(col("vec_id") % 7 === 3)
+    val vecIds = codes.select("vec_id").distinct().filter(Intake.requested(col("vec_id")))
     val vec = one("vector", "tombstone",
       vecIds.agg(count(lit(1)).as("n_priced")),
       codes.join(broadcast(vecIds), "vec_id").agg(count(lit(1)).as("n_rows")))
@@ -143,16 +125,16 @@ object Takedown extends QueryModule {
     val gannIdx = IncrementalGraphAnn.servingIndex(s, dir)
     val gVecs = s.read.parquet(s"$gannIdx/vectors")
     val gann = one("graphann", "tombstone",
-      gVecs.select("vec_id").filter(col("vec_id") % 7 === 3)
+      gVecs.select("vec_id").filter(Intake.requested(col("vec_id")))
         .agg(count(lit(1)).as("n_priced")),
       s.read.parquet(s"$gannIdx/adj")
-        .filter(col("src") % 7 === 3 || col("dst") % 7 === 3)
+        .filter(Intake.requested(col("src")) || Intake.requested(col("dst")))
         .agg(count(lit(1)).as("n_rows")))
 
     // pack: the q139 audit's two rewrite sets from the docspans roster
     val packIdx = IncrementalPack.corpusIndex(s, dir)
     val spans = s.read.parquet(s"$packIdx/docspans")
-    val tombSpans = spans.filter(col("doc_id") % 7 === 3)
+    val tombSpans = spans.filter(Intake.requested(col("doc_id")))
     val packPriced = tombSpans.agg(count(lit(1)).as("n_priced"))
     val hitSeqs = tombSpans
       .select(explode(expr("sequence(first_seq, last_seq)")).as("seq_id"))

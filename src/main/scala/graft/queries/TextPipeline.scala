@@ -1688,11 +1688,11 @@ object TextPipeline extends QueryModule {
   // vocab-keyed join, a 5-row rollup.
   private def q152(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documentsWide(s, dir)
-    val frozen = docs.filter(col("doc_id") % 5 =!= 4)
+    val frozen = docs.filter(Intake.corpus(col("doc_id")))
       .select(explode(split(col("text"), " ")).as("tok"))
       .filter(length(col("tok")) > 0)
       .groupBy("tok").agg(count(lit(1)).as("base_freq"))
-    val intake = docs.filter(col("doc_id") % 5 === 4)
+    val intake = docs.filter(Intake.arrivals(col("doc_id")))
       .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
       .filter(length(col("tok")) > 0)
       .groupBy("lang", "tok").agg(count(lit(1)).as("cnt"))

@@ -92,6 +92,8 @@ object PlanCensus {
     }
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan census (generated by `graft.tools.PlanCensus`)\n\n")
+    sb.append(s"Host: ${Runtime.getRuntime.availableProcessors} cores; " +
+      s"`SPARK_GRAFT_CPUS=${graft.Harness.cpus}` (local[cpus], as many shuffle partitions).\n")
     sb.append(s"Data dir: `$dir`. Counts from the pre-AQE physical plan — broadcast\n")
     sb.append("subtrees AND tracked-cache build plans included (each distinct cached\n")
     sb.append("relation expanded once; before round 12 cached subtrees were silently\n")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.IncrementalDedup
+import graft.queries.{IncrementalDedup, Intake}
 
 /** The q84 contracts that the DuckDB oracle cannot see: artifact storage
   * (root knob, marker-last rebuild, fingerprint staleness) and the
@@ -39,11 +39,11 @@ class IncrementalDedupSpec extends SparkTestBase {
         src.listFiles().foreach(f => java.nio.file.Files.copy(f.toPath,
           new java.io.File(dst, f.getName).toPath))
       } else java.nio.file.Files.copy(src.toPath, dst.toPath)
-      val k1 = IncrementalDedup.dataFingerprint(spark, dataCopy)
-      assert(IncrementalDedup.dataFingerprint(spark, dataCopy) == k1, "fingerprint not stable")
+      val k1 = Intake.dataFingerprint(spark, dataCopy)
+      assert(Intake.dataFingerprint(spark, dataCopy) == k1, "fingerprint not stable")
       val touched = if (dst.isDirectory) dst.listFiles().head else dst
       assert(touched.setLastModified(touched.lastModified() + 60000))
-      assert(IncrementalDedup.dataFingerprint(spark, dataCopy) != k1,
+      assert(Intake.dataFingerprint(spark, dataCopy) != k1,
         "fingerprint blind to a regenerated corpus under the same path")
     }
   }
@@ -126,9 +126,11 @@ class IncrementalDedupSpec extends SparkTestBase {
       val overlap = spark.read.parquet(s"$t1/ids")
         .join(spark.read.parquet(s"$t2/ids"), "doc_id").count()
       assert(overlap > 0, "fixture generations do not overlap — test vacuous")
-      val both = IncrementalDedup.verdictsRedacted(spark, shard, idx, Seq(t1, t2))
+      val both = Intake.redacted(spark, IncrementalDedup.verdictsAgainst(spark, shard, idx),
+          "corpus_keeper", Seq(t1, t2))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getBoolean(2), r.get(3))).toSeq
-      val wide = IncrementalDedup.verdictsRedacted(spark, shard, idx, Seq(t2))
+      val wide = Intake.redacted(spark, IncrementalDedup.verdictsAgainst(spark, shard, idx),
+          "corpus_keeper", Seq(t2))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getBoolean(2), r.get(3))).toSeq
       assert(both.map(_._1).distinct.size == both.size,
         "overlapping tombstones duplicated verdict rows")

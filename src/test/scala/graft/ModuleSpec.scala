@@ -71,6 +71,22 @@ class ModuleSpec extends SparkTestBase {
       s"partition-less Window.orderBy outside PrefixSum: ${counts(partitionLess)}")
   }
 
+  test("the intake fixture exists once: split arithmetic and ShardBase only in Intake, ids/ reads only in Artifacts") {
+    // a family restating the corpus/arrival split, the takedown request
+    // or the re-key base forks the fixture every family shares; the
+    // oracle SQL spells the split with <>/= and is not matched here
+    def counts(re: String) = mainSources
+      .map { case (f, text) => f -> re.r.findAllMatchIn(text).size }
+      .filter(_._2 > 0).toMap
+    val intake = Map("graft/queries/Intake.scala" -> 1)
+    Seq("%\\s*5\\s*=!=\\s*4", "%\\s*5\\s*===\\s*4", "%\\s*7\\s*===\\s*3", "val\\s+ShardBase\\b")
+      .foreach(re => assert(counts(re) == intake, s"/$re/ outside Intake: ${counts(re)}"))
+    // the tombstone protocol's ids/: Artifacts writes (tombstone) and
+    // reads (tombstoned) it; LexIndex's two takedowns write their own
+    assert(counts("/ids\"") == Map("graft/Artifacts.scala" -> 2,
+      "graft/queries/LexIndex.scala" -> 2), s"ids/ outside Artifacts: ${counts("/ids\"")}")
+  }
+
   /** (path relative to src/main/scala, text) of every main source file. */
   private def mainSources: Seq[(String, String)] = {
     val root = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala")
