@@ -39,7 +39,7 @@ object RotFlow {
   case class RotResult(header: DataFrame, detail: DataFrame, errors: DataFrame)
 
   /** One run's design gates and complete grids, see [[prepare]]. */
-  private[flows] case class Design(xColRegex: String, yColRegex: String,
+  private[graft] case class Design(xColRegex: String, yColRegex: String,
                                     products: Seq[Any], complete: Seq[Any], grid: DataFrame)
 
   private[flows] val KeyCols = Seq("glassid", "product", "tstamp")
@@ -71,7 +71,7 @@ object RotFlow {
     * Spark aggregate, collected. A5: site_idx must cover exactly 1..n —
     * count and distinct-count alone would accept an offset (e.g. 0-based)
     * grid whose rows then silently drop at the position join. */
-  private[flows] def prepare(spark: SparkSession, raw: DataFrame, designValues: DataFrame,
+  private[graft] def prepare(spark: SparkSession, raw: DataFrame, designValues: DataFrame,
                              xColRegex: String = "^plfn_.*_x$", yColRegex: String = "^plfn_.*_y$"): Design = {
     val n = clean(raw, xColRegex, yColRegex)._2.size
     val dv = designValues.select("product", "site_idx", "dx", "dy")
@@ -97,7 +97,7 @@ object RotFlow {
     run(raw, prepare(spark, raw, designValues, xColRegex, yColRegex))
 
   /** The flow over one slice of the raw table `design` was prepared for. */
-  private[flows] def run(raw: DataFrame, design: Design): RotResult = {
+  private[graft] def run(raw: DataFrame, design: Design): RotResult = {
     import raw.sparkSession.implicits._
     val (clean, xCols, yCols) = RotFlow.clean(raw, design.xColRegex, design.yColRegex)
 

@@ -435,4 +435,149 @@ class RotFlowSpec extends SparkTestBase {
       assert(meltJoins.isEmpty, s"two melts joined on site_idx:\n$p")
     }
   }
+
+  // A complete grid whose design coordinate is null (N: dx of site 5,
+  // M: dy of site 2) cannot be fitted: the product's glasses dead-letter
+  // as a bad grid (−3) and every other row is unchanged.
+  test("edge fixtures: a null design coordinate flags the product's glasses -3") {
+    val spoiled = (p: String, site: Int, nullDx: Boolean) => (1 to nSites).map { i =>
+      val (dx, dy) = (((i - 1) / 4) * 100.0, ((i - 1) % 4) * 50.0)
+      (p, Option(i), Option(dx).filter(_ => !(nullDx && i == site)),
+        Option(dy).filter(_ => nullDx || i != site))
+    }
+    val dv = edgeDesign.unionByName(
+      (spoiled("N", 5, true) ++ spoiled("M", 2, false)).toDF("product", "site_idx", "dx", "dy"))
+    val raw = edgeRaw.unionByName(rawFrame(Seq(
+      glassRow("n1", "N", 0.2, 0.2, 20.0), glassRow("m1", "M", 0.2, 0.2, 20.0))))
+    val res = RotFlow.run(spark, raw, dv)
+    assert(res.header.select("glassid").as[String].collect().toSet == Set("ok1", "dup"))
+    assert(res.detail.select("glassid").distinct().as[String].collect().toSet == Set("ok1", "dup"))
+    assert(errorRows(res.errors) == Set(
+      (null, "B", -1, "missing measurement"),
+      ("npna", null, -1, "missing measurement"),
+      ("np", null, -2, "no design values"),
+      ("f1", "F", -3, "bad design grid"),
+      ("h1", "H", -3, "bad design grid"),
+      ("n1", "N", -3, "bad design grid"),
+      ("m1", "M", -3, "bad design grid")))
+  }
+
+  // Every fitted header must be exactly the local fit of its measurement:
+  // the copies' sites in row order, each paired with its product's grid
+  // point of the same site index. Random grids and noisy sites make any
+  // mispairing of a site with a grid point move the fit far beyond 1e-12.
+  test("flow fits equal RigidFit.fitOneChecked over each measurement's melted sites") {
+    import graft.analytics.RigidFit
+    val rnd = new scala.util.Random(11)
+    val grids = Seq("P", "Q").map(_ -> (1 to nSites).map(_ =>
+      (rnd.nextDouble() * 400 - 200, rnd.nextDouble() * 300 - 150))).toMap
+    def measured(p: String, sx: Double, sy: Double, theta: Double) = {
+      val t = math.tan(theta * 1e-6)
+      val g = grids(p)
+      (g.map { case (_, dy) => -sx + dy * t + rnd.nextGaussian() * 0.01 },
+       g.map { case (dx, _) => -sy - dx * t + rnd.nextGaussian() * 0.01 })
+    }
+    val singles = (1 to 24).map { k =>
+      val p = if (k % 3 == 0) "Q" else "P"
+      val (xs, ys) = measured(p, rnd.nextDouble() * 2 - 1, rnd.nextDouble() * 2 - 1,
+        rnd.nextDouble() * 400 - 200)
+      (f"r$k%02d", p, f"2024-01-01 00:$k%02d:00", xs, ys)
+    }
+    val (tx, ty) = measured("P", 0.4, -0.6, 80.0)
+    val (qx, qy) = measured("Q", 0.4, -0.6, 80.0)
+    val rows = singles ++ Seq(
+      singles(4),                                        // a duplicated row
+      ("two", "P", T0, tx, ty), ("two", "Q", T0, qx, qy)) // two products, one (glassid, tstamp)
+    val dv = rnd.shuffle(grids.toSeq.flatMap { case (p, g) =>
+      g.zipWithIndex.map { case ((dx, dy), i) => (p, i + 1, dx, dy) } })
+      .toDF("product", "site_idx", "dx", "dy").repartition(3)
+    val res = RotFlow.run(spark, rawFrame(rows), dv)
+
+    val expected = rows.groupBy(r => (r._1, r._2, r._3)).map { case (key, copies) =>
+      val g = grids(key._2)
+      key -> RigidFit.fitOneChecked(0L, copies.iterator.flatMap { case (_, _, _, xs, ys) =>
+        xs.indices.map(i => RigidFit.Site(0L, xs(i), ys(i), g(i)._1, g(i)._2)) })
+    }
+    val got = res.header.collect().map(r => (r.getString(r.fieldIndex("glassid")),
+      r.getString(r.fieldIndex("product")), r.getString(r.fieldIndex("tstamp"))) -> r).toMap
+    assert(got.keySet == expected.keySet)
+    expected.foreach { case (key, fit) =>
+      val r = got(key)
+      assert(fit.ok, s"$key: ${fit.error}")
+      r.getDouble(r.fieldIndex("shift_x")) shouldBe fit.shiftX +- 1e-12
+      r.getDouble(r.fieldIndex("shift_y")) shouldBe fit.shiftY +- 1e-12
+      r.getDouble(r.fieldIndex("theta_urad")) shouldBe fit.thetaUrad +- 1e-12
+      assert(r.getInt(r.fieldIndex("n_sites")) == fit.nSites, s"$key")
+    }
+    assert(errorRows(res.errors).isEmpty)
+  }
+
+  // Spark jobs on the full-flow fixture, read from parquet as a chunk
+  // reads its slice: the run's design gates, one ROT and one AVM chunk
+  // (the flow and its three writes) and one slice overwrite of an
+  // existing sink, each under its own job group.
+  test("job fence: design gates, one ROT chunk, one AVM chunk, one slice overwrite") {
+    import graft.flows.AvmFlow
+    import graft.incremental.SliceStore
+    import java.sql.Timestamp
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft_rot_jobs").toString
+    designValues.write.parquet(s"$dir/dv")
+    rawFrame(Seq(
+      glassRow("g1", "A", 0.5, -0.3, 120.0),
+      glassRow("g2", "A", -1.2, 0.8, -60.0),
+      glassRow("g3", "B", 0.1, 0.1, 10.0),
+      glassRow("g4", "C", 0.2, 0.2, 20.0),
+      glassRow("g5", "A", 0.0, 0.0, 0.0, na = true),
+      glassRow("g6", "E", 0.3, 0.3, 0.0))).write.parquet(s"$dir/raw")
+    val raw = spark.read.parquet(s"$dir/raw")
+    val dv = spark.read.parquet(s"$dir/dv")
+    def ts(s: String) = Timestamp.valueOf(s)
+    def day(d: Int) = Seq((1L, ts(s"2024-01-0$d 06:00:00")), (2L, ts(s"2024-01-0$d 18:00:00")))
+      .toDF("id", "tstamp")
+    val sink = s"$dir/sink"
+    SliceStore.overwriteSlice(spark, sink, day(1), "tstamp", ts("2024-01-01 00:00:00"),
+      ts("2024-01-02 00:00:00"))
+    def chunk(res: RotFlow.RotResult, out: String): Unit =
+      try Seq(res.header, res.detail, res.errors).zipWithIndex.foreach { case (df, i) =>
+        df.write.parquet(s"$out/$i") } finally Caches.release()
+
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("prepare", "design gates")
+      val design = RotFlow.prepare(spark, raw, dv)
+      sc.setJobGroup("rot", "one ROT chunk")
+      chunk(RotFlow.run(raw, design), s"$dir/rot")
+      sc.setJobGroup("avm", "one AVM chunk")
+      chunk(AvmFlow.run(raw), s"$dir/avm")
+      sc.setJobGroup("slice", "slice overwrite")
+      SliceStore.overwriteSlice(spark, sink, day(2), "tstamp", ts("2024-01-02 00:00:00"),
+        ts("2024-01-03 00:00:00"))
+      // listener events arrive asynchronously, in order: once a later
+      // job's start is seen, every earlier one has been counted
+      sc.setJobGroup("barrier", "listener barrier")
+      spark.range(1).count()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobs.contains("barrier") && System.currentTimeMillis() < deadline) Thread.sleep(10)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val seen = jobs.asScala.toSeq
+    assert(seen.contains("barrier"), "listener never saw the barrier job")
+    val perGroup = seen.groupBy(identity).map { case (g, js) => g -> js.size }
+    val of = (g: String) => perGroup.getOrElse(g, 0)
+    assert(of("prepare") == 1, s"design gates: $perGroup")
+    assert(of("rot") <= 6, s"ROT chunk: $perGroup")
+    assert(of("avm") <= 6, s"AVM chunk: $perGroup")
+    assert(of("slice") == 1, s"slice overwrite: $perGroup")
+    assert(spark.read.parquet(sink).count() == 4)
+  }
 }
