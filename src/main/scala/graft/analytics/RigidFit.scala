@@ -15,9 +15,11 @@ import org.apache.spark.sql.functions._
   * glass is solved in closed form by its normal equations — the same
   * minimizer the reference's L-BFGS-B converges to (its ±1e6 box never
   * binds), computed exactly instead of to a solver tolerance. FitSpec
-  * checks it against an L-BFGS-B solve of [[objective]]. Runs as
-  * `groupByKey.mapGroups`: each glass has ≤48 sites in the reference, so
-  * the per-group payload is tiny and skew-safe; at 100 TB this is one
+  * checks it against an L-BFGS-B solve of [[objective]]. Each glass has
+  * ≤48 sites in the reference, so a fit's payload is tiny and skew-safe:
+  * the flows (RotFlow) group each measurement's sites into one row and
+  * call [[fitOneChecked]] on it; [[fit]] runs the same fit as
+  * `groupByKey.mapGroups` over [[Site]] rows. At 100 TB either is one
   * shuffle on the glass key and embarrassingly parallel fitting. The
   * q19 oracle query (queries.Analytics.fitParams) solves the same
   * equations as a plain aggregation.
@@ -102,18 +104,10 @@ object RigidFit {
 
   /** Distributed fit: one row per glass. Input must have columns
     * (glass, x, y, dx, dy). Throws on a degenerate glass — callers that
-    * must survive bad input use [[fitChecked]] and route failures. */
+    * must survive bad input call [[fitOneChecked]] and route failures. */
   def fit(sites: Dataset[Site]): Dataset[Fit] = {
     import sites.sparkSession.implicits._
     sites.groupByKey(_.glass).mapGroups((g, it) => fitOne(g, it))
-  }
-
-  /** Distributed checked fit: one [[FitAttempt]] per glass; failures come
-    * back as rows (`ok = false`), not exceptions — one bad glass must
-    * dead-letter, not abort a 100 TB batch. */
-  def fitChecked(sites: Dataset[Site]): Dataset[FitAttempt] = {
-    import sites.sparkSession.implicits._
-    sites.groupByKey(_.glass).mapGroups((g, it) => fitOneChecked(g, it))
   }
 
   /** DataFrame adapter over the embeddings testdata layout used by the

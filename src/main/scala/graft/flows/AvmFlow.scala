@@ -1,7 +1,6 @@
 package graft.flows
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.incremental.Sinks
 
@@ -23,10 +22,11 @@ import graft.incremental.Sinks
   *
   * Scale: the same shape as RotFlow — regex column discovery (F5), the
   * slice scanned once per chunk into a cached relation tagged with the
-  * missing-value flag (P12) that all three outputs read, a one-pass melt,
-  * one groupBy on the glass identity for the header and one window on it
-  * for the residuals (≤ sites-per-glass rows per group, uniform). Nothing
-  * corpus-wide beyond the raw scan.
+  * missing-value flag (P12), and one shuffle on the measurement identity
+  * into a cached row per measurement that header and detail read. The VM
+  * estimate and every site's residual are row-local over that row's
+  * sites (≤ sites-per-glass values, uniform): no window, no second
+  * shuffle, nothing corpus-wide beyond the raw scan.
   */
 object AvmFlow {
 
@@ -36,28 +36,28 @@ object AvmFlow {
     val (clean, xCols, yCols) = RotFlow.clean(raw, xColRegex, yColRegex)
 
     // tag each measurement once — −1 missing (P12/K8), same dead letter
-    // as ROT, 1 ok — into a cache that header, detail and errors all read
+    // as ROT, 1 ok — into a cache that the model and errors read
     val tagged = graft.Caches.track(clean.withColumn("flag",
       when(Sinks.missing(xCols ++ yCols), Sinks.FlagMissing).otherwise(Sinks.FlagOk)))
 
-    // melt to long sites, keyed by the full (glassid, product, tstamp)
-    // identity exactly as in RotFlow
-    val sites = RotFlow.melt(tagged.filter(col("flag") === Sinks.FlagOk), xCols, yCols)
+    // zeroth-order VM model per measurement, keyed by the full (glassid,
+    // product, tstamp) identity exactly as in RotFlow: mean site offset
+    // per axis over the measurement's sites
+    def mean(axis: String) =
+      aggregate(col(s"sites.$axis"), lit(0.0), (acc, v) => acc + v) / size(col("sites"))
+    val model = graft.Caches.track(RotFlow.measurements(tagged, xCols, yCols)
+      .withColumn("vm_x", mean("x")).withColumn("vm_y", mean("y"))
+      .withColumn("n_sites", size(col("sites")).cast("long")))
 
-    // zeroth-order VM model per measurement: mean site offset per axis
-    val model = sites.groupBy(RotFlow.KeyCols.map(col): _*)
-      .agg(avg(col("x")).as("vm_x"), avg(col("y")).as("vm_y"),
-           count(lit(1)).as("n_sites"))
-
-    // residuals of every site against its glass's VM estimate, the same
-    // mean taken over a window on the identity: no join back to the model
-    val glass = Window.partitionBy(RotFlow.KeyCols.map(col): _*)
-    val detail = sites
+    // residuals of every site against its measurement's VM estimate
+    val detail = RotFlow.sitesOf(model, xCols.size, RotFlow.KeyCols.map(col) ++
+        Seq(col("vm_x"), col("vm_y")): _*)
       .select(col("glassid"), col("product"), col("tstamp"), col("site_idx"),
-        (col("x") - avg(col("x")).over(glass)).as("x_res"),
-        (col("y") - avg(col("y")).over(glass)).as("y_res"))
+        (col("x") - col("vm_x")).as("x_res"), (col("y") - col("vm_y")).as("y_res"))
 
-    val (h, d) = Sinks.headerDetail(model, detail, Seq("glassid", "tstamp"))
+    val (h, d) = Sinks.headerDetail(
+      model.select((RotFlow.KeyCols ++ Seq("vm_x", "vm_y", "n_sites")).map(col): _*),
+      detail, Seq("glassid", "tstamp"))
     RotFlow.RotResult(h, d, // same error schema as RotFlow's K8 sink
       tagged.filter(col("flag") === Sinks.FlagMissing)
         .select(col("glassid"), col("product"), col("flag"), lit("missing measurement").as("description")))

@@ -1,6 +1,7 @@
 package graft.flows
 
 import java.sql.Timestamp
+import scala.annotation.unused
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.incremental.{Intervals, Watermarks}
@@ -14,8 +15,9 @@ import graft.incremental.{Intervals, Watermarks}
   *
   * The reference re-reads each chunk from the DB inside Rscript
   * (SURVEY §3.2 "double-read"); here the slice is the same DataFrame fed
-  * straight to RotFlow, which scans it once per chunk; the design gates
-  * are computed once per run, on its first chunk.
+  * straight to RotFlow, which scans it once per chunk and shuffles it
+  * once on the measurement identity; the design gates are computed once
+  * per run, on its first chunk, on the driver from one collect.
   */
 object RotRunner {
 
@@ -26,13 +28,14 @@ object RotRunner {
     * @param raw       full wide raw table with a `tstamp` timestamp column
     * @param rotApp    watermark key of this analytics flow (e.g. "ROT_Transform")
     * @param upstream  watermark key of the replication flow it trails (e.g. "EDC_Import")
-    * @return chunks processed
+    * @return chunks processed; `spark` is unused but kept, as in
+    *         [[EtlMain.avm]]
     */
-  def run(spark: SparkSession, raw: DataFrame, designValues: DataFrame,
+  def run(@unused spark: SparkSession, raw: DataFrame, designValues: DataFrame,
           wm: Watermarks, toolid: String, rotApp: String, upstream: String,
           out: RotOutputs,
           stepSeconds: Long = 86400L, maxChunks: Int = 30): Int = {
-    lazy val design = RotFlow.prepare(spark, raw, designValues)
+    lazy val design = RotFlow.prepare(raw, designValues)
     runWindowed(raw, wm, toolid, rotApp, upstream, out,
       slice => RotFlow.run(slice, design), stepSeconds, maxChunks)
   }

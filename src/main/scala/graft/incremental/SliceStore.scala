@@ -2,8 +2,13 @@ package graft.incremental
 
 import java.sql.Timestamp
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Idempotent slice-overwrite writer (K4/K5 + D5, reference
   * dbs/nikon.py:117-145 DELETE-interval + nikon_ETL.py:349-370 re-insert):
@@ -28,6 +33,11 @@ import org.apache.spark.sql.functions.col
   * affected partitions only (dynamic partition overwrite /
   * `replaceWhere`), i.e. O(slice); the API below is the stable seam where
   * that swap happens, callers don't change.
+  *
+  * Jobs: an overwrite of an existing table is one Spark job, the write of
+  * keep ∪ new. The sink's schema comes from a data file's footer read on
+  * the driver (what Spark's inference reads, minus its one-task job); the
+  * swap and the heal are file-system calls.
   */
 object SliceStore {
 
@@ -63,10 +73,20 @@ object SliceStore {
     fs.exists(p)
   }
 
-  def read(spark: SparkSession, path: String): DataFrame = {
-    heal(fsOf(spark, new Path(path)), new Path(path))
-    spark.read.parquet(path)
-  }
+  /** The schema of the table at `target`, read on the driver from one
+    * data file's footer — the file Spark's own inference would read, in
+    * a one-task job. Every overwrite rewrites the whole table in one
+    * write, so its files share one schema. None for a table without a
+    * data file. */
+  private def footerSchema(spark: SparkSession, target: Path): Option[StructType] =
+    fsOf(spark, target).listStatus(target).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .sortBy(_.getName).headOption.map { file =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+        try ParquetFileFormat.readSchemaFromFooter(new Footer(file, reader.getFooter),
+          new ParquetToSparkSchemaConverter(SQLConf.get))
+        finally reader.close()
+      }
 
   /** Overwrite rows of `path` inside the interval with `slice`, preserving
     * all rows outside it. */
@@ -82,7 +102,8 @@ object SliceStore {
       slice.write.mode(SaveMode.Overwrite).parquet(path)
       return
     }
-    val keep = read(spark, path).filter(!conv.contains(col(tsCol), s, e))
+    val keep = footerSchema(spark, target).fold(spark.read)(spark.read.schema).parquet(path)
+      .filter(!conv.contains(col(tsCol), s, e))
     // Align source columns to the sink schema (T1) before the union.
     val aligned = SchemaReconcile.reconcile(slice, keep.columns.toSeq)
     keep.unionByName(aligned).write.mode(SaveMode.Overwrite).parquet(tmp.toString)

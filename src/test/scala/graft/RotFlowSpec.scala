@@ -552,7 +552,7 @@ class RotFlowSpec extends SparkTestBase {
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup("prepare", "design gates")
-      val design = RotFlow.prepare(spark, raw, dv)
+      val design = RotFlow.prepare(raw, dv)
       sc.setJobGroup("rot", "one ROT chunk")
       chunk(RotFlow.run(raw, design), s"$dir/rot")
       sc.setJobGroup("avm", "one AVM chunk")
@@ -573,6 +573,7 @@ class RotFlowSpec extends SparkTestBase {
     val seen = jobs.asScala.toSeq
     assert(seen.contains("barrier"), "listener never saw the barrier job")
     val perGroup = seen.groupBy(identity).map { case (g, js) => g -> js.size }
+    info(s"jobs per group: $perGroup")
     val of = (g: String) => perGroup.getOrElse(g, 0)
     assert(of("prepare") == 1, s"design gates: $perGroup")
     assert(of("rot") <= 6, s"ROT chunk: $perGroup")
