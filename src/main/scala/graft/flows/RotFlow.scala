@@ -141,8 +141,8 @@ object RotFlow {
         .when(!col("product").isin(design.complete: _*), Sinks.FlagBadGrid)
         .otherwise(Sinks.FlagOk)))
 
-    // 5. one row per measurement, its product's grid alongside (R3, J2 as
-    // a literal lookup). 6. the rigid-body fit of each measurement (R6),
+    // 5. one row per measurement, paired with its product's grid by a
+    // literal lookup (R3, J2). 6. the rigid-body fit of each measurement (R6),
     // cached with it: grouped on the full (glassid, product, tstamp)
     // identity, each product fits on its own as in the reference's
     // per-product loop (D6); rot_id stays keyed on (glassid, tstamp). The
@@ -150,14 +150,14 @@ object RotFlow {
     // (identical design points, non-finite cell) routes to flag −4
     // (reference R/tlcd_nikonrot.R:263-272) instead of poisoning the
     // header with garbage params or aborting the batch.
+    val grid = element_at(design.grids, col("product"))
     val fitted = graft.Caches.track(measurements(tagged, xCols, yCols)
-      .withColumn("grid", element_at(design.grids, col("product")))
-      .withColumn("fit", fit(col("sites.x"), col("sites.y"), col("grid.dx"), col("grid.dy"))))
+      .withColumn("fit", fit(col("sites.x"), col("sites.y"), grid("dx"), grid("dy"))))
     val fits = fitted.filter(col("fit.ok"))
 
     // 7. apply the transform (R7): x' = x + sx − dy·tan(θ·1e-6)
-    val detailLong = sitesOf(fits, n, KeyCols.map(col) ++ Seq(col("grid"), col("fit")): _*)
-      .withColumn("d", col("grid")(col("site_idx") - 1))
+    val detailLong = sitesOf(fits, n, KeyCols.map(col) :+ col("fit"): _*)
+      .withColumn("d", grid(col("site_idx") - 1))
       .withColumn("t", tan(col("fit.thetaUrad") * 1e-6))
       .withColumn("x_rs", col("x") + col("fit.shiftX") - col("d.dy") * col("t"))
       .withColumn("y_rs", col("y") + col("fit.shiftY") + col("d.dx") * col("t"))
